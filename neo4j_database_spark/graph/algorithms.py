@@ -8,9 +8,17 @@ truncating the lineage each iteration (without it the plan tree grows
 linearly in iterations and Catalyst analysis time explodes).
 
 Scale notes:
-- Each superstep is one shuffle (edges ⋈ labels on src, aggregate on
-  dst). Pre-partitioning edges and labels on the join key makes
-  successive supersteps reuse the partitioning (exchange reuse).
+- A superstep is one logical plan — node-sized state ⋈ static edge
+  frame → combine (Pregelix, VLDB 2014) — and its physical strategy is
+  chosen in one place, ``_Layout``, never per algorithm. CC, PageRank,
+  PPR, HITS, LPA, SSSP, BFS, k-core, closeness and betweenness each
+  build one ``_Layout`` from the exact node count they already take; it
+  compares that count with ``BROADCAST_NODE_LIMIT`` (read at call time,
+  so tests force large mode by setting the module global to 0) and
+  owns the static-frame layout, the state-side join hint and the
+  checkpoint cadence. Small mode broadcasts the state, so the static
+  frame never moves; large mode hash-partitions the static frames on
+  their join key once and each superstep shuffles only the state.
 - Convergence checks are cheap aggregates (count of changed labels),
   evaluated once per superstep — not per row.
 """
@@ -19,7 +27,7 @@ from __future__ import annotations
 
 import threading
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 
 from neo4j_database_spark.session import shuffle_partitions
@@ -43,15 +51,13 @@ def degree_centrality(g: GraphModel, types: tuple[str, ...] | None = None) -> Da
 
 
 # Node-count threshold for broadcasting the per-node state frame in
-# iterative supersteps. Below it, broadcasting ranks/labels avoids
-# shuffling anything per iteration (the edge table never moves and the
-# aggregate combines map-side). Above it, a broadcast would ship an
-# executor-memory-sized frame to every executor each superstep — the
-# classic driver/executor OOM at billion-node scale — so the loop
-# switches to co-partitioned joins: the static edge table is hash
-# partitioned on the join key ONCE (localCheckpoint preserves the
-# partitioning), and each superstep shuffles only the node-sized state
-# frame. ~10M ids × ~16B/row ≈ 160 MB broadcast — a sane ceiling.
+# iterative supersteps (read by _Layout at call time). Below it,
+# broadcasting ranks/labels avoids shuffling anything per iteration
+# (the edge table never moves and the aggregate combines map-side).
+# Above it, a broadcast would ship an executor-memory-sized frame to
+# every executor each superstep — the classic driver/executor OOM at
+# billion-node scale — so the loop switches to co-partitioned joins.
+# ~10M ids × ~16B/row ≈ 160 MB broadcast — a sane ceiling.
 BROADCAST_NODE_LIMIT = 10_000_000
 
 # Entry-count threshold for broadcasting ADJACENCY frames (node →
@@ -142,11 +148,113 @@ def _copartition(df: DataFrame, key: str) -> DataFrame:
             spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
+class _Layout:
+    """Physical layout of one iterative algorithm's supersteps.
+
+    Built once per call from the exact node count the algorithm already
+    takes; the one comparison with ``BROADCAST_NODE_LIMIT`` lives here.
+    It owns the four decisions every superstep loop makes:
+
+    - mode: ``small`` when the node count is at most the limit;
+    - static frames (``static``): small mode checkpoints them, width-
+      pinned by default; large mode hash-partitions them on their join
+      key once (``_copartition``), so each superstep shuffles only the
+      node-sized state;
+    - state side (``side``): broadcast in small mode, ``shuffle_hash``
+      in large mode;
+    - checkpoint cadence (``due``/``cut``).
+    """
+
+    def __init__(self, n_nodes: int) -> None:
+        self.small = n_nodes <= BROADCAST_NODE_LIMIT
+
+    @classmethod
+    def over_nodes(cls, nodes: DataFrame) -> tuple["_Layout", DataFrame, int]:
+        """Checkpoint and count an id-keyed node frame, choose the layout
+        from that count, and return (layout, node frame, count).
+
+        Large mode also keys the node frame on ``id``: a checkpointed
+        frame keeps its SOURCE partitioning (e.g. hundreds of scan
+        partitions), and without the key every superstep re-shuffles the
+        full node frame from that layout (measured: the 16x scale probe
+        spent each superstep in replicated-scan-sized shuffles).
+        """
+        nodes = nodes.localCheckpoint()
+        n = nodes.count()
+        layout = cls(n)
+        return layout, layout.static(nodes, "id", reuse=nodes), n
+
+    def static(
+        self,
+        df: DataFrame,
+        key: str,
+        pin: bool = True,
+        reuse: DataFrame | None = None,
+    ) -> DataFrame:
+        """Materialize a frame every superstep joins on ``key``.
+
+        Large mode: ``_copartition(df, key)``. Small mode: ``reuse`` if
+        given (an already-materialized copy: the key does not matter
+        when the state side broadcasts), else a ``localCheckpoint``.
+
+        ``pin`` hash-repartitions to the session shuffle width first: a
+        plain checkpoint inherits the SCAN partitioning (8 file splits
+        at sf0.1), and every superstep then runs at that width — the
+        defect fixed for pagerank in r09 (dropping the pin made the
+        10-superstep loop 2.6× slower) and again for HITS in r10
+        (pinned 6.22 vs unpinned 6.86 s min at sf0.1). The pin is one
+        extra exchange of the frame, so it pays back only over enough
+        supersteps: CC, which converges in ~3 supersteps on clique-shaped
+        graphs, measured pinned 4.24 s vs unpinned 3.48 s min at sf0.1, so
+        CC passes ``pin=False``. LPA does too (5 supersteps; at sf0.01
+        on 4 cores unpinned used 1.24 vs pinned 1.43 s median executor
+        CPU), and the BFS/SSSP/k-core/closeness/betweenness loops keep
+        the unpinned layout they always had. (A/Bs: scripts/
+        pagerank_ab_probe.py and scripts/hits_pin_r10.py, last present in
+        commit 292bfdf.)
+        """
+        if not self.small:
+            return _copartition(df, key)
+        if reuse is not None:
+            return reuse
+        if pin:
+            df = df.repartition(shuffle_partitions(df.sparkSession), key)
+        return df.localCheckpoint()
+
+    def side(self, df: DataFrame) -> DataFrame:
+        """The node-sized state side of a superstep join.
+
+        Large mode hints ``shuffle_hash``: without it Catalyst picks
+        sort-merge and re-SORTS the static edge table every superstep
+        (the dominant superstep cost); hash-building the state side and
+        streaming edges is sort-free and the build fits per partition
+        (n/P rows) at any scale.
+        """
+        return F.broadcast(df) if self.small else df.hint("shuffle_hash")
+
+    @staticmethod
+    def due(it: int, n_iter: int) -> bool:
+        """Whether superstep ``it`` of ``n_iter`` cuts the lineage.
+
+        The cut must happen or Catalyst analysis time grows with the
+        plan tree, but each cut materializes a job: every OTHER superstep
+        (and the last) is the measured sweet spot for pagerank (~7% over
+        every superstep; every 5th is ~35% slower from re-analysis of
+        the doubled tree). Loops that count their state every superstep
+        (CC, BFS, betweenness) or read it twice per update (LPA)
+        checkpoint every superstep instead.
+        """
+        return it % 2 == 1 or it == n_iter - 1
+
+    def cut(self, df: DataFrame, it: int, n_iter: int) -> DataFrame:
+        """``df`` checkpointed when superstep ``it`` is ``due``."""
+        return df.localCheckpoint() if self.due(it, n_iter) else df
+
+
 def connected_components(
     g: GraphModel,
     types: tuple[str, ...] = ("FRIEND_OF",),
     max_iter: int = 20,
-    broadcast_node_limit: int = BROADCAST_NODE_LIMIT,
 ) -> DataFrame:
     """Min-label propagation connected components.
 
@@ -156,39 +264,17 @@ def connected_components(
     converges in 2 supersteps; the max_iter bound is the safety rail for
     path-shaped graphs (diameter supersteps needed).
 
-    Per-superstep shuffle: zero in broadcast mode; one node-sized
-    exchange (the labels frame) in co-partitioned mode — the edge table
-    never moves in either mode.
-
     Returns (component, size) — component = min person id in the
     component, the conventional canonical label.
     """
-    labels = g.persons.select("id", F.col("id").alias("comp")).localCheckpoint()
-    small = labels.count() <= broadcast_node_limit
-    if not small:
-        # co-partition the label frame on the join key too: a checkpointed
-        # frame keeps its SOURCE partitioning (e.g. hundreds of scan
-        # partitions), and without this every superstep re-shuffles the
-        # full node frame from that layout (measured: the 16x scale probe
-        # spent each superstep in replicated-scan-sized shuffles). With
-        # labels and edges both hash-partitioned on the key, the join and
-        # the post-aggregate merge are exchange-free.
-        labels = _copartition(labels, "id")
-    edges = g.sym_edges(types).select("src", "dst")
-    # NOTE (r09, measured): unlike pagerank's edges_deg, the static
-    # edge frame here is NOT width-pinned in small mode. CC converges
-    # in ~3 supersteps on clique-shaped graphs, so the one-time
-    # edge-frame exchange a width pin costs never amortizes (A/B via
-    # pagerank_ab_probe: pinned 4.24 s min vs unpinned 3.48 s min at
-    # sf0.1) — pagerank's 10 fixed supersteps are what pay it back.
-    edges = (
-        edges.localCheckpoint() if small else _copartition(edges, "src")
+    layout, labels, _ = _Layout.over_nodes(
+        g.persons.select("id", F.col("id").alias("comp"))
+    )
+    edges = layout.static(
+        g.sym_edges(types).select("src", "dst"), "src", pin=False
     )
 
     for _ in range(max_iter):
-        label_side = (
-            F.broadcast(labels) if small else labels.hint("shuffle_hash")
-        )  # sort-free superstep join (see pagerank)
         # ONE aggregate per superstep (r09 optimization round): the
         # neighbor-min and the merge with the node's own label fuse
         # into a single min over (self-label ∪ neighbor-label) rows —
@@ -205,7 +291,9 @@ def connected_components(
         # here because labels = ALL persons and edges come from the
         # store's person↔person rules; guard with an inner join back
         # to labels' ids if edges can ever leave that set.
-        contrib = edges.join(label_side, edges.src == labels.id).select(
+        contrib = edges.join(
+            layout.side(labels), edges.src == labels.id
+        ).select(
             F.col("dst").alias("id"),
             F.col("comp").alias("cand"),
             F.lit(None).cast(dict(labels.dtypes)["comp"]).alias("own"),
@@ -250,12 +338,74 @@ def connected_components(
 CONTRIB_SCALE = 1.0e9
 
 
+def _nano(x: Column) -> Column:
+    """``x`` quantized to LONG nano-units (see CONTRIB_SCALE)."""
+    return F.round(x * CONTRIB_SCALE).cast("long")
+
+
+def _nano_sum(c: Column | str) -> Column:
+    """Exact sum of nano-unit column ``c``, back as a double."""
+    return F.sum(c).cast("double") / F.lit(CONTRIB_SCALE)
+
+
+def _rank_setup(
+    g: GraphModel, types: tuple[str, ...] | None
+) -> tuple[_Layout, DataFrame, int, DataFrame, DataFrame]:
+    """Static frames shared by ``pagerank`` and ``personalized_pagerank``:
+    (layout, nodes, n, edges_n, out_deg).
+
+    ``edges_n`` is the NARROW (src, dst) edge frame, materialized once
+    and width-pinned (r10 optimization round, guide §2.3 "shuffle fewer
+    bytes"): the r09 shape materialized (src, dst, deg) and divided
+    rank/deg per EDGE row, but the division and its quantization depend
+    only on src, so they belong node-side (``_inflow``) and the loop's
+    static frame drops a third of its bytes. Store-backed interleaved
+    A/B at sf0.1 (scripts/pagerank_variants_r10.py, last present in
+    commit 292bfdf): 15.39 s → 7.76 s min, and the narrow frame is far
+    more stable under memory pressure (worst run 12.6 s vs 52.9 s).
+
+    ``out_deg`` comes from the MATERIALIZED edge frame (r10): the
+    parquet store is scanned once per query, and the src-partitioned
+    input keeps the aggregate exchange node-sized. Checkpointing it
+    makes the dangling count a materialized-RDD count (guide §1.2).
+    """
+    layout, nodes, n = _Layout.over_nodes(g.persons.select("id"))
+    edges_n = layout.static(g.sym_edges(types).select("src", "dst"), "src")
+    out_deg = layout.static(
+        edges_n.groupBy("src").agg(F.count(F.lit(1)).alias("deg")),
+        "src",
+        pin=False,
+    )
+    return layout, nodes, n, edges_n, out_deg
+
+
+def _inflow(layout: _Layout, edges_n: DataFrame, ranks: DataFrame,
+            out_deg: DataFrame) -> GroupedData:
+    """One rank superstep's message and combine: per-destination groups
+    of the quantized contributions ``c`` that ``ranks`` sends along
+    ``edges_n``; the caller aggregates them with ``_nano_sum("c")``.
+
+    The per-src contribution round(rank/deg·SCALE) is constant across a
+    node's out-edges, so it is computed NODE-side (r10): the division
+    and rounding run O(nodes) times per superstep instead of O(edges),
+    and the edge join ships one long. Bit-identical to the per-edge
+    formulation by construction (same double division, same round).
+    """
+    contrib = ranks.join(out_deg, ranks.id == out_deg.src).select(
+        F.col("id"), _nano(F.col("rank") / F.col("deg")).alias("c")
+    )
+    return (
+        edges_n.join(layout.side(contrib), edges_n.src == contrib["id"])
+        .select(F.col("dst").alias("id"), "c")
+        .groupBy("id")
+    )
+
+
 def pagerank(
     g: GraphModel,
     types: tuple[str, ...] | None = None,
     max_iter: int = 10,
     damping: float = 0.85,
-    broadcast_node_limit: int = BROADCAST_NODE_LIMIT,
     tol: float | None = None,
 ) -> DataFrame:
     """PageRank over the undirected view (each stored edge contributes
@@ -276,54 +426,7 @@ def pagerank(
     graphs pass e.g. tol=1e-7/n to skip the tail iterations (the
     dominant bench cost once the graph has stabilized).
     """
-    # Static structures materialize once: the narrow (src, dst) edge
-    # frame and the out-degree frame; dangling ids fixed.
-    nodes = g.persons.select("id").localCheckpoint()
-    n = nodes.count()
-    small = n <= broadcast_node_limit
-    if not small:
-        # pin the node frame's partitioning to the join key (see the
-        # connected_components comment): a checkpointed frame keeps its
-        # SOURCE partitioning, so without this the rank-refresh join
-        # re-shuffles the node frame from its scan layout every superstep.
-        nodes = _copartition(nodes, "id")
-    edges = g.sym_edges(types).select("src", "dst")
-    # Materialize the NARROW edge frame once — (src, dst) only, two
-    # longs per row (r10 optimization round, guide §2.3 "shuffle fewer
-    # bytes"). The r09 shape materialized (src, dst, deg) and divided
-    # rank/deg per EDGE row; the division and its quantization depend
-    # only on src, so they belong node-side (O(nodes) work, see the
-    # contrib frame in the loop) and the loop's static frame drops a
-    # third of its bytes. Store-backed interleaved A/B at sf0.1
-    # (scripts/pagerank_variants_r10.py): 15.39 s → 7.76 s min, and
-    # the narrow frame is far more stable under memory pressure
-    # (worst run 12.6 s vs 52.9 s).
-    #
-    # Small mode still hash-repartitions the checkpointed frame ONCE:
-    # a naive checkpoint would inherit the SCAN partitioning
-    # (file-split count — 8 splits at sf0.1), and every superstep's
-    # join+aggregate then runs at that width for the whole loop.
-    # Measured (pagerank_ab_probe, first r09 attempt): dropping this
-    # exchange made the 10-superstep loop 2.6× SLOWER. One sort-free
-    # exchange of the edge frame is the cheapest way to keep
-    # cluster-width layout for all supersteps.
-    edges_n = (
-        edges.repartition(
-            shuffle_partitions(edges.sparkSession), "src"
-        ).localCheckpoint()
-        if small
-        else _copartition(edges, "src")
-    )
-    # Degree from the MATERIALIZED frame (r10): the parquet store is
-    # scanned once per query — the r09 code scanned it a second time
-    # for the degree aggregate — and the src-partitioned input keeps
-    # the aggregate exchange node-sized. Checkpointing out_deg keeps
-    # the r09 wins: the dangling count is a materialized-RDD count and
-    # the active frame a zero-job projection (guide §1.2).
-    out_deg = edges_n.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    out_deg = (
-        out_deg.localCheckpoint() if small else _copartition(out_deg, "src")
-    )
+    layout, nodes, n, edges_n, out_deg = _rank_setup(g, types)
     # Dangling (degree-0) nodes receive no inflow, so every dangling node
     # carries the SAME rank each iteration and the leaked dangling mass
     # follows a scalar recurrence — computed on the driver, costing zero
@@ -350,44 +453,13 @@ def pagerank(
 
     for it in range(max_iter):
         teleport_plus_dangling = (1.0 - damping) / n + damping * dangling_mass / n
-        # Per-src quantized contribution computed NODE-side (r10): the
-        # value round(rank/deg·SCALE) is constant across a node's
-        # out-edges, so the division + rounding run O(nodes) times per
-        # superstep instead of O(edges), and the edge join ships one
-        # long. Bit-identical to the per-edge formulation by
-        # construction (same double division, same round, per src).
-        contrib = ranks.join(out_deg, ranks.id == out_deg.src).select(
-            F.col("id"),
-            F.round((F.col("rank") / F.col("deg")) * CONTRIB_SCALE)
-            .cast("long")
-            .alias("c"),
+        ranks = _inflow(layout, edges_n, ranks, out_deg).agg(
+            (
+                F.lit(teleport_plus_dangling)
+                + F.lit(damping) * _nano_sum("c")
+            ).alias("rank")
         )
-        # Large mode: hint shuffle_hash on the node-sized side. Without
-        # it Catalyst picks sort-merge and re-SORTS the static edge
-        # table every superstep (the dominant superstep cost — sorting
-        # E rows ×10 iterations); hash-building the contrib side and
-        # streaming edges is sort-free and the build fits per-partition
-        # (n/P rows) at any scale.
-        contrib_side = (
-            F.broadcast(contrib) if small else contrib.hint("shuffle_hash")
-        )
-        ranks = (
-            edges_n.join(contrib_side, edges_n.src == contrib["id"])
-            .select(F.col("dst").alias("id"), "c")
-            .groupBy("id")
-            .agg(
-                (
-                    F.lit(teleport_plus_dangling)
-                    + F.lit(damping)
-                    * (F.sum("c").cast("double") / F.lit(CONTRIB_SCALE))
-                ).alias("rank")
-            )
-        )
-        # Lineage must be cut or Catalyst analysis time grows with the
-        # plan tree, but each cut materializes a job — every OTHER
-        # superstep is the measured sweet spot (~7% over every-1;
-        # every-5 is ~35% slower from re-analysis of the doubled tree).
-        checkpoint_due = it % 2 == 1 or it == max_iter - 1
+        checkpoint_due = layout.due(it, max_iter)
         if checkpoint_due and tol is not None and prev_checkpoint is not None:
             # Piggyback the convergence check on the checkpoint job
             # itself: join the new ranks with the previous checkpoint
@@ -454,7 +526,6 @@ def bfs_distances(
     source_name: str,
     types: tuple[str, ...] = ("FRIEND_OF",),
     max_depth: int = 10,
-    broadcast_node_limit: int = BROADCAST_NODE_LIMIT,
 ) -> DataFrame:
     """Single-source shortest-path distances (unweighted BFS) over the
     undirected view.
@@ -464,15 +535,15 @@ def bfs_distances(
     frontier empties or max_depth. Only reached nodes are returned
     (unreachable ≡ absent, mirroring Cypher's shortestPath null).
 
-    The frontier broadcasts only below ``broadcast_node_limit`` total
-    nodes — a frontier can grow to a constant fraction of the graph on
-    small-diameter graphs, so at scale the edge table is co-partitioned
-    on the expansion key once and each level shuffles just the
-    frontier/visited frames (both node-sized).
+    A frontier can grow to a constant fraction of the graph on
+    small-diameter graphs, so it is laid out as node-sized state
+    (``_Layout``): broadcast on small graphs, shuffled against edges
+    co-partitioned on the expansion key at scale.
     """
-    small = g.persons.count() <= broadcast_node_limit
-    edges = g.sym_edges(types).select("src", "dst")
-    edges = edges.localCheckpoint() if small else _copartition(edges, "src")
+    layout = _Layout(g.persons.count())
+    edges = layout.static(
+        g.sym_edges(types).select("src", "dst"), "src", pin=False
+    )
     visited = (
         g.persons.filter(F.col("name") == source_name)
         .select("id", F.lit(0).alias("dist"))
@@ -480,13 +551,8 @@ def bfs_distances(
     )
     frontier = visited
     for depth in range(1, max_depth + 1):
-        frontier_side = (
-            F.broadcast(frontier)
-            if small
-            else frontier.hint("shuffle_hash")
-        )
         neighbors = (
-            edges.join(frontier_side, edges.src == frontier.id)
+            edges.join(layout.side(frontier), edges.src == frontier.id)
             .select(F.col("dst").alias("id"))
             .distinct()
         )
@@ -503,6 +569,17 @@ def bfs_distances(
         .select("name", F.col("dist").cast("int").alias("dist"))
         .orderBy("name")
     )
+
+
+def _wedge_triangles(e: DataFrame) -> DataFrame:
+    """One row (a, c, b) per triangle a<b<c of the canonical (src < dst)
+    edge list ``e``: the three-way join edges(a,b) ⋈ edges(b,c) ⋈
+    edges(a,c) shared by ``triangle_count`` and
+    ``clustering_coefficient``."""
+    ab = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    bc = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
+    ac = e.select(F.col("src").alias("a"), F.col("dst").alias("c"))
+    return ab.join(bc, "b").join(ac, ["a", "c"])
 
 
 def triangle_count(
@@ -542,11 +619,9 @@ def triangle_count(
         return _oriented_triangles(e, small=False).agg(
             F.count(F.lit(1)).cast("long").alias("n_triangles")
         )
-    ab = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    bc = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    ac = e.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-    tri = ab.join(bc, "b").join(ac, ["a", "c"])
-    return tri.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
+    return _wedge_triangles(e).agg(
+        F.count(F.lit(1)).cast("long").alias("n_triangles")
+    )
 
 
 def label_propagation(
@@ -562,23 +637,23 @@ def label_propagation(
     Iterative-join shape like ``pagerank``: the static edge table stays
     put; per superstep one join ships current labels to neighbors, one
     aggregate counts (node, label) votes, one window picks the winner.
-    At scale the labels frame is co-partitioned with edges on the join
-    key; ``localCheckpoint`` truncates lineage per superstep. Fixed
-    ``max_iter`` + the deterministic (count DESC, label ASC) tie-break
-    make every round engine-exact, so the whole loop has an unrolled
-    SQL oracle (__spark_entry__._lpa_rounds_sql)."""
+    The labels frame is the superstep state (``_Layout``), keyed on the
+    vote join's ``dst`` side; ``localCheckpoint`` truncates lineage per
+    superstep. Fixed ``max_iter`` + the deterministic (count DESC, label
+    ASC) tie-break make every round engine-exact, so the whole loop has
+    an unrolled SQL oracle (__spark_entry__._lpa_rounds_sql)."""
     from pyspark.sql.window import Window as W
 
-    # static edge table co-partitioned on the per-superstep join key so
-    # only the node-sized labels frame shuffles each iteration
-    edges = _copartition(g.sym_edges(types).select("src", "dst"), "dst")
-    labels = _copartition(
-        g.persons.select("id", F.col("id").alias("label")), "id"
-    )  # keyed like the join, not like the source scan (see pagerank)
+    layout, labels, _ = _Layout.over_nodes(
+        g.persons.select("id", F.col("id").alias("label"))
+    )
+    edges = layout.static(
+        g.sym_edges(types).select("src", "dst"), "dst", pin=False
+    )
 
     for _ in range(max_iter):
         votes = (
-            edges.join(labels, edges.dst == labels.id)
+            edges.join(layout.side(labels), edges.dst == labels.id)
             .groupBy("src", "label")
             .agg(F.count(F.lit(1)).alias("n"))
         )
@@ -610,7 +685,6 @@ def sssp_distances(
     source_name: str,
     types: tuple[str, ...] = ("FRIEND_OF",),
     max_iter: int = 8,
-    broadcast_node_limit: int = BROADCAST_NODE_LIMIT,
 ) -> DataFrame:
     """Weighted single-source shortest paths (Bellman-Ford supersteps)
     over the undirected view.
@@ -625,36 +699,32 @@ def sssp_distances(
     of ≤ r edges; with weights ≥ 1 and a direct edge ≤ 7, optimal paths
     here use ≤ 7 edges, so max_iter=8 is full convergence, not an
     approximation. Unreached nodes are absent (Cypher shortestPath
-    null). Same scale switch as BFS: broadcast the node-sized distance
-    frame on small graphs, else co-partition the static edge table once
-    and shuffle only distances each round.
+    null). The distance frame is the superstep state (``_Layout``).
     """
-    small = g.persons.count() <= broadcast_node_limit
-    edges = g.sym_edges(types).select(
+    layout = _Layout(g.persons.count())
+    edges = layout.static(
+        g.sym_edges(types).select(
+            "src",
+            "dst",
+            (F.pmod(F.col("src") + F.col("dst"), F.lit(7)) + 1).alias("w"),
+        ),
         "src",
-        "dst",
-        (F.pmod(F.col("src") + F.col("dst"), F.lit(7)) + 1).alias("w"),
+        pin=False,
     )
-    edges = edges.localCheckpoint() if small else _copartition(edges, "src")
     dist = (
         g.persons.filter(F.col("name") == source_name)
         .select("id", F.lit(0).cast("long").alias("d"))
         .localCheckpoint()
     )
     for it in range(max_iter):
-        dist_side = (
-            F.broadcast(dist) if small else dist.hint("shuffle_hash")
-        )
-        relaxed = edges.join(dist_side, edges.src == dist.id).select(
+        relaxed = edges.join(layout.side(dist), edges.src == dist.id).select(
             F.col("dst").alias("id"), (F.col("d") + F.col("w")).alias("d")
         )
-        dist = dist.unionByName(relaxed).groupBy("id").agg(
-            F.min("d").alias("d")
+        dist = layout.cut(
+            dist.unionByName(relaxed).groupBy("id").agg(F.min("d").alias("d")),
+            it,
+            max_iter,
         )
-        # every-other-superstep lineage cut — same measured tradeoff as
-        # pagerank (no convergence count forces materialization here)
-        if it % 2 == 1 or it == max_iter - 1:
-            dist = dist.localCheckpoint()
     return (
         g.persons.select("id", "name")
         .join(dist, "id")
@@ -668,7 +738,6 @@ def kcore_members(
     k: int = 55,
     types: tuple[str, ...] | None = None,
     max_iter: int = 10,
-    broadcast_node_limit: int = BROADCAST_NODE_LIMIT,
 ) -> DataFrame:
     """k-core membership by iterative peeling: repeatedly delete nodes
     whose degree in the SURVIVING subgraph is < k; what remains is the
@@ -681,34 +750,30 @@ def kcore_members(
     the whole loop has an unrolled SQL oracle (g_kcore). Peeling
     cascades (removing a node can doom its neighbors next round), which
     is why it must iterate; 10 rounds far exceeds the cascade depth on
-    these graphs. Same broadcast/co-partition scale switch as the other
-    supersteps: the alive set is node-sized, the edge table static.
+    these graphs. The alive set is the node-sized superstep state
+    (``_Layout``); the edge table is static.
     """
-    small = g.persons.count() <= broadcast_node_limit
-    edges = g.sym_edges(types).select("src", "dst")
-    edges = edges.localCheckpoint() if small else _copartition(edges, "src")
+    layout = _Layout(g.persons.count())
+    edges = layout.static(
+        g.sym_edges(types).select("src", "dst"), "src", pin=False
+    )
     alive = g.persons.select("id").localCheckpoint()
     for it in range(max_iter):
-        alive_side = (
-            F.broadcast(alive) if small else alive.hint("shuffle_hash")
-        )
         surviving = edges.join(
-            alive_side, edges.src == alive.id, "left_semi"
+            layout.side(alive), edges.src == alive.id, "left_semi"
         ).join(
-            F.broadcast(alive.withColumnRenamed("id", "dst_id"))
-            if small
-            else alive.withColumnRenamed("id", "dst_id"),
+            layout.side(alive.withColumnRenamed("id", "dst_id")),
             F.col("dst") == F.col("dst_id"),
             "left_semi",
         )
-        alive = (
+        alive = layout.cut(
             surviving.groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= k)
-            .select(F.col("src").alias("id"))
+            .select(F.col("src").alias("id")),
+            it,
+            max_iter,
         )
-        if it % 2 == 1 or it == max_iter - 1:
-            alive = alive.localCheckpoint()
     return (
         g.persons.select("id", "name")
         .join(alive, "id", "left_semi")
@@ -808,7 +873,6 @@ def personalized_pagerank(
     types: tuple[str, ...] | None = None,
     max_iter: int = 10,
     damping: float = 0.85,
-    broadcast_node_limit: int = BROADCAST_NODE_LIMIT,
 ) -> DataFrame:
     """Personalized PageRank: random walk with restart at ONE seed node
     — the "people you may know" / related-items ranking over the social
@@ -821,41 +885,19 @@ def personalized_pagerank(
     identically zero, so no scalar recurrence is needed (asserted, not
     assumed: an isolated seed raises).
 
-    Same superstep plan and determinism contract as ``pagerank``
-    (nano-quantized contributions, broadcast vs co-partitioned by node
-    count, lineage cut every other step) — and the same unrolled-CTE
-    exact oracle. The practical difference at scale favors PPR: rank
-    mass is concentrated near the seed, so most nodes carry exact
-    zeros; filtering them before the join makes each superstep's rank
-    frame O(reached), not O(nodes).
+    Same static frames, superstep and determinism contract as
+    ``pagerank`` (``_rank_setup``, ``_inflow``) — and the same
+    unrolled-CTE exact oracle. The practical difference at scale favors
+    PPR: rank mass is concentrated near the seed, so most nodes carry
+    exact zeros; filtering them before the join makes each superstep's
+    rank frame O(reached), not O(nodes).
     """
     seed_rows = g.persons.filter(F.col("name") == seed_name).select("id").collect()
     if len(seed_rows) != 1:
         raise ValueError(f"seed {seed_name!r} matched {len(seed_rows)} nodes")
     seed_id = seed_rows[0][0]
 
-    nodes = g.persons.select("id").localCheckpoint()
-    n = nodes.count()
-    small = n <= broadcast_node_limit
-    if not small:
-        nodes = _copartition(nodes, "id")  # see pagerank
-    edges = g.sym_edges(types).select("src", "dst")
-    # Narrow (src, dst) edge frame materialized once, degree derived
-    # from it (r10; same rewrite as pagerank — see its edges_n/out_deg
-    # comments: one parquet scan, node-sized degree exchange, a third
-    # fewer bytes in the loop's static frame, division hoisted
-    # node-side). Width pin unchanged (10-superstep loop).
-    edges_n = (
-        edges.repartition(
-            shuffle_partitions(edges.sparkSession), "src"
-        ).localCheckpoint()
-        if small
-        else _copartition(edges, "src")
-    )
-    out_deg = edges_n.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    out_deg = (
-        out_deg.localCheckpoint() if small else _copartition(out_deg, "src")
-    )
+    layout, nodes, _, edges_n, out_deg = _rank_setup(g, types)
     if out_deg.filter(F.col("src") == seed_id).count() == 0:
         raise ValueError(f"seed {seed_name!r} is isolated — PPR is e_seed")
     seed_term = F.when(F.col("id") == seed_id, 1.0 - damping).otherwise(0.0)
@@ -864,38 +906,22 @@ def personalized_pagerank(
     )
 
     for it in range(max_iter):
-        # zero ranks contribute zero inflow — drop them before the join;
-        # per-src quantized contribution computed node-side (r10, see
-        # pagerank's contrib comment — bit-identical by construction)
+        # zero ranks contribute zero inflow — drop them before the join
         live = ranks.filter(F.col("rank") != 0.0)
-        contrib = live.join(out_deg, live.id == out_deg.src).select(
-            F.col("id"),
-            F.round((F.col("rank") / F.col("deg")) * CONTRIB_SCALE)
-            .cast("long")
-            .alias("c"),
+        contribs = _inflow(layout, edges_n, live, out_deg).agg(
+            _nano_sum("c").alias("inflow")
         )
-        contrib_side = (
-            F.broadcast(contrib) if small else contrib.hint("shuffle_hash")
+        ranks = layout.cut(
+            nodes.join(contribs, "id", "left").select(
+                "id",
+                (
+                    seed_term
+                    + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
+                ).alias("rank"),
+            ),
+            it,
+            max_iter,
         )
-        contribs = (
-            edges_n.join(contrib_side, edges_n.src == contrib["id"])
-            .select(F.col("dst").alias("id"), "c")
-            .groupBy("id")
-            .agg(
-                (F.sum("c").cast("double") / F.lit(CONTRIB_SCALE)).alias(
-                    "inflow"
-                )
-            )
-        )
-        ranks = nodes.join(contribs, "id", "left").select(
-            "id",
-            (
-                seed_term
-                + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
-            ).alias("rank"),
-        )
-        if it % 2 == 1 or it == max_iter - 1:
-            ranks = ranks.localCheckpoint()
 
     return (
         g.persons.select("id", "name")
@@ -967,19 +993,31 @@ def link_prediction_training_set(
     return positives.unionByName(negatives).orderBy("label", "src", "dst")
 
 
+def _landmarks(g: GraphModel, n_landmarks: int) -> DataFrame:
+    """The ``n_landmarks`` smallest person ids as column ``lm`` — the
+    deterministic landmark pick of closeness and betweenness (a stand-in
+    for the random or degree-biased pick; swap without touching the
+    plans)."""
+    from pyspark.sql.window import Window as W
+
+    return (
+        g.persons.select("id")
+        .withColumn("rn", F.row_number().over(W.orderBy("id")))
+        .filter(F.col("rn") <= n_landmarks)
+        .select(F.col("id").alias("lm"))
+    )
+
+
 def closeness_landmarks(
     g: GraphModel,
     types: tuple[str, ...] = ("FRIEND_OF",),
     n_landmarks: int = 4,
     max_depth: int = 6,
-    broadcast_node_limit: int = BROADCAST_NODE_LIMIT,
 ) -> DataFrame:
     """Landmark-based closeness centrality (the Indyk/Potamias
     approximation): exact closeness needs all-pairs BFS — O(V·E), dead
     at scale — so estimate each node's centrality from its hop
-    distances to ``n_landmarks`` fixed landmark nodes. Landmarks are
-    the smallest person ids (deterministic stand-in for the random or
-    degree-biased pick; swap without touching the plan).
+    distances to ``n_landmarks`` fixed landmark nodes (``_landmarks``).
 
     One multi-source BFS computes ALL landmark distances together: the
     distance frame is keyed (landmark, node) and each round is one
@@ -995,34 +1033,24 @@ def closeness_landmarks(
     material; 1/total_dist or n_reached²/total_dist are one projection
     away and engine-dependent float policy stays out of the contract.
     """
-    small = g.persons.count() <= broadcast_node_limit
-    edges = g.sym_edges(types).select("src", "dst")
-    edges = edges.localCheckpoint() if small else _copartition(edges, "src")
-    from pyspark.sql.window import Window as W
-
-    landmarks = (
-        g.persons.select("id")
-        .withColumn("rn", F.row_number().over(W.orderBy("id")))
-        .filter(F.col("rn") <= n_landmarks)
-        .select(F.col("id").alias("lm"))
+    layout = _Layout(g.persons.count())
+    edges = layout.static(
+        g.sym_edges(types).select("src", "dst"), "src", pin=False
     )
-    dist = landmarks.select(
+    dist = _landmarks(g, n_landmarks).select(
         "lm", F.col("lm").alias("id"), F.lit(0).cast("long").alias("d")
     ).localCheckpoint()
     for it in range(max_depth):
-        dist_side = (
-            F.broadcast(dist) if small else dist.hint("shuffle_hash")
-        )
-        relaxed = edges.join(dist_side, edges.src == dist.id).select(
+        relaxed = edges.join(layout.side(dist), edges.src == dist.id).select(
             "lm", F.col("dst").alias("id"), (F.col("d") + 1).alias("d")
         )
-        dist = (
+        dist = layout.cut(
             dist.unionByName(relaxed)
             .groupBy("lm", "id")
-            .agg(F.min("d").alias("d"))
+            .agg(F.min("d").alias("d")),
+            it,
+            max_depth,
         )
-        if it % 2 == 1 or it == max_depth - 1:
-            dist = dist.localCheckpoint()
     return (
         g.persons.select("id", "name")
         .join(dist, "id")
@@ -1061,21 +1089,23 @@ def betweenness_landmarks(
     integral until the single output division).
 
     State is O(landmarks · V); both sweeps are bounded by ``max_depth``
-    supersteps. Output: (name, betweenness) for nodes with nonzero
-    score, descending.
+    supersteps over the static edge frame (``_Layout``). Output: (name,
+    betweenness) for nodes with nonzero score, descending.
     """
-    edges = g.sym_edges(types).select("src", "dst").localCheckpoint()
-    from pyspark.sql.window import Window as W
-
-    landmarks = (
-        g.persons.select("id")
-        .withColumn("rn", F.row_number().over(W.orderBy("id")))
-        .filter(F.col("rn") <= n_landmarks)
-        .select(F.col("id").alias("lm"))
+    # The level joins stay unhinted (AQE picks the build side): each
+    # frontier or level frame is a thin slice of the (lm, node) state,
+    # and broadcasting it would stream every edge per level — measured
+    # at sf0.01 on 4 cores, state-side hints on these joins cost +39%
+    # executor CPU (2.02 vs 1.45 s median), while unhinted joins over
+    # the gated edge frame cost the same as the ungated loop (1.33 vs
+    # 1.34 s).
+    layout = _Layout(g.persons.count())
+    edges = layout.static(
+        g.sym_edges(types).select("src", "dst"), "src", pin=False
     )
     # forward: frontier BFS carrying sigma; visited keeps the final
     # (dist, sigma) per (lm, node)
-    frontier = landmarks.select(
+    frontier = _landmarks(g, n_landmarks).select(
         "lm",
         F.col("lm").alias("id"),
         F.lit(0).alias("dist"),
@@ -1134,20 +1164,14 @@ def betweenness_landmarks(
             .select(
                 F.col("v_lm").alias("lm"),
                 F.col("v_id").alias("id"),
-                F.round(
-                    (
-                        F.col("sigma").cast("double")
-                        / F.col("w_sigma").cast("double")
-                        * (
-                            1.0
-                            + F.col("w_dn").cast("double")
-                            / F.lit(CONTRIB_SCALE)
-                        )
+                _nano(
+                    F.col("sigma").cast("double")
+                    / F.col("w_sigma").cast("double")
+                    * (
+                        1.0
+                        + F.col("w_dn").cast("double") / F.lit(CONTRIB_SCALE)
                     )
-                    * CONTRIB_SCALE
-                )
-                .cast("long")
-                .alias("c"),
+                ).alias("c"),
             )
             .groupBy("lm", "id")
             .agg(F.sum("c").alias("dd"))
@@ -1172,11 +1196,7 @@ def betweenness_landmarks(
         g.persons.select("id", "name")
         .join(delta.filter(F.col("dist") > 0), "id")
         .groupBy("name")
-        .agg(
-            (F.sum("dn").cast("double") / F.lit(CONTRIB_SCALE)).alias(
-                "betweenness"
-            )
-        )
+        .agg(_nano_sum("dn").alias("betweenness"))
         .filter(F.col("betweenness") > 0.0)
         .orderBy(F.desc("betweenness"), F.asc("name"))
     )
@@ -1217,11 +1237,7 @@ def clustering_coefficient(
             F.explode(F.array("u", "v", "w")).alias("id")
         )
     else:
-        ab = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        bc = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-        ac = e.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-        tri = ab.join(bc, "b").join(ac, ["a", "c"])
-        corners = tri.select(
+        corners = _wedge_triangles(e).select(
             F.explode(F.array("a", "b", "c")).alias("id")
         )
     tcount = corners.groupBy("id").agg(
@@ -1317,7 +1333,6 @@ def hits(
     g: GraphModel,
     types: tuple[str, ...] | None = None,
     max_iter: int = 5,
-    broadcast_node_limit: int = BROADCAST_NODE_LIMIT,
 ) -> DataFrame:
     """HITS (hubs & authorities) over the DIRECTED stored edges
     (canonical one-way FRIEND_OF/SAME_FAMILY, both-way ENEMY/ROMANCE —
@@ -1331,66 +1346,33 @@ def hits(
     order/partition independent; sqrt and the divisions are single
     correctly-rounded IEEE ops. Hash-matches the unrolled DuckDB oracle.
 
-    Scale: the edge table is static (broadcast the node-sized frames
-    below the limit; co-partitioned copies keyed by src AND dst above
-    it — each superstep then shuffles only node-sized frames).
+    Scale: the edge table is static; at scale it is co-partitioned once
+    by src AND once by dst, one copy per half-step's join key
+    (``_Layout``). Small mode broadcasts the scores, so one width-pinned
+    copy serves both half-steps.
     """
-    nodes = g.persons.select("id").localCheckpoint()
-    n = nodes.count()
-    small = n <= broadcast_node_limit
-    if not small:
-        nodes = _copartition(nodes, "id")  # see pagerank
+    layout, nodes, n = _Layout.over_nodes(g.persons.select("id"))
     edges = g.edges if types is None else g.edges.filter(
         F.col("type").isin(list(types))
     )
     edges = edges.select("src", "dst")
-    if small:
-        # Width-pin the static frame (r10; the deferral VERDICT r09
-        # item 5 closed): a naive checkpoint inherits the SCAN
-        # partitioning and all 2·max_iter half-steps run at file-split
-        # width — the same defect class pagerank's pin fixed. A/B
-        # (scripts/hits_pin_r10.py, store-backed sf0.1, identical output hashes):
-        # pinned 6.22 vs unpinned 6.86 s min, pinned faster in all
-        # three interleaved rounds.
-        e_src = e_dst = edges.repartition(
-            shuffle_partitions(edges.sparkSession), "src"
-        ).localCheckpoint()
-    else:
-        e_src = _copartition(edges, "src")
-        e_dst = _copartition(edges, "dst")
+    e_src = layout.static(edges, "src")
+    e_dst = layout.static(edges, "dst", reuse=e_src)
 
     def _step(scores: DataFrame, col: str, e: DataFrame,
               join_key: str, out_key: str, out: str) -> DataFrame:
         """One half-iteration: sum quantized scores over edges into
         out_key, then L2-normalize."""
-        side = (
-            F.broadcast(scores) if small else scores.hint("shuffle_hash")
-        )
         raw = (
-            e.join(side, F.col(join_key) == scores.id)
+            e.join(layout.side(scores), F.col(join_key) == scores.id)
             .groupBy(F.col(out_key).alias("id"))
-            .agg(
-                (
-                    F.sum(
-                        F.round(F.col(col) * CONTRIB_SCALE).cast("long")
-                    ).cast("double")
-                    / F.lit(CONTRIB_SCALE)
-                ).alias("raw")
-            )
+            .agg(_nano_sum(_nano(F.col(col))).alias("raw"))
         )
-        raw = F.broadcast(raw) if small else raw.hint("shuffle_hash")
-        full = nodes.join(raw, "id", "left").select(
+        full = nodes.join(layout.side(raw), "id", "left").select(
             "id", F.coalesce(F.col("raw"), F.lit(0.0)).alias("raw")
         )
         norm = full.groupBy().agg(
-            F.sqrt(
-                F.sum(
-                    F.round(
-                        F.col("raw") * F.col("raw") * CONTRIB_SCALE
-                    ).cast("long")
-                ).cast("double")
-                / F.lit(CONTRIB_SCALE)
-            ).alias("nrm")
+            F.sqrt(_nano_sum(_nano(F.col("raw") * F.col("raw")))).alias("nrm")
         )
         return full.crossJoin(F.broadcast(norm)).select(
             "id", (F.col("raw") / F.col("nrm")).alias(out)
@@ -1399,22 +1381,26 @@ def hits(
     hub = nodes.select("id", F.lit(1.0 / n).alias("hub"))
     auth = None
     for it in range(max_iter):
-        cut = it % 2 == 1 or it == max_iter - 1
-        auth = _step(hub, "hub", e_src, "src", "dst", "auth")
-        if cut:
-            # checkpoint auth BEFORE deriving hub from it: hub built on
-            # the un-checkpointed auth object would re-execute auth's
-            # whole lineage a second time at its own checkpoint
-            auth = auth.localCheckpoint()
-        hub = _step(auth, "auth", e_dst, "dst", "src", "hub")
-        if cut:
-            hub = hub.localCheckpoint()
+        # checkpoint auth BEFORE deriving hub from it: hub built on the
+        # un-checkpointed auth object would re-execute auth's whole
+        # lineage a second time at its own checkpoint
+        auth = layout.cut(_step(hub, "hub", e_src, "src", "dst", "auth"),
+                          it, max_iter)
+        hub = layout.cut(_step(auth, "auth", e_dst, "dst", "src", "hub"),
+                         it, max_iter)
     return (
         g.persons.select("id", "name")
         .join(hub, "id")
         .join(auth, "id")
         .select("name", "hub", F.col("auth").alias("authority"))
         .orderBy(F.desc("authority"), F.desc("hub"), F.asc("name"))
+    )
+
+
+def _symmetrize(e: DataFrame) -> DataFrame:
+    """The (src, dst) edge list ``e`` unioned with its reverse."""
+    return e.unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
 
 
@@ -1470,9 +1456,7 @@ def _grid_support(
     entries = 2 * n_edges
     b = max(2, -(-2 * entries // target))
 
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = _symmetrize(edges)
     adj = sym.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
     blocks = F.explode(F.sequence(F.lit(0), F.lit(b - 1)))
 
@@ -1570,9 +1554,7 @@ def _oriented_triangles(edges: DataFrame, small: bool) -> DataFrame:
     full-adjacency fan-out Σ deg² becomes Σ outdeg², which is what
     makes hub-heavy graphs tractable (SCALE_PROBE.md r07 hub cells).
     """
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = _symmetrize(edges)
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # orient u→v iff (deg(u), u) < (deg(v), v): a total order, so the
     # oriented graph is acyclic and every triangle has one source pair
@@ -1679,9 +1661,7 @@ def _degree_skew_probe(
     sample: sampled degrees misestimate exactly the hubs the probe
     exists to detect, and the exact pass is one narrow shuffle.
     """
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = _symmetrize(e)
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     row = deg.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1789,10 +1769,7 @@ def ktruss_edges(
         # is the neighbor arrays, whose size is edge-bound — on
         # quadratic FRIEND_OF cliques the node gate alone calls a
         # multi-GB adjacency "small" (ADVICE r06).
-        return (
-            nodes <= BROADCAST_NODE_LIMIT
-            and 2 * m <= BROADCAST_ADJ_ENTRY_LIMIT
-        )
+        return _Layout(nodes).small and 2 * m <= BROADCAST_ADJ_ENTRY_LIMIT
 
     if strategy == "auto":
         # Route by measured cost estimates, not caller knowledge
@@ -1845,9 +1822,7 @@ def ktruss_edges(
             return _grid_support(edges, m)
         # symmetric adjacency arrays; intersection SIZE is order-
         # independent, so the unsorted collect_list is deterministic
-        sym = edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+        sym = _symmetrize(edges)
         adj = sym.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
         na = adj.select(F.col("src").alias("_a"), F.col("nbrs").alias("na"))
         nb = adj.select(F.col("src").alias("_b"), F.col("nbrs").alias("nb"))

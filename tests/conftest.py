@@ -16,6 +16,12 @@ SF_SMALL = os.environ.get(
 
 @pytest.fixture(scope="session")
 def spark():
+    # The session default driver heap (48g, sized for a 32-core box)
+    # lets the JVM grow past a small machine's memory before a full GC
+    # runs: on a 4-core, 15 GB box the suite's JVM reached 15 GB and
+    # was OOM-killed mid-run. The fixtures are tiny, so cap the heap
+    # unless the caller sets SPARK_GRAFT_DRIVER_MEM.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
     s = get_spark("tests")
     # Test-session shuffle width: the suite runs on ≤15K-row fixtures
     # where every one of the engine's scale-adaptive width pins
@@ -26,7 +32,8 @@ def spark():
     # neo4j_database_spark.session.shuffle_partitions, so the engine
     # code paths exercised are identical — only the task count drops.
     # Correctness is partition-count-independent by design (and pinned
-    # by the *_partitioning_independence / *_copartitioned_mode tests).
+    # by the *_partitioning_independence tests and
+    # test_forced_large_mode_matches_broadcast).
     s.conf.set("spark.sql.shuffle.partitions", "8")
     yield s
 

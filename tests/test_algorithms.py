@@ -87,16 +87,43 @@ def test_pagerank_mass_conserved(tiny):
     assert max(ranks, key=ranks.get) == "Alice A"
 
 
-def test_pagerank_copartitioned_mode_identical(tiny):
-    """The co-partitioned (big-graph) superstep path must produce
-    bit-identical ranks to the broadcast path: contributions are
-    decimal-quantized, so sums are accumulation-order-independent and
-    the result cannot depend on partitioning or join strategy."""
-    bcast = alg.pagerank(tiny, max_iter=5).collect()
-    copart = alg.pagerank(tiny, max_iter=5, broadcast_node_limit=0).collect()
-    assert [(r["name"], r["rank"]) for r in bcast] == [
-        (r["name"], r["rank"]) for r in copart
-    ]
+# The ten iterative algorithms whose supersteps go through
+# algorithms._Layout, each as called on the tiny fixture.
+LAYOUT_USERS = {
+    "connected_components": lambda g: alg.connected_components(g),
+    "pagerank": lambda g: alg.pagerank(g, max_iter=5),
+    "personalized_pagerank": lambda g: alg.personalized_pagerank(g, "Alice A"),
+    "hits": lambda g: alg.hits(g),
+    "label_propagation": lambda g: alg.label_propagation(g),
+    "sssp_distances": lambda g: alg.sssp_distances(g, "Alice A"),
+    "bfs_distances": lambda g: alg.bfs_distances(g, "Alice A"),
+    "kcore_members": lambda g: alg.kcore_members(g, k=2),
+    "closeness_landmarks": lambda g: alg.closeness_landmarks(g),
+    "betweenness_landmarks": lambda g: alg.betweenness_landmarks(g),
+}
+
+
+@pytest.mark.parametrize("name", list(LAYOUT_USERS))
+def test_forced_large_mode_matches_broadcast(tiny, monkeypatch, name):
+    """The co-partitioned (big-graph) superstep layout must give exactly
+    the broadcast layout's rows: every sum is integer or nano-quantized,
+    so no result can depend on partitioning or join strategy. The
+    _copartition spy proves each mode took its own path."""
+    calls = []
+    copartition = alg._copartition
+
+    def spy(df, key):
+        calls.append(key)
+        return copartition(df, key)
+
+    monkeypatch.setattr(alg, "_copartition", spy)
+    run = LAYOUT_USERS[name]
+    broadcast = [tuple(r) for r in run(tiny).collect()]
+    assert broadcast and calls == []
+    monkeypatch.setattr(alg, "BROADCAST_NODE_LIMIT", 0)
+    copart = [tuple(r) for r in run(tiny).collect()]
+    assert calls, "large mode never co-partitioned"
+    assert copart == broadcast
 
 
 def test_pagerank_tol_early_exit_parity(tiny):
@@ -157,12 +184,6 @@ def test_pagerank_tol_then_ml_pipeline_serializes(tiny, spark):
     assert pred in (0.0, 1.0)
 
 
-def test_connected_components_copartitioned_mode_identical(tiny):
-    comps = alg.connected_components(tiny).collect()
-    copart = alg.connected_components(tiny, broadcast_node_limit=0).collect()
-    assert [tuple(r) for r in comps] == [tuple(r) for r in copart]
-
-
 def test_label_propagation_two_triangles(spark):
     from neo4j_database_spark.graph.algorithms import label_propagation
     from neo4j_database_spark.graph.model import GraphModel
@@ -203,17 +224,6 @@ def test_sssp_weighted_relaxation(spark):
     g = GraphModel(persons=persons, houses=houses, edges=edges)
     out = {r["name"]: r["dist"] for r in alg.sssp_distances(g, "P Two").collect()}
     assert out == {"P Two": 0, "P Five": 1, "P Eleven": 4}
-
-
-def test_sssp_copartitioned_mode_matches_broadcast(tiny):
-    a = {(r["name"], r["dist"])
-         for r in alg.sssp_distances(tiny, "Alice A").collect()}
-    b = {(r["name"], r["dist"])
-         for r in alg.sssp_distances(
-             tiny, "Alice A", broadcast_node_limit=0
-         ).collect()}
-    assert a == b
-    assert ("Alice A", 0) in a and len(a) == 4
 
 
 def test_kcore_peeling_cascades(spark):
