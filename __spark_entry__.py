@@ -962,13 +962,13 @@ def _customer_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from neo4j_database_spark.operators.er import edit_distance_pairs
 
     cust = load_table(spark, "customer", sf_dir)
-    return edit_distance_pairs(cust, "c_custkey", "c_name", max_dist=1, q=3)
+    return edit_distance_pairs(cust, "c_custkey", "c_name", max_dist=1)
 
 
 def _customer_fuzzy_d2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """d=2 ER over customer names — exercises the r09 deletion-
     neighborhood candidate generator (operators/er.py::
-    _deletion_d2_pairs; strategy="auto" routes here because the keys
+    _deletion_d2_pairs; the router sends it there because the keys
     are far under DELETION_LEN_CEILING). Complete for all lengths, so
     the oracle mirrors only the blocking, not a boundary contract."""
     from neo4j_database_spark.catalog import load_table
@@ -3684,9 +3684,8 @@ SELECT
 FROM j
 ORDER BY c_custkey
 """,
-        # Ed-Join prefix-filtered edit-distance self-join — mirrors
-        # operators/er.py::edit_distance_pairs (q=3, d=1, prefix q*d+1=4;
-        # occurrence-counted gram frequency, (df, gram) total order).
+        # d=1 edit-distance self-join — mirrors
+        # operators/er.py::edit_distance_pairs at max_dist=1:
         # deletion-neighborhood (FastSS) candidates since r06 — for
         # max_dist=1 the candidate stage is a complete generator, so
         # the semantics are exactly "all pairs with levenshtein <= 1"

@@ -83,7 +83,7 @@ BROADCAST_ADJ_ENTRY_LIMIT = 20_000_000
 # pass) — see _grid_support's docstring for the trade.
 GRID_CELL_ENTRY_TARGET = 32_000_000
 
-# ktruss strategy="auto" router (VERDICT r07 item 2): route to the
+# ktruss_edges router (VERDICT r07 item 2): route to the
 # degree-ordered oriented kernel when Σ_v deg(v)² (the edge-iterator's
 # per-pass probe cost — each edge ships both endpoints' full-degree
 # arrays) exceeds this multiple of Σ_v outdeg(v)² under the
@@ -93,8 +93,9 @@ GRID_CELL_ENTRY_TARGET = 32_000_000
 # of magnitude: ~4 on uniform-degree clique graphs (sf0.1 FRIEND_OF
 # and its 16× replicas — where oriented degenerates to the
 # triangle-sized exchange and edge-iterator/grid wins) vs ~25,000 on
-# the hub probe graphs (scripts/ktruss_hub_probe.py — where oriented
-# wins 3-5×). 10 sits just above the uniform-degree floor.
+# the hub probe graphs (SCALE_PROBE.md r07 hub cells; the probe
+# script's last copy is in commit 5850eb7 — where oriented wins 3-5×).
+# 10 sits just above the uniform-degree floor.
 ORIENTED_DEG2_RATIO = 10
 
 _AQE_TOGGLE_LOCK = threading.Lock()
@@ -583,9 +584,7 @@ def _wedge_triangles(e: DataFrame) -> DataFrame:
 
 
 def triangle_count(
-    g: GraphModel,
-    types: tuple[str, ...] = ("SAME_FAMILY",),
-    strategy: str = "auto",
+    g: GraphModel, types: tuple[str, ...] = ("SAME_FAMILY",)
 ) -> DataFrame:
     """Total triangle count via the canonical-order three-way edge join.
 
@@ -595,30 +594,15 @@ def triangle_count(
     path explosion is bounded by per-key degree — on near-clique inputs
     restrict to sparser edge types (default SAME_FAMILY) or sample.
 
-    ``strategy="oriented"`` (opt-in, r07): compact-forward enumeration
-    via ``_oriented_triangles`` — the wedge fan-out drops from Σ deg²
-    to Σ outdeg² under the (degree, id) orientation. MEASURED
-    (scripts/ktruss_hub_probe.py): the default wedge join wins on this
-    box even at 1e11 wedges (4.5 s vs oriented 10.0 s, mid-id hubs at
-    100k spokes), because the wedge rows never exchange — both build
-    sides are edge-sized, so wedges generate-and-probe inside one
-    codegen stage at ~1-2 ns each. Σ deg² is CPU-only under pipelined
-    execution; pick oriented when wedge volume outgrows CPU (~1e13+)
-    or when a cluster plan would materialize the wedges across the
-    fabric. Identical integer count (parity-pinned); default plan
-    unchanged.
+    The wedge join is the only route. A compact-forward (oriented)
+    route, which cuts the wedge fan-out from Σ deg² to Σ outdeg², was
+    measured slower on every shape tried, even at 1e11 wedges (4.5 s vs
+    10.0 s, mid-id hubs at 100k spokes; SCALE_PROBE.md r07): the wedge
+    rows never exchange — both build sides are edge-sized, so wedges
+    generate-and-probe inside one codegen stage at ~1-2 ns each. It
+    was deleted; commit 5850eb7 is the last that holds it.
     """
-    if strategy not in ("auto", "oriented"):
-        raise ValueError(f"unknown triangle_count strategy: {strategy!r}")
     e = g.edges.filter(F.col("type").isin(list(types))).select("src", "dst")
-    if strategy == "oriented":
-        # small=False: no explicit broadcast hint, so plan construction
-        # stays action-free and AQE upgrades the degree/out-adjacency
-        # joins to broadcast when they fit (ktruss passes an explicit
-        # gate because it materializes counts anyway)
-        return _oriented_triangles(e, small=False).agg(
-            F.count(F.lit(1)).cast("long").alias("n_triangles")
-        )
     return _wedge_triangles(e).agg(
         F.count(F.lit(1)).cast("long").alias("n_triangles")
     )
@@ -1203,9 +1187,7 @@ def betweenness_landmarks(
 
 
 def clustering_coefficient(
-    g: GraphModel,
-    types: tuple[str, ...] = ("SAME_FAMILY",),
-    strategy: str = "auto",
+    g: GraphModel, types: tuple[str, ...] = ("SAME_FAMILY",)
 ) -> DataFrame:
     """Local clustering coefficient per node: the fraction of a node's
     neighbor pairs that are themselves adjacent, ``2·T(v) / (deg(v) ·
@@ -1219,27 +1201,14 @@ def clustering_coefficient(
     double division, identical in DuckDB, so the query has an exact
     oracle. Scale: wedge fan-out is bounded by per-key degree within
     the chosen edge types — default SAME_FAMILY keeps keys at family
-    size; for denser types pre-filter hubs like ``jaccard_similarity``,
-    or pass ``strategy="oriented"`` (opt-in, r07): compact-forward
-    triangle enumeration bounds the wedge fan-out by Σ outdeg² instead
-    of Σ deg², byte-identical output. Same measured caveat as
-    ``triangle_count``: the wedge join pipelines (CPU-only, no wedge
-    exchange) and wins on this box to at least 1e11 wedges — oriented
-    is the asymptotic/fabric-bound escape, not a local speedup.
+    size; for denser types pre-filter hubs like ``jaccard_similarity``.
+    The wedge join is the only route, for the measured reason given
+    at ``triangle_count``.
     """
-    if strategy not in ("auto", "oriented"):
-        raise ValueError(
-            f"unknown clustering_coefficient strategy: {strategy!r}"
-        )
     e = g.edges.filter(F.col("type").isin(list(types))).select("src", "dst")
-    if strategy == "oriented":
-        corners = _oriented_triangles(e, small=False).select(
-            F.explode(F.array("u", "v", "w")).alias("id")
-        )
-    else:
-        corners = _wedge_triangles(e).select(
-            F.explode(F.array("a", "b", "c")).alias("id")
-        )
+    corners = _wedge_triangles(e).select(
+        F.explode(F.array("a", "b", "c")).alias("id")
+    )
     tcount = corners.groupBy("id").agg(
         F.count(F.lit(1)).alias("triangles")
     )
@@ -1540,9 +1509,8 @@ def _grid_support(
 
 def _oriented_triangles(edges: DataFrame, small: bool) -> DataFrame:
     """One row (u, v, w) per triangle, enumerated exactly once under
-    the (degree, id) total order — the shared core of the oriented
-    strategies of ``ktruss_edges``, ``triangle_count`` and
-    ``clustering_coefficient``.
+    the (degree, id) total order — the core of ``ktruss_edges``'s
+    oriented support kernel (_oriented_support).
 
     Orient every edge from its lower-(degree, id) endpoint (the
     standard degeneracy-order surrogate: Cohen, "Graph Twiddling in a
@@ -1601,7 +1569,7 @@ def _oriented_triangles(edges: DataFrame, small: bool) -> DataFrame:
 
 def _oriented_support(edges: DataFrame, small: bool) -> DataFrame:
     """Edge support via degree-ordered triangle enumeration — the
-    hub-graph strategy of ``ktruss_edges`` (strategy="oriented").
+    hub-graph route of ``ktruss_edges``.
 
     Each triangle from ``_oriented_triangles`` scatters +1 support to
     its three edges. Cost trade vs the edge-iterator paths
@@ -1611,9 +1579,9 @@ def _oriented_support(edges: DataFrame, small: bool) -> DataFrame:
     triangle-sized shuffle the edge-iterator form exists to avoid
     (995 s measured r05). Pick oriented when hubs dominate and
     triangles are sparse; adjacency/grid when triangles are dense.
-    Counts are exact integers — all three strategies are
-    byte-identical (pinned by tests/test_algorithms.py and the
-    hypothesis parity property).
+    Counts are exact integers — all three routes are byte-identical
+    (pinned by tests/test_algorithms.py and the hypothesis parity
+    property).
     """
     tri_w = _oriented_triangles(edges, small)
     # scatter each triangle once to its three ID-canonical edges
@@ -1649,7 +1617,7 @@ def _degree_skew_probe(
     e: DataFrame, small: bool
 ) -> tuple[int, int, int]:
     """(n_nodes, Σ deg², Σ outdeg²) of the undirected edge list ``e``
-    — the strategy="auto" router's cost estimates (one linear pass
+    — ``ktruss_edges``'s routing figures (one linear pass
     over the checkpointed edges + a node-sized aggregation, dwarfed by
     a single support round's Σ deg² work at any graph size).
 
@@ -1693,7 +1661,6 @@ def ktruss_edges(
     k: int = 5,
     types: tuple[str, ...] = ("FRIEND_OF",),
     max_rounds: int = 5,
-    strategy: str = "auto",
 ) -> DataFrame:
     """k-truss decomposition: iteratively peel edges with fewer than
     k-2 triangles in the surviving subgraph — the edge-level sibling of
@@ -1729,7 +1696,7 @@ def ktruss_edges(
     ~2·ENTRIES/B in expectation under hash-balanced blocks (a node's
     neighbor array is atomic within its block, so a single extreme hub
     with degree approaching GRID_CELL_ENTRY_TARGET blows the budget in
-    every cell of its block-row/column — the oriented strategy, whose
+    every cell of its block-row/column — the oriented kernel, whose
     arrays are orientation-bounded, is the escape for such graphs, and
     the router's skew probe sends them there), byte-identical counts.
     The r06-era join fallback (attach both neighbor arrays to every
@@ -1740,16 +1707,14 @@ def ktruss_edges(
     set under the gate, later rounds stop paying the grid replication
     exchange.
 
-    ``strategy``: "auto" (default — the Σ deg²/Σ outdeg² skew probe
-    routes hub-shaped graphs to the oriented kernel, everything else
-    to the edge-iterator family with the per-round broadcast/grid
-    gate), or an explicit "broadcast" / "grid" / "oriented" override
-    (probes skipped; the caller owns the memory consequences). All
-    strategies are byte-identical (parity-pinned in
-    tests/test_algorithms.py).
+    Routing reads only exact counts the function computes itself: the
+    Σ deg²/Σ outdeg² skew probe (_degree_skew_probe) sends hub-shaped
+    graphs to the oriented kernel and everything else to the
+    edge-iterator family with the per-round broadcast/grid gate. All
+    three routes are byte-identical (parity-pinned in
+    tests/test_algorithms.py, which forces each through
+    ORIENTED_DEG2_RATIO and BROADCAST_ADJ_ENTRY_LIMIT).
     """
-    if strategy not in ("auto", "broadcast", "grid", "oriented"):
-        raise ValueError(f"unknown ktruss strategy: {strategy!r}")
     e = (
         g.edges.filter(F.col("type").isin(list(types)))
         .select(
@@ -1771,36 +1736,19 @@ def ktruss_edges(
         # multi-GB adjacency "small" (ADVICE r06).
         return _Layout(nodes).small and 2 * m <= BROADCAST_ADJ_ENTRY_LIMIT
 
-    if strategy == "auto":
-        # Route by measured cost estimates, not caller knowledge
-        # (VERDICT r07 item 2): Σ deg² (edge-iterator/grid per-pass
-        # probe cost) vs Σ outdeg² under the (degree, id) orientation
-        # (oriented kernel cost — see _degree_skew_probe). Hub graphs
-        # (stars + a small truss core) show ratios ~10³-10⁴ and route
-        # oriented; uniform-degree clique graphs sit at ~4 and keep
-        # the edge-iterator family, whose broadcast-vs-grid split is
-        # re-decided per round below.
-        n_nodes, sum_deg2, sum_od2 = _degree_skew_probe(
-            e, _is_small(2 * n_edges, n_edges)
-        )
-        if sum_deg2 > ORIENTED_DEG2_RATIO * max(sum_od2, 1):
-            strategy = "oriented"
-    elif strategy == "oriented":
-        # ADVICE r08: the 2|E| bound made _is_small false for mid-size
-        # graphs (e.g. 6M edges / 1M nodes) that qualify under the
-        # exact count, silently dropping _oriented_support's broadcast
-        # degree joins on the explicit-oriented path. The exact count
-        # is one cheap distinct on the checkpointed edge frame, and
-        # only the explicit-oriented path needs it (auto's probe
-        # already computes it; broadcast/grid overrides never read a
-        # node-count gate that the per-round 2·m bound doesn't cover).
-        n_nodes = (
-            e.select(F.explode(F.array("src", "dst")).alias("n"))
-            .agg(F.countDistinct("n"))
-            .first()[0]
-        )
-    else:
-        n_nodes = 2 * n_edges  # conservative bound; only the gate uses it
+    # Route by measured cost figures, not caller knowledge (VERDICT
+    # r07 item 2): Σ deg² (edge-iterator/grid per-pass probe cost) vs
+    # Σ outdeg² under the (degree, id) orientation (oriented kernel
+    # cost — see _degree_skew_probe). Hub graphs (stars + a small
+    # truss core) show ratios ~10³-10⁴ and route oriented;
+    # uniform-degree clique graphs sit at ~4 and keep the
+    # edge-iterator family, whose broadcast-vs-grid split is
+    # re-decided per round below. The probe's exact node count also
+    # feeds that gate.
+    n_nodes, sum_deg2, sum_od2 = _degree_skew_probe(
+        e, _is_small(2 * n_edges, n_edges)
+    )
+    oriented = sum_deg2 > ORIENTED_DEG2_RATIO * max(sum_od2, 1)
 
     def _support(edges: DataFrame, m: int) -> DataFrame:
         # Re-evaluate the broadcast gate per round (ADVICE r07): heavy
@@ -1812,13 +1760,13 @@ def ktruss_edges(
         # Hub-graph path: degree-ordered triangle enumeration (arrays
         # bounded by orientation, scatter 3·|triangles| narrow rows) —
         # see _oriented_support for the trade.
-        if strategy == "oriented":
+        if oriented:
             return _oriented_support(edges, small)
         # Large graphs: 2D grid partitioning (see _grid_support) — a
         # broadcast would exceed executor memory and the plain join
         # ships (deg(a)+deg(b))-wide rows per edge (~700 GB of sort
         # spill measured at the 16× probe graph, r07).
-        if strategy == "grid" or (strategy == "auto" and not small):
+        if not small:
             return _grid_support(edges, m)
         # symmetric adjacency arrays; intersection SIZE is order-
         # independent, so the unsorted collect_list is deterministic

@@ -62,6 +62,20 @@ join anywhere. The gram-frequency frame is gram-domain-sized (tiny vs
 the corpus) and broadcasts; the candidate join hashes on rare grams by
 construction, which is exactly what bounds bucket skew. Verification
 cost is |candidates|, the quantity prefix filtering minimizes.
+
+Routing is the operator's own business: callers pass only
+``max_dist``. Every call first runs ONE narrow profile aggregate over
+the (id, s) projection — min length, max length, row count — and its
+exact figures feed every decision: the d = 2 length route and its
+mid-tier templated trigger, the deletion route's partition multiplier
+(_deletion_parts_mult), the gram route's q probe (_auto_q's min
+length) and the string re-attach broadcast gate (row count vs
+BROADCAST_KEY_ROWS, see _verify). No decision reads optimizer
+statistics. Construction is therefore EAGER: every route runs that one
+Spark job when the plan is built (the gram route adds its templated
+trigger and, on templated corpora, the q probe); the returned frame is
+lazy from there on. Tests force a route by setting the module
+constants, which are read at call time.
 """
 
 from __future__ import annotations
@@ -190,7 +204,7 @@ def _bag_l1(sig_a: Column, sig_b: Column) -> Column:
     return reduce(lambda x, y: x + y, terms)
 
 
-# q="auto" (see _auto_q): probe alternative q values only when the
+# _auto_q: probe alternative q values only when the
 # corpus looks templated — average gram document frequency above this
 # ceiling at q=3. Diverse corpora (sf0.01 customer: avg df 24) skip
 # the probe entirely and keep q=3; the 16× templated replica cell
@@ -198,13 +212,13 @@ def _bag_l1(sig_a: Column, sig_b: Column) -> Column:
 AUTO_Q_DF_CEILING = 64
 AUTO_Q_MAX = 8
 
-# strategy="auto" routes max_dist=2 by key length in two tiers. The
+# max_dist=2 routes by the profiled max key length in two tiers. The
 # deletion side emits 1 + L + C(L, 2) variant keys per string (L=24:
 # 301; L=64: 2,146) while the gram side emits q·d+1 (7-17), so the
 # variant frame grows quadratically with L — but the two corpus
-# classes cross at different lengths (measured r09,
-# scripts/er_route_probe.py: 20k strings + 5% near-dups, deletion vs
-# gram warm best-of-3; full table in SCALE_PROBE.md r09):
+# classes cross at different lengths (measured r09 with a route probe
+# whose last copy is in commit 5850eb7: 20k strings + 5% near-dups,
+# deletion vs gram warm best-of-3; full table in SCALE_PROBE.md r09):
 #   * DIVERSE corpora (gram blocking at its best — 1,000 true pairs,
 #     small gram buckets): L=16 2.5 vs 5.9 s, L=24 5.9 vs 6.8 s,
 #     L=32 11.1 vs 6.6 s, L=48 34.0 vs 4.5 s — deletion's last win is
@@ -224,6 +238,11 @@ DELETION_TEMPLATED_LEN_CEILING = 64
 # estimates scale by the sampling fraction squared, which cancels in
 # the across-q comparison
 AUTO_Q_SAMPLE_MOD = 4
+# Row-count ceiling for broadcasting the narrow (id, s) projection to
+# the string re-attach joins, compared with the profile aggregate's
+# exact count (~5M keys × a few dozen bytes ≈ 160 MB). Above it —
+# billion-key corpora on a cluster — the re-attach shuffles (_verify).
+BROADCAST_KEY_ROWS = 5_000_000
 
 
 def _candidate_estimate(base: DataFrame, q: int, max_dist: int) -> int:
@@ -290,7 +309,7 @@ def _templated_trigger(base: DataFrame) -> bool:
 def _auto_q(
     base: DataFrame,
     max_dist: int,
-    min_len: int | None,
+    min_len: int,
     templated: bool | None = None,
 ) -> tuple[int, bool | None]:
     """Pick q for the Ed-Join path by MEASURED candidate volume.
@@ -314,21 +333,16 @@ def _auto_q(
     admissible q yields the identical exact pair set (pinned by
     test_edit_distance_pairs_auto_q).
 
-    Cost: one min-length aggregate (skipped when the caller already
-    computed it for routing), one (count, approx distinct) trigger
-    aggregate, and — only on templated corpora — one sampled prefix
-    build per admissible q. All linear narrow passes, dwarfed by the
-    candidate join they tune.
+    Cost: ``min_len`` comes from the caller's profile aggregate; then
+    one (count, approx distinct) trigger aggregate and — only on
+    templated corpora — one sampled prefix build per admissible q.
+    All linear narrow passes, dwarfed by the candidate join they tune.
 
     Returns ``(q, templated)`` where ``templated`` is the
     _templated_trigger outcome (None when the probe exited before
     computing it) — reused by the candidate-join salt gate so the
     trigger aggregate never runs twice.
     """
-    if min_len is None:
-        min_len = base.agg(F.min(F.length("s")).alias("m")).first()["m"]
-    if min_len is None:
-        return 3, None
     q_cap = min(AUTO_Q_MAX, min_len // (max_dist + 1))
     if q_cap <= 3:
         return 3, templated
@@ -353,31 +367,22 @@ def _auto_q(
 
 
 def edit_distance_pairs(
-    df: DataFrame,
-    id_col: str,
-    s_col: str,
-    max_dist: int = 1,
-    q: int | str = 3,
-    broadcast_row_limit: int = 5_000_000,
-    size_hint_rows: int | None = None,
-    dedup_candidates: bool | None = None,
-    bag_filter: bool = True,
-    strategy: str = "auto",
-    salt: int | str = "auto",
+    df: DataFrame, id_col: str, s_col: str, max_dist: int = 1
 ) -> DataFrame:
     """All (id_a < id_b) pairs with levenshtein(s_a, s_b) <= max_dist.
 
-    ``strategy`` (r09, VERDICT r08 item 3) picks the d >= 2 candidate
-    generator: ``"deletion"`` forces the d = 2 deletion-neighborhood
-    join, ``"gram"`` forces Ed-Join prefix filtering, ``"auto"``
-    (default) routes max_dist == 2 in two measured tiers (one narrow
-    min/max-length aggregate; the min feeds _auto_q so the gram
-    fallback pays no extra pass): deletion when the longest key is
-    <= DELETION_LEN_CEILING (the diverse-corpus crossover), deletion
-    up to DELETION_TEMPLATED_LEN_CEILING when the templated-corpus
-    trigger additionally fires (gram candidates grow with corpus
-    self-similarity there, so the larger variant frame still wins),
-    gram otherwise. max_dist == 1 always uses the d = 1 deletion join.
+    Routing needs nothing from the caller. One profile aggregate over
+    the (id, s) projection (min length, max length, row count — a Spark
+    job at construction time, see the module docstring) feeds every
+    decision: max_dist == 1 takes the d = 1 deletion join; max_dist ==
+    2 takes the d = 2 deletion join when the longest key is <=
+    DELETION_LEN_CEILING (the diverse-corpus crossover), or <=
+    DELETION_TEMPLATED_LEN_CEILING when the templated-corpus trigger
+    also fires (gram candidates grow with corpus self-similarity
+    there, so the larger variant frame still wins); everything else
+    takes the gram route. The same figures size the deletion join
+    (_deletion_parts_mult), bound the gram route's q (_auto_q) and
+    gate the string re-attach broadcast (_verify).
 
     Completeness: BOTH deletion routes are exact for ALL string
     lengths — no boundary (see module docstring; pinned by
@@ -385,10 +390,11 @@ def edit_distance_pairs(
     route has the standard Ed-Join boundary: a pair is guaranteed
     found only when both strings have ≥ q·(max_dist+1) characters —
     below that, all n−q+1 grams can be destroyed by max_dist edits and
-    no shared prefix gram is forced (strings shorter than ``q``
-    produce no grams at all). Gram-route callers with very short keys
-    should pad, lower ``q``, or brute-force the short stratum
-    separately — or at d = 2 simply use the deletion route.
+    no shared prefix gram is forced (strings shorter than q produce no
+    grams at all). q is 3 unless _auto_q raises it, which it does only
+    while every string keeps the guarantee, so the boundary is
+    3·(max_dist+1) characters. Gram-route callers with very short keys
+    should pad or brute-force the short stratum separately.
 
     Shared plan shape (r06 rewrite): the candidate stream is never
     shuffled between generation and verification. Profiling showed the
@@ -396,133 +402,71 @@ def edit_distance_pairs(
     for 9 s of shuffle, and the two string re-attach joins shuffled the
     candidate set twice more. Now: candidate equi-join → length filter
     → two BROADCAST joins re-attach strings map-side (the (id, s)
-    projection is key-universe-sized; gated by ``broadcast_row_limit``
-    — above it, e.g. billion-key corpora on a cluster, the plan falls
-    back to shuffle joins and re-instates the narrow pre-verification
-    dedup, which IS worth it when the candidate set must shuffle
-    anyway) → banded levenshtein map-side → dedup the matches.
+    projection is key-universe-sized; gated by BROADCAST_KEY_ROWS on
+    the exact row count — above it, e.g. billion-key corpora on a
+    cluster, the plan falls back to shuffle joins and re-instates the
+    narrow pre-verification dedup, which IS worth it when the
+    candidate set must shuffle anyway) → banded levenshtein map-side →
+    dedup the matches. CAVEAT (ADVICE r06): on duplicate-heavy corpora
+    the broadcast path verifies each of an m-duplicate group's m²/2
+    pairs once per shared variant (L+1 times for length-L strings at
+    d=1); exact-dedup such a corpus first.
 
-    The broadcast/shuffle decision is made WITHOUT an eager Spark job
-    (ADVICE r06: the old ``base.count()`` ran a job at plan-construction
-    time): pass ``size_hint_rows`` when the caller knows the key-universe
-    cardinality; otherwise the gate reads Catalyst's optimized-plan
-    ``sizeInBytes`` estimate (metadata-only — derived from file sizes ×
-    projection ratio) against ``broadcast_row_limit`` × a conservative
-    32 B/row for the narrow (id, string) projection.
+    Templated-corpus mitigation (gram route; measured r07→r08,
+    SCALE_PROBE.md d=2 replica cells): gram blocking quality depends
+    on gram DIVERSITY — on a corpus whose strings share a template
+    (boilerplate web text, generated keys), each string's rarest
+    q·(max_dist)+1 grams collide with every template-mate, so the
+    candidate set grows with corpus self-similarity even though the
+    extra candidates all fail verification (16× replicas: output
+    exactly 16×, runtime ~30× before the mitigation). Three
+    defenses, all exact:
 
-    ``dedup_candidates`` controls the PRE-verification candidate dedup.
-    Default ``None`` = automatic: dedup on the shuffle path (the
-    candidate set moves anyway), skip on the broadcast path — profiling
-    on near-unique keys showed the distinct costing 9 s to remove ~10%
-    of candidates. CAVEAT (ADVICE r06): on duplicate-heavy corpora the
-    broadcast path verifies each of an m-duplicate group's m²/2 pairs
-    once per shared variant (L+1 times for length-L strings at d=1);
-    such callers should pass ``dedup_candidates=True`` (or exact-dedup
-    the corpus first, which is strictly better).
-
-    Templated-corpus mitigation (``bag_filter``, default ON for
-    max_dist ≥ 2; measured r07→r08, SCALE_PROBE.md d=2 replica cells):
-    gram blocking quality depends on gram DIVERSITY — on a corpus
-    whose strings share a template (boilerplate web text, generated
-    keys), each string's rarest q·(max_dist)+1 grams collide with
-    every template-mate, so the candidate set grows with corpus
-    self-similarity even though the extra candidates all fail
-    verification (16× replicas: output exactly 16×, runtime ~30×
-    before the mitigation). Two composable defenses, both exact:
-
-    * the bag-distance filter (``bag_filter``; see ``_bag_signature``)
+    * the bag-distance filter (always on; see ``_bag_signature``)
       prunes, inside the candidate-join codegen stage, every candidate
       whose character histograms differ by more than 2·max_dist in L1
       — which is precisely what template-mates' distinguishing regions
       (salts, ids, version stamps) do;
-    * ``q="auto"`` (see ``_auto_q``) detects low gram diversity (avg
-      gram df stops falling as the corpus grows) and raises q while
-      the per-row completeness guarantee provably holds for EVERY
-      string — shrinking the gram buckets candidates are generated
-      FROM, which a pair filter alone cannot do.
+    * ``_auto_q`` detects low gram diversity (avg gram df stops
+      falling as the corpus grows) and raises q while the per-row
+      completeness guarantee provably holds for EVERY string —
+      shrinking the gram buckets candidates are generated FROM, which
+      a pair filter alone cannot do;
+    * the candidate join salts its hot buckets CANDIDATE_SALT ways only
+      when the same trigger fires (ADVICE r08: unconditional salting
+      taxed diverse corpora with a build-side replication they never
+      need); the trigger aggregate runs at most once per call.
 
-    Deletion routes (max_dist = 1 always; max_dist = 2 short keys) are
-    immune to the blowup — variants contain the distinguishing region
-    verbatim, and even ANAGRAM salts (the bag filter's residual
-    exposure: same char bag, >= 3 positions changed) share no variant
-    — so they skip both gram mitigations AND the candidate-join salt
-    (their bucket sizes are near-duplicate-group-sized by
-    construction). The gram route's residual d >= 2 exposure is now
-    only LONG templated keys whose distinguishing regions are
-    anagrams; for those, strip the template before blocking or
-    pre-partition by the template key. Measured on the 16× suffix-
-    salted replica cell (SCALE_PROBE.md r08/r09): r07's ~30× runtime
-    growth fell to ~14× with the r08 gram mitigations and to
-    near-linear with the r09 deletion route.
-
-    ``salt`` gates the gram candidate-join's skew salting (ADVICE
-    r08: the r08 code salted unconditionally, taxing diverse corpora
-    with a CANDIDATE_SALT-fold build-side replication they never
-    need). ``"auto"`` (default) salts only when the templated-corpus
-    trigger fires (avg 3-gram df > AUTO_Q_DF_CEILING — computed at
-    most once, shared with _auto_q); an int forces that salt value.
+    Deletion routes are immune to the blowup — variants contain the
+    distinguishing region verbatim, and even ANAGRAM salts (the bag
+    filter's residual exposure: same char bag, >= 3 positions changed)
+    share no variant — so they skip all three (their bucket sizes are
+    near-duplicate-group-sized by construction). The gram route's
+    residual d >= 2 exposure is only LONG templated keys whose
+    distinguishing regions are anagrams; for those, strip the template
+    before blocking or pre-partition by the template key. Measured on
+    the 16× suffix-salted replica cell (SCALE_PROBE.md r08/r09): r07's
+    ~30× runtime growth fell to ~14× with the r08 gram mitigations and
+    to near-linear with the r09 deletion route.
     """
-    if isinstance(q, str) and q != "auto":
-        raise ValueError(f"q must be an int or 'auto', got {q!r}")
-    if not isinstance(q, str) and (not isinstance(q, int) or q < 1):
-        raise ValueError(f"q must be a positive int or 'auto', got {q!r}")
-    if strategy not in ("auto", "deletion", "gram"):
-        raise ValueError(
-            f"strategy must be 'auto', 'deletion' or 'gram', got {strategy!r}"
-        )
-    if isinstance(salt, str) and salt != "auto":
-        raise ValueError(f"salt must be an int or 'auto', got {salt!r}")
-    if strategy == "deletion" and max_dist > 2:
-        raise ValueError(
-            "strategy='deletion' supports max_dist <= 2 (variant sets "
-            "grow O(len^d)); use strategy='gram' for larger distances"
-        )
+    if (
+        isinstance(max_dist, bool)
+        or not isinstance(max_dist, int)
+        or max_dist < 1
+    ):
+        raise ValueError(f"max_dist must be an int >= 1, got {max_dist!r}")
     base = df.select(F.col(id_col).alias("id"), F.col(s_col).alias("s"))
-    if max_dist == 2 and strategy != "gram":
-        min_len = max_len = n_rows = templated = None
-        if strategy == "auto":
-            # count() rides the same aggregate job (r09): the deletion
-            # route's partition multiplier needs the corpus row count,
-            # and the plan-size estimate is compression-skewed (3.2×
-            # under on the snappy 25-char replica corpus — it mis-sized
-            # the x16 cell's candidate join 8× down, 52→123 s warm)
-            row = base.agg(
-                F.min(F.length("s")).alias("lo"),
-                F.max(F.length("s")).alias("hi"),
-                F.count(F.lit(1)).alias("n"),
-            ).first()
-            min_len, max_len, n_rows = row["lo"], row["hi"], row["n"]
-        use_deletion = strategy == "deletion" or (
-            max_len is not None and max_len <= DELETION_LEN_CEILING
-        )
-        if (
-            not use_deletion
-            and max_len is not None
-            and max_len <= DELETION_TEMPLATED_LEN_CEILING
-        ):
-            # mid-length tier: deletion only when the corpus is
-            # templated (where gram candidates grow with corpus
-            # self-similarity); the trigger outcome feeds the gram
-            # fallback's _auto_q / salt gate so it never runs twice
-            templated = _templated_trigger(base)
-            use_deletion = templated
-        if use_deletion:
-            return _deletion_d2_pairs(
-                base, broadcast_row_limit, size_hint_rows,
-                dedup_candidates, max_len=max_len, n_rows=n_rows,
-            )
-        # gram fallback below reuses the min length computed here
-        if q == "auto":
-            q, templated = _auto_q(base, max_dist, min_len, templated)
-    elif q == "auto":
-        # output-neutral by construction (see _auto_q); the FastSS
-        # path below never uses q, so probe only where it matters
-        if max_dist >= 2:
-            q, templated = _auto_q(base, max_dist, None)
-        else:
-            q, templated = 3, None
-    else:
-        templated = None
+    # the profile aggregate: exact figures, never the plan-size
+    # estimate (compression-skewed 3.2× low on the snappy 25-char
+    # replica corpus — it mis-sized the x16 cell's candidate join 8×
+    # down, 52→123 s warm)
+    row = base.agg(
+        F.min(F.length("s")).alias("lo"),
+        F.max(F.length("s")).alias("hi"),
+        F.count(F.lit(1)).alias("n"),
+    ).first()
+    min_len, max_len, n_rows = row["lo"] or 0, row["hi"] or 0, row["n"]
+    small = n_rows <= BROADCAST_KEY_ROWS
     if max_dist == 1:
         # identity + all single-deletion variants; the CASE guards the
         # Spark sequence(1, 0) descending-not-empty trap for empty
@@ -550,10 +494,21 @@ def edit_distance_pairs(
             ),
             max_dist,
         )
-        return _verify(
-            base, cand_ids, max_dist, broadcast_row_limit,
-            size_hint_rows, dedup_candidates,
-        )
+        return _verify(base, cand_ids, max_dist, small, dedup=not small)
+    templated = None
+    if max_dist == 2:
+        use_deletion = max_len <= DELETION_LEN_CEILING
+        if not use_deletion and max_len <= DELETION_TEMPLATED_LEN_CEILING:
+            # mid-length tier: deletion only when the corpus is
+            # templated (where gram candidates grow with corpus
+            # self-similarity); the trigger outcome feeds the gram
+            # fallback's _auto_q / salt gate so it never runs twice
+            templated = _templated_trigger(base)
+            use_deletion = templated
+        if use_deletion:
+            return _deletion_d2_pairs(base, n_rows, max_len, small)
+    # output-neutral by construction (see _auto_q)
+    q, templated = _auto_q(base, max_dist, min_len, templated)
     prefix_len = q * max_dist + 1
     # NB: Spark's sequence(1, 0) is a DESCENDING [1, 0], not empty — a
     # string shorter than q would emit two junk grams (and every empty
@@ -577,42 +532,28 @@ def edit_distance_pairs(
             Window.partitionBy("id").orderBy("df", "gram")
         ),
     )
-    # the prefix frame carries only (gram, id, len[, sig]): the length
+    # the prefix frame carries only (gram, id, len, sig): the length
     # and bag filters are the sole pre-verification uses of the string,
     # so the candidate join shuffles narrow rows — strings re-attach by
     # id afterwards. The 8-byte bag signature rides along so template-
     # mate candidates die inside the join stage (module comment).
-    narrow = ["id", F.length("s").alias("len")]
-    if bag_filter:
-        narrow.append(_bag_signature(F.col("s")).alias("sig"))
     prefix = ranked.filter(F.col("rn") <= prefix_len).select(
-        F.col("gram").alias("k"), *narrow
+        F.col("gram").alias("k"),
+        "id",
+        F.length("s").alias("len"),
+        _bag_signature(F.col("s")).alias("sig"),
     )
-    if salt == "auto":
-        # ADVICE r08: salt only when the corpus is actually templated
-        # (hot prefix-gram buckets come from a saturated gram
-        # vocabulary); diverse corpora keep salt=1 and skip the
-        # CANDIDATE_SALT-fold build-side replication. Reuses _auto_q's
-        # trigger outcome when q="auto" already computed it.
-        if templated is None:
-            templated = _templated_trigger(base)
-        salt = CANDIDATE_SALT if templated else 1
+    if templated is None:
+        templated = _templated_trigger(base)
     cand_ids = _candidates_on(
-        prefix, max_dist, bag=bag_filter, salt=salt
+        prefix, max_dist, bag=True,
+        salt=CANDIDATE_SALT if templated else 1,
     )
-    return _verify(
-        base, cand_ids, max_dist, broadcast_row_limit,
-        size_hint_rows, dedup_candidates,
-    )
+    return _verify(base, cand_ids, max_dist, small, dedup=not small)
 
 
 def _deletion_d2_pairs(
-    base: DataFrame,
-    broadcast_row_limit: int,
-    size_hint_rows: int | None,
-    dedup_candidates: bool | None,
-    max_len: int | None = None,
-    n_rows: int | None = None,
+    base: DataFrame, n_rows: int, max_len: int, small: bool
 ) -> DataFrame:
     """d = 2 deletion-neighborhood candidate join (r09; VERDICT r08
     item 3 — the "generate fewer candidates" escape from the gram
@@ -668,22 +609,13 @@ def _deletion_d2_pairs(
 
     With multiplicity ~1 the pre-verification dedup no longer pays
     for itself (the trailing output ``distinct`` already
-    canonicalizes), so ``dedup_candidates=None`` → False here; pass
-    True explicitly for duplicate-heavy corpora (where the (0,0)/
-    shift-coincidence arms still fan out) — or exact-dedup first,
-    which is strictly better.
+    canonicalizes), so this route never runs it, on either _verify
+    path; duplicate-heavy corpora (where the (0,0)/shift-coincidence
+    arms still fan out) should be exact-deduped first.
     """
-    parts_mult = _deletion_parts_mult(
-        base, n_rows if n_rows is not None else size_hint_rows, max_len
-    )
-    cand_ids = _deletion_d2_candidates(base, parts_mult=parts_mult)
-    if dedup_candidates is None:
-        dedup_candidates = False
-    return _verify(
-        base, cand_ids, 2, broadcast_row_limit,
-        size_hint_rows, dedup_candidates,
-        dedup_parts_mult=parts_mult,
-    )
+    parts_mult = _deletion_parts_mult(base, n_rows, max_len)
+    cand_ids = _deletion_d2_candidates(base, parts_mult)
+    return _verify(base, cand_ids, 2, small, dedup=False)
 
 
 # Per-width variant-volume ceiling under which the d=2 deletion
@@ -702,23 +634,14 @@ def _deletion_d2_pairs(
 _DELETION_MULT1_VARIANT_CEILING = 100_000
 
 
-def _deletion_parts_mult(
-    base: DataFrame, n_rows: int | None, max_len: int | None
-) -> int:
+def _deletion_parts_mult(base: DataFrame, n_rows: int, max_len: int) -> int:
     """Partition-count multiplier for the d=2 deletion candidate join:
-    exact variant volume (rows × (1 + L + C(L,2))) against the measured
-    per-width ceiling above. ``n_rows`` must be an exact or
-    caller-supplied count — the auto route piggybacks count() on its
-    min/max-length aggregate for free. A metadata plan-size row
-    estimate was tried here and REVERTED: parquet compression skewed
-    it 3.2× low on the snappy replica corpus, silently
-    under-parallelizing the x16 cell (52 → 123 s warm). Unknown rows
-    or length (explicit strategy="deletion" callers) fall back to the
-    DELETION_PARTS_MULT ceiling — over-parallelizing is the safe
-    direction (the r09 heap finding), under-parallelizing re-creates
-    it."""
-    if max_len is None or max_len <= 0 or n_rows is None or n_rows <= 0:
-        return DELETION_PARTS_MULT
+    exact variant volume (rows × (1 + L + C(L,2)), both from the
+    profile aggregate) against the measured per-width ceiling above. A
+    metadata plan-size row estimate was tried here and REVERTED:
+    parquet compression skewed it 3.2× low on the snappy replica
+    corpus, silently under-parallelizing the x16 cell (52 → 123 s
+    warm)."""
     variants = n_rows * (1 + max_len + max_len * (max_len - 1) // 2)
     width = shuffle_partitions(base.sparkSession)
     if variants <= _DELETION_MULT1_VARIANT_CEILING * width:
@@ -726,9 +649,7 @@ def _deletion_parts_mult(
     return DELETION_PARTS_MULT
 
 
-def _deletion_d2_candidates(
-    base: DataFrame, parts_mult: int | None = None
-) -> DataFrame:
+def _deletion_d2_candidates(base: DataFrame, parts_mult: int) -> DataFrame:
     """The d=2 deletion route's candidate pair stream (pre-dedup,
     pre-verification) — split out so tests can pin the canonical-
     witness multiplicity bound directly.
@@ -743,11 +664,7 @@ def _deletion_d2_candidates(
     explode at cluster width instead of file-read parallelism (a
     1-file corpus otherwise generates on ONE core), for the price of
     exchanging the narrow pre-explode (id, s) rows. ``parts_mult``
-    defaults to the cell-measured DELETION_PARTS_MULT ceiling; the
-    production path passes the input-derived value from
-    _deletion_parts_mult instead."""
-    if parts_mult is None:
-        parts_mult = DELETION_PARTS_MULT
+    comes from _deletion_parts_mult."""
     base = base.repartition(shuffle_partitions(base.sparkSession))
     variants = F.concat(
         F.array(
@@ -803,13 +720,13 @@ CANDIDATE_SALT = 16
 # levenshtein on the broadcast path) pipelines INSIDE this stage
 CANDIDATE_PARTS_MULT = 8
 # partition-count multiplier for the d=2 deletion route's candidate
-# join AND its pre-verification dedup (see _deletion_d2_pairs): the
-# r09 heap-sensitivity finding showed both stages' per-task working
-# sets (SMJ sorts of the ~L²/2-per-string variant frame; dedup hash
-# tables over the multiplicity-inflated candidate stream) spill below
+# join above _DELETION_MULT1_VARIANT_CEILING (see _deletion_parts_mult):
+# the r09 heap-sensitivity finding showed its per-task working set
+# (SMJ sorts of the ~L²/2-per-string variant frame) spills below
 # ~100g at the default 32-partition width on the x16 replica cell —
 # finer tasks shrink the concurrent working set instead of demanding
-# a bigger heap. Value measured by scripts/er_deletion_width_probe.py.
+# a bigger heap. Value measured by a width probe whose last copy is
+# in commit 5850eb7.
 DELETION_PARTS_MULT = 8
 
 # Witness-canonicalization metadata packing for the d=2 deletion route
@@ -822,8 +739,8 @@ DELETION_PARTS_MULT = 8
 # Positions fit 8 bits, so the canonical-witness filter only engages
 # for strings up to _META_MAX_LEN — longer equal-length pairs keep
 # every arm (the pre-canonicalization behavior, still exact). The
-# auto router caps the deletion route at 64 chars anyway; the gate
-# only matters for explicit strategy="deletion" calls.
+# router caps the deletion route at DELETION_TEMPLATED_LEN_CEILING
+# (64) chars, so the gate only engages when that constant is raised.
 _META_MAX_LEN = 255
 _DEL1_META = (
     "(shiftleft(CAST(1 AS BIGINT), 58)"
@@ -953,29 +870,23 @@ def _candidates_on(
     return cand.select("id_a", "id_b")
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's optimized-plan size estimate for ``df`` — metadata
-    only (file sizes × projection ratio, or runtime stats for cached /
-    checkpointed inputs); runs NO Spark job, so building the plan stays
-    side-effect-free (ADVICE r06 on the old construction-time count)."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
-# conservative serialized width of the narrow (id, string-key) row used
-# to convert broadcast_row_limit (rows) into a sizeInBytes gate
-_BYTES_PER_KEY_ROW = 32
-
-
 def _verify(
     base: DataFrame,
     cand_ids: DataFrame,
     max_dist: int,
-    broadcast_row_limit: int,
-    size_hint_rows: int | None = None,
-    dedup_candidates: bool | None = None,
-    dedup_parts_mult: int = 1,
+    small: bool,
+    dedup: bool,
 ) -> DataFrame:
     """Re-attach strings and run the exact verification.
+
+    ``small`` (row count <= BROADCAST_KEY_ROWS) broadcasts the (id, s)
+    projection to both re-attach joins; otherwise they shuffle.
+    ``dedup`` runs the narrow pre-verification candidate dedup. The
+    FastSS and gram routes set it exactly on the shuffle path: there
+    the candidate set must move anyway, so the dedup pays for itself,
+    while on the broadcast path it was measured at 9 s to remove ~10%
+    on near-unique keys (see the public docstring's duplicate-heavy
+    caveat). The deletion route never sets it (_deletion_d2_pairs).
 
     Thresholded levenshtein: banded O(len·d) with early exit instead
     of the full O(len²) DP — ~2× at d=1 on 18-char keys, growing with
@@ -984,36 +895,19 @@ def _verify(
     """
     na = base.select(F.col("id").alias("id_a"), F.col("s").alias("s_a"))
     nb = base.select(F.col("id").alias("id_b"), F.col("s").alias("s_b"))
-    if size_hint_rows is not None:
-        small = size_hint_rows <= broadcast_row_limit
-    else:
-        small = (
-            _plan_size_bytes(na)
-            <= broadcast_row_limit * _BYTES_PER_KEY_ROW
-        )
-    if dedup_candidates is None:
-        # shuffle path: the candidate set must move anyway, so the
-        # narrow pre-verification dedup pays for itself; broadcast
-        # path skips it (measured: 9 s to remove ~10% on near-unique
-        # keys — see the public docstring's duplicate-heavy caveat)
-        dedup_candidates = not small
     if small:
         na, nb = F.broadcast(na), F.broadcast(nb)
-    if dedup_candidates:
+    if dedup:
         # Pin the dedup exchange's width (ADVICE r08): a bare
         # distinct() on this narrow two-long frame is AQE
-        # byte-coalescible — on the broadcast path (where the
-        # downstream joins add no further exchange) a coalesce to 1-2
-        # partitions would pipeline the banded levenshtein on those
-        # few tasks, the same defect class as the 501 s verify-stage
+        # byte-coalescible, and a coalesce to 1-2 partitions would
+        # run the dedup over the whole candidate stream on those few
+        # tasks — the same defect class as the 501 s verify-stage
         # collapse r07 fixed. The user-specified repartition is exempt
         # from coalescing, and the aggregate reuses its partitioning
         # (same keys), so this pins width without adding an exchange
-        # the distinct wouldn't have had. ``dedup_parts_mult`` > 1
-        # (deletion route) widens the dedup so its per-task hash
-        # tables fit in memory on multiplicity-inflated candidate
-        # streams (r09 heap-sensitivity finding).
-        n_parts = shuffle_partitions(cand_ids.sparkSession) * dedup_parts_mult
+        # the distinct wouldn't have had.
+        n_parts = shuffle_partitions(cand_ids.sparkSession)
         cand_ids = cand_ids.repartition(
             n_parts, "id_a", "id_b"
         ).dropDuplicates(["id_a", "id_b"])

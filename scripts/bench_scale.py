@@ -24,11 +24,12 @@ er_ktruss_probe.py / scale_probe.py):
                        those candidates inside the join stage; target
                        x16 <= 8× of x1 with an IDENTICAL pair set
                        (x16 true pairs must stay exactly 16× of x1).
-                       Since r09 this cell pins strategy="gram" — it
+                       Since r09 this cell forces the gram route (both
+                       deletion length ceilings set to 0) — it
                        measures the gram mitigations' floor, which the
                        verdict's measured-floor analysis showed cannot
                        reach the <= 8× target on this corpus.
-  er_deletion_d2_x1/x16  The SAME corpus through the r09 auto route
+  er_deletion_d2_x1/x16  The SAME corpus through the default route
                        (deletion-neighborhood d=2 generator): template
                        mates share no <= 2-deletion variant — including
                        the anagram code pair the bag filter cannot
@@ -38,7 +39,9 @@ er_ktruss_probe.py / scale_probe.py):
                        pairs).
   ktruss_grid_x16      2D-grid k-truss support kernel on the 16×
                        replicated FRIEND_OF graph (the cell whose r06
-                       join fallback died in a ~700 GB spill).
+                       join fallback died in a ~700 GB spill), forced
+                       with BROADCAST_ADJ_ENTRY_LIMIT = 0 and an
+                       infinite ORIENTED_DEG2_RATIO.
   minhash_lsh_x16      MinHash-LSH banding (xxhash64) on 16× shingle-
                        salted documents.
   spine_q18_x16        Q18 fact-fact join on the bucketed order spine
@@ -172,6 +175,7 @@ def main() -> None:
     spark = get_spark("bench-scale")
     from er_ktruss_probe import build_er_input, build_graph_input
 
+    from neo4j_database_spark.operators import er
     from neo4j_database_spark.operators.er import edit_distance_pairs
 
     cells: dict[str, dict] = {}
@@ -201,7 +205,7 @@ def main() -> None:
 
         def fastss():
             return edit_distance_pairs(
-                cust, "c_custkey", "c_name", max_dist=1, q=3
+                cust, "c_custkey", "c_name", max_dist=1
             )
 
         runs = [time_noop(fastss()) for _ in range(3)]
@@ -221,25 +225,28 @@ def main() -> None:
         cust = spark.read.parquet(path)
 
         def edjoin():
-            # q="auto" + the bag filter ARE the r08 templated-corpus
+            # the q probe + the bag filter ARE the r08 templated-corpus
             # mitigation under test; r07's 631-656 s baseline ran the
-            # same cell with fixed q=3 and no filter. strategy="gram"
-            # pinned since r09 (auto now routes these 25-char keys to
-            # the deletion generator — measured by er_deletion_d2).
+            # same cell with fixed q=3 and no filter. The router sends
+            # these 25-char keys to the deletion generator (measured by
+            # er_deletion_d2), so the length ceilings are zeroed below.
             return edit_distance_pairs(
-                cust,
-                "c_custkey",
-                "c_name",
-                max_dist=2,
-                q="auto",
-                strategy="gram",
+                cust, "c_custkey", "c_name", max_dist=2
             )
 
-        runs = [time_noop(edjoin()) for _ in range(2)]
+        ceilings = er.DELETION_LEN_CEILING, er.DELETION_TEMPLATED_LEN_CEILING
+        er.DELETION_LEN_CEILING = er.DELETION_TEMPLATED_LEN_CEILING = 0
+        try:
+            runs = [time_noop(edjoin()) for _ in range(2)]
+            rows = edjoin().count()
+        finally:
+            er.DELETION_LEN_CEILING, er.DELETION_TEMPLATED_LEN_CEILING = (
+                ceilings
+            )
         cells[name] = {
             "cold_s": round(runs[0], 2),
             "warm_s": round(min(runs[1:]), 2),
-            "rows": edjoin().count(),
+            "rows": rows,
         }
         print(f"{name}: {cells[name]}", flush=True)
         _flush(round_no, sf_dir, cells, load_start, busy)
@@ -252,7 +259,7 @@ def main() -> None:
         cust = spark.read.parquet(path)
 
         def deljoin():
-            # the r09 auto route: 25-char keys -> deletion-neighborhood
+            # the default route: 25-char keys -> deletion-neighborhood
             # d=2 generator (VERDICT r08 item 3)
             return edit_distance_pairs(
                 cust, "c_custkey", "c_name", max_dist=2
@@ -268,6 +275,7 @@ def main() -> None:
         _flush(round_no, sf_dir, cells, load_start, busy)
 
     if want("ktruss_grid_x16"):
+        from neo4j_database_spark.graph import algorithms as galg
         from neo4j_database_spark.graph.algorithms import ktruss_edges
         from neo4j_database_spark.graph.model import (
             GraphModel,
@@ -286,13 +294,21 @@ def main() -> None:
         # were cold-only — the two are not comparable; record both so
         # the busy-box-vs-regression question never recurs)
         runs = []
-        for _ in range(2):
-            g = GraphModel(
-                persons=persons, houses=houses, edges=friend_edges(persons)
-            )
-            t0 = time.perf_counter()
-            n_edges = ktruss_edges(g, strategy="grid").count()
-            runs.append(round(time.perf_counter() - t0, 2))
+        limits = galg.BROADCAST_ADJ_ENTRY_LIMIT, galg.ORIENTED_DEG2_RATIO
+        galg.BROADCAST_ADJ_ENTRY_LIMIT = 0
+        galg.ORIENTED_DEG2_RATIO = float("inf")
+        try:
+            for _ in range(2):
+                g = GraphModel(
+                    persons=persons,
+                    houses=houses,
+                    edges=friend_edges(persons),
+                )
+                t0 = time.perf_counter()
+                n_edges = ktruss_edges(g).count()
+                runs.append(round(time.perf_counter() - t0, 2))
+        finally:
+            galg.BROADCAST_ADJ_ENTRY_LIMIT, galg.ORIENTED_DEG2_RATIO = limits
         cells["ktruss_grid_x16"] = {
             "cold_s": runs[0],
             "warm_s": runs[1],

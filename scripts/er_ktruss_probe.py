@@ -120,7 +120,7 @@ def main() -> None:
 
     from neo4j_database_spark.operators.er import edit_distance_pairs
 
-    print("== FastSS ER (edit_distance_pairs d=1 q=3) ==", flush=True)
+    print("== FastSS ER (edit_distance_pairs d=1) ==", flush=True)
     for mult in (1, 16, 64):
         path = build_er_input(spark, sf_dir, mult)
         cust = spark.read.parquet(path)
@@ -129,12 +129,12 @@ def main() -> None:
             runs.append(
                 time_noop(
                     edit_distance_pairs(
-                        cust, "c_custkey", "c_name", max_dist=1, q=3
+                        cust, "c_custkey", "c_name", max_dist=1
                     )
                 )
             )
         n_pairs = edit_distance_pairs(
-            cust, "c_custkey", "c_name", max_dist=1, q=3
+            cust, "c_custkey", "c_name", max_dist=1
         ).count()
         print(
             f"er x{mult}: cold {runs[0]:.2f}s warm {min(runs[1:]):.2f}s "

@@ -554,21 +554,44 @@ def test_ktruss_grid_peeling_cascades(spark, monkeypatch):
     assert got == {(f"N{a}", f"N{b}"): 2 for a, b in clique}
 
 
-def test_ktruss_oriented_strategy_parity(spark, sf_dir):
-    """strategy="oriented" (degree-ordered triangle enumeration) is
-    byte-identical to the default edge-iterator on the real sf graph
-    and on the multi-round clique+bowtie cascade."""
+def _ktruss_routed(monkeypatch, g, route, **kw):
+    """ktruss_edges rows with ``route`` forced through the routing
+    constants ("default" leaves them alone), plus the support kernels
+    a spy saw run — proof the forced route was taken."""
+    seen = set()
+    with monkeypatch.context() as m:
+        for name in ("_oriented_support", "_grid_support"):
+
+            def spy(*args, _kernel=getattr(alg, name), _name=name):
+                seen.add(_name)
+                return _kernel(*args)
+
+            m.setattr(alg, name, spy)
+        if route == "oriented":
+            m.setattr(alg, "ORIENTED_DEG2_RATIO", 0)
+        elif route in ("broadcast", "grid"):
+            m.setattr(alg, "ORIENTED_DEG2_RATIO", float("inf"))
+        if route == "grid":
+            m.setattr(alg, "BROADCAST_ADJ_ENTRY_LIMIT", 0)
+        rows = sorted(
+            (r.a_name, r.b_name, r.support)
+            for r in alg.ktruss_edges(g, **kw).collect()
+        )
+    return rows, seen
+
+
+def test_ktruss_oriented_strategy_parity(spark, sf_dir, monkeypatch):
+    """The oriented route (degree-ordered triangle enumeration, forced
+    with ORIENTED_DEG2_RATIO = 0) is byte-identical to the default
+    edge-iterator on the real sf graph and on the multi-round
+    clique+bowtie cascade."""
     from neo4j_database_spark.graph.model import build_graph
 
     g = build_graph(spark, sf_dir)
-    base = sorted(
-        (r.a_name, r.b_name, r.support)
-        for r in alg.ktruss_edges(g).collect()
-    )
-    oriented = sorted(
-        (r.a_name, r.b_name, r.support)
-        for r in alg.ktruss_edges(g, strategy="oriented").collect()
-    )
+    base, seen = _ktruss_routed(monkeypatch, g, "default")
+    assert "_oriented_support" not in seen
+    oriented, seen = _ktruss_routed(monkeypatch, g, "oriented")
+    assert seen == {"_oriented_support"}
     assert oriented == base and len(base) > 0
 
     persons = spark.createDataFrame(
@@ -586,15 +609,14 @@ def test_ktruss_oriented_strategy_parity(spark, sf_dir):
         houses=persons.select(F.col("house").alias("name")).distinct(),
         edges=edges,
     )
-    got = {
-        (r.a_name, r.b_name): r.support
-        for r in alg.ktruss_edges(tiny, k=4, strategy="oriented").collect()
-    }
-    assert got == {(f"N{a}", f"N{b}"): 2 for a, b in clique}
+    got, seen = _ktruss_routed(monkeypatch, tiny, "oriented", k=4)
+    assert seen == {"_oriented_support"}
+    assert got == sorted((f"N{a}", f"N{b}", 2) for a, b in clique)
 
 
 def _hub_graph(spark, n_hubs=6, spokes=40):
-    """Miniature of scripts/ktruss_hub_probe.py: pure stars (zero
+    """Miniature of the r07 hub-graph probe (SCALE_PROBE.md; its
+    script's last copy is in commit 5850eb7): pure stars (zero
     triangles) + a 6-clique that survives as the 5-truss."""
     clique_ids = list(range(1, 7))
     hub_ids = list(range(100, 100 + n_hubs))
@@ -624,8 +646,8 @@ def _hub_graph(spark, n_hubs=6, spokes=40):
     )
 
 
-def test_ktruss_auto_router(spark, sf_dir):
-    """strategy="auto"'s skew probe (VERDICT r07 item 2) routes each
+def test_ktruss_auto_router(spark, sf_dir, monkeypatch):
+    """ktruss_edges's skew probe (VERDICT r07 item 2) routes each
     measured regime correctly WITHOUT caller knowledge:
 
     - hub graph (stars + small clique): Σ deg² / Σ outdeg² in the
@@ -633,8 +655,9 @@ def test_ktruss_auto_router(spark, sf_dir):
     - sf FRIEND_OF cliques (uniform degree): ratio ≈ 4 → stays on the
       edge-iterator family (ORIENTED_DEG2_RATIO = 10 sits above the
       uniform-degree floor);
-    and every explicit strategy is byte-identical to auto on the hub
-    graph, so routing can never change the answer.
+    and every route forced through ORIENTED_DEG2_RATIO and
+    BROADCAST_ADJ_ENTRY_LIMIT is byte-identical to the default on the
+    hub graph, so routing can never change the answer.
     """
     from neo4j_database_spark.graph.model import build_graph
 
@@ -664,44 +687,20 @@ def test_ktruss_auto_router(spark, sf_dir):
     _, gd2, god2 = alg._degree_skew_probe(ge, True)
     assert gd2 <= alg.ORIENTED_DEG2_RATIO * god2  # stays edge-iterator
 
-    results = {
-        s: sorted(
-            (r.a_name, r.b_name, r.support)
-            for r in alg.ktruss_edges(hub, strategy=s).collect()
-        )
-        for s in ("auto", "broadcast", "grid", "oriented")
+    expected_kernels = {
+        "default": {"_oriented_support"},
+        "broadcast": set(),
+        "grid": {"_grid_support"},
+        "oriented": {"_oriented_support"},
     }
-    assert len(results["auto"]) == 15  # the 6-clique survives as 5-truss
+    results = {}
+    for route, kernels in expected_kernels.items():
+        results[route], seen = _ktruss_routed(monkeypatch, hub, route)
+        assert seen == kernels, route
+    assert len(results["default"]) == 15  # the 6-clique survives as 5-truss
     assert (
-        results["auto"]
+        results["default"]
         == results["broadcast"]
         == results["grid"]
         == results["oriented"]
     )
-
-
-def test_triangle_and_clustering_oriented_parity(spark, sf_dir):
-    """triangle_count and clustering_coefficient with the oriented
-    (compact-forward) strategy are byte-identical to the default
-    wedge-join plans on the real sf graph, for both a sparse
-    (SAME_FAMILY) and a dense (FRIEND_OF) type selection."""
-    from neo4j_database_spark.graph.model import build_graph
-
-    g = build_graph(spark, sf_dir)
-    for types, must_have in ((("SAME_FAMILY",), False), (("FRIEND_OF",), True)):
-        n_default = alg.triangle_count(g, types=types).first()["n_triangles"]
-        n_oriented = alg.triangle_count(
-            g, types=types, strategy="oriented"
-        ).first()["n_triangles"]
-        assert n_oriented == n_default, types
-        if must_have:  # the clique type is triangle-dense at any sf
-            assert n_default > 0
-    base = [
-        tuple(r)
-        for r in alg.clustering_coefficient(g).collect()
-    ]
-    oriented = [
-        tuple(r)
-        for r in alg.clustering_coefficient(g, strategy="oriented").collect()
-    ]
-    assert oriented == base and len(base) > 0

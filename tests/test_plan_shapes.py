@@ -225,7 +225,7 @@ def test_fuzzy_join_plan_broadcast_reattach(spark, sf_dir):
     from neo4j_database_spark.operators.er import edit_distance_pairs
 
     cust = load_table(spark, "customer", sf_dir)
-    df = edit_distance_pairs(cust, "c_custkey", "c_name", max_dist=1, q=3)
+    df = edit_distance_pairs(cust, "c_custkey", "c_name", max_dist=1)
     plan = plan_of(df)
     # >= 2: the two string re-attach joins; at tiny SFs the variant
     # self-join broadcasts too (3 total), at sf0.1 it shuffles
@@ -234,3 +234,86 @@ def test_fuzzy_join_plan_broadcast_reattach(spark, sf_dir):
     # the candidate stream itself must NOT appear as an exchange —
     # only the variant join inputs + the post-verification dedup
     assert plan.count("Exchange hashpartitioning") <= 4
+
+
+# route name -> (max_dist, zero the d=2 deletion length ceilings?)
+ER_ROUTES = {
+    "d1_fastss": (1, False),
+    "d2_deletion": (2, False),
+    "d2_gram": (2, True),
+    "d3_gram": (3, False),
+}
+
+
+@pytest.mark.parametrize("route", list(ER_ROUTES))
+def test_fuzzy_join_forced_shuffle_matches(spark, sf_dir, monkeypatch, route):
+    """BROADCAST_KEY_ROWS = 0 sends every ER route down _verify's
+    shuffle branch: the string re-attach joins stop broadcasting, the
+    FastSS and gram routes gain their pinned pre-verification dedup
+    (the deletion route never runs one), and the rows equal both the
+    default (broadcast) plan's and a brute-force levenshtein scan's.
+    Auto-broadcast is off so only the explicit hints can broadcast."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from neo4j_database_spark.catalog import load_table
+    from neo4j_database_spark.operators import er
+
+    max_dist, gram = ER_ROUTES[route]
+    if gram:
+        monkeypatch.setattr(er, "DELETION_LEN_CEILING", 0)
+        monkeypatch.setattr(er, "DELETION_TEMPLATED_LEN_CEILING", 0)
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        cust = load_table(spark, "customer", sf_dir)
+
+        def run():
+            df = er.edit_distance_pairs(
+                cust, "c_custkey", "c_name", max_dist=max_dist
+            )
+            return plan_of(df), sorted(tuple(r) for r in df.collect())
+
+        plan_bc, rows_bc = run()
+        monkeypatch.setattr(er, "BROADCAST_KEY_ROWS", 0)
+        plan_sh, rows_sh = run()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+
+    def reattach_broadcasts(plan):
+        return len(re.findall(r"BroadcastHashJoin \[id_[ab]#", plan))
+
+    def pinned_dedup(plan):
+        return bool(
+            re.search(
+                r"hashpartitioning\(id_a#\d+L, id_b#\d+L, \d+\), "
+                r"REPARTITION_BY_NUM",
+                plan,
+            )
+        )
+
+    assert reattach_broadcasts(plan_bc) == 2
+    assert reattach_broadcasts(plan_sh) == 0
+    assert not pinned_dedup(plan_bc)
+    assert pinned_dedup(plan_sh) == (route != "d2_deletion")
+    assert ("row_number" in plan_sh) == route.endswith("gram")
+
+    names = cust.select(
+        F.col("c_custkey").alias("id"), F.col("c_name").alias("s")
+    )
+    a, b = names.alias("a"), names.alias("b")
+    brute = sorted(
+        tuple(r)
+        for r in a.join(b, F.col("a.id") < F.col("b.id"))
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            F.col("a.s").alias("s_a"),
+            F.col("b.s").alias("s_b"),
+            F.levenshtein("a.s", "b.s").cast("long").alias("dist"),
+        )
+        .filter(F.col("dist") <= max_dist)
+        .collect()
+    )
+    assert rows_sh == rows_bc == brute and brute

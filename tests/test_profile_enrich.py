@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from neo4j_database_spark.operators.profile import profile
@@ -161,20 +162,21 @@ def test_edit_distance_pairs_complete_vs_bruteforce(spark):
     assert fast == brute and len(brute) > 0
 
 
-def test_edit_distance_pairs_short_string_contract(spark):
-    """Both strategies' completeness contracts, pinned.
+def test_edit_distance_pairs_short_string_contract(spark, monkeypatch):
+    """Both route families' completeness contracts, pinned.
 
     max_dist=1 (deletion-neighborhood since r06): EXACT for all string
     lengths — no boundary; empty strings pair via identity variants
     (and the CASE guard keeps Spark's descending sequence(1, 0) from
     emitting junk variants for them).
 
-    max_dist>=2 (Ed-Join): pairs guaranteed found only when both
-    strings have >= q*(d+1) chars (n-q+1 grams must exceed the q*d
-    destroyable by d edits). Shorter strings are missed CONSISTENTLY.
+    max_dist>=2 gram route (Ed-Join): pairs guaranteed found only when
+    both strings have >= q*(d+1) chars (n-q+1 grams must exceed the
+    q*d destroyable by d edits). Shorter strings may be missed.
     Also pins the gram-path sequence(1, 0) fix: without the length
     guard every empty/short string emitted junk grams and all empty
     strings collided in one shared quadratic bucket."""
+    from neo4j_database_spark.operators import er
     from neo4j_database_spark.operators.er import edit_distance_pairs
 
     rows = [
@@ -186,26 +188,28 @@ def test_edit_distance_pairs_short_string_contract(spark):
     df = spark.createDataFrame(rows, "id long, s string")
     got = {
         (r.id_a, r.id_b)
-        for r in edit_distance_pairs(df, "id", "s", max_dist=1, q=3).collect()
+        for r in edit_distance_pairs(df, "id", "s", max_dist=1).collect()
     }
     assert got == {(0, 1), (2, 3), (4, 5), (6, 7)}
 
-    # Ed-Join path (d=2, q=2 -> boundary q*(d+1) = 6 chars): the short
-    # ed-2 pair is missed by design, the boundary-length pair is found
+    # gram route forced by zero length ceilings (d=2, q=3 -> boundary
+    # q*(d+1) = 9 chars): the short ed-2 pair shares no 3-gram and is
+    # missed by design, the boundary-length pair is found
     rows2 = [
-        (0, "abc"), (1, "axy"),            # ed 2 below the boundary: miss
-        (2, "abcdef"), (3, "abxyef"),      # ed 2 at the boundary: found
+        (0, "abcdef"), (1, "abxdyf"),        # ed 2 below the boundary: miss
+        (2, "abcdefghi"), (3, "abxdefgyi"),  # ed 2 at the boundary: found
     ]
     df2 = spark.createDataFrame(rows2, "id long, s string")
-    got2 = {
-        (r.id_a, r.id_b)
-        for r in edit_distance_pairs(
-            df2, "id", "s", max_dist=2, q=2, strategy="gram"
-        ).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(er, "DELETION_LEN_CEILING", 0)
+        m.setattr(er, "DELETION_TEMPLATED_LEN_CEILING", 0)
+        got2 = {
+            (r.id_a, r.id_b)
+            for r in edit_distance_pairs(df2, "id", "s", max_dist=2).collect()
+        }
     assert got2 == {(2, 3)}
 
-    # d=2 deletion route (r09, the auto default for short keys): NO
+    # d=2 deletion route (r09, the default for short keys): NO
     # boundary — the same corpus's short ed-2 pair is found, plus the
     # ed-0 empty/short pairs the gram path can never see
     rows3 = rows2 + [(4, ""), (5, ""), (6, "xy"), (7, "yx")]
@@ -233,17 +237,21 @@ def test_edit_distance_pairs_short_string_contract(spark):
     assert {(0, 1), (4, 5), (4, 6)} <= got3
 
 
-def test_edit_distance_pairs_bag_filter_exact(spark):
+def test_edit_distance_pairs_bag_filter_exact(spark, monkeypatch):
     """The templated-corpus bag filter (r08) loses NO pairs.
 
-    The d=2 Ed-Join path with bag_filter on (default) must return the
-    exact brute-force pair set — including substitution, indel, and
-    mixed edits, saturated histograms (len > 15 repeats of a class),
-    and non-ASCII chars (outside every histogram class). Contract
-    pinned both ways: bag on == bag off == brute force.
+    The d=2 Ed-Join route (forced by zero length ceilings), whose bag
+    filter is always on, must return the exact brute-force pair set —
+    including substitution, indel, and mixed edits, saturated
+    histograms (len > 15 repeats of a class), and non-ASCII chars
+    (outside every histogram class).
     """
+    from neo4j_database_spark.operators import er
     from neo4j_database_spark.operators.er import edit_distance_pairs
     from pyspark.sql import functions as F
+
+    monkeypatch.setattr(er, "DELETION_LEN_CEILING", 0)
+    monkeypatch.setattr(er, "DELETION_TEMPLATED_LEN_CEILING", 0)
 
     rows = [
         # templated block: shared 12-char template + 3-char salt whose
@@ -260,18 +268,10 @@ def test_edit_distance_pairs_bag_filter_exact(spark):
         (108, "naïve-résumé-x"), (109, "naïve-résumé-y"),  # non-ASCII
     ]
     df = spark.createDataFrame(rows, "id long, s string")
-    on = {
-        (r.id_a, r.id_b)
-        for r in edit_distance_pairs(
-            df, "id", "s", max_dist=2, strategy="gram"
-        ).collect()
-    }
-    off = {
-        (r.id_a, r.id_b)
-        for r in edit_distance_pairs(
-            df, "id", "s", max_dist=2, bag_filter=False, strategy="gram"
-        ).collect()
-    }
+    gram = edit_distance_pairs(df, "id", "s", max_dist=2)
+    plan = gram._jdf.queryExecution().optimizedPlan().toString()
+    assert "row_number" in plan  # the gram route ran
+    got = {(r.id_a, r.id_b) for r in gram.collect()}
     a, b = df.alias("a"), df.alias("b")
     brute = {
         (r.id_a, r.id_b)
@@ -284,7 +284,7 @@ def test_edit_distance_pairs_bag_filter_exact(spark):
         .filter(F.col("d") <= 2)
         .collect()
     }
-    assert on == off == brute
+    assert got == brute
     assert {(100, 101), (106, 107), (108, 109)} <= brute
 
 
@@ -324,20 +324,25 @@ def test_bag_signature_prunes_template_mates(spark):
     assert pruned == 5
 
 
-def test_edit_distance_pairs_auto_q(spark):
-    """q="auto" (r08 templated-corpus mitigation) is output-neutral:
-    the escalation only proceeds while EVERY string keeps the
-    q·(max_dist)+1-gram completeness guarantee, so any chosen q yields
-    the identical exact pair set. Pinned: a low-gram-diversity corpus
-    (one shared template, high avg df) escalates q above 3 yet returns
-    exactly the q=3 / brute-force pairs; a corpus with one short
-    string refuses to escalate (the guard, not the ceiling, binds).
+def test_edit_distance_pairs_auto_q(spark, monkeypatch):
+    """The gram route's q probe (_auto_q, the r08 templated-corpus
+    mitigation) is output-neutral: the escalation only proceeds while
+    EVERY string keeps the q·(max_dist)+1-gram completeness guarantee,
+    so any chosen q yields the identical exact pair set. Pinned: a
+    low-gram-diversity corpus (one shared template, high avg df)
+    escalates q above 3 yet returns exactly the q=3 (AUTO_Q_MAX = 3) /
+    brute-force pairs; a corpus with one short string refuses to
+    escalate (the guard, not the ceiling, binds).
     """
+    from neo4j_database_spark.operators import er
     from neo4j_database_spark.operators.er import (
         _auto_q,
         edit_distance_pairs,
     )
     from pyspark.sql import functions as F
+
+    monkeypatch.setattr(er, "DELETION_LEN_CEILING", 0)
+    monkeypatch.setattr(er, "DELETION_TEMPLATED_LEN_CEILING", 0)
 
     # 600 30-char binary strings sharing a 20-char leading-zero
     # template: 3-grams saturate (8 distinct, avg df >> 64 -> the
@@ -347,25 +352,21 @@ def test_edit_distance_pairs_auto_q(spark):
     rows = [(i, f"{i:020b}{i * i % 1024:010b}") for i in range(600)]
     df = spark.createDataFrame(rows, "id long, s string")
     base = df.select(F.col("id"), F.col("s"))
-    q, templated = _auto_q(
-        base.select("id", F.col("s").alias("s")), 2, None
-    )
+    q, templated = _auto_q(base, 2, 30)
     assert q > 3  # low diversity detected, larger q measured cheaper
     assert templated is True
     assert q * 3 <= 30  # and the guarantee still holds for every row
 
     auto = {
         (r.id_a, r.id_b)
-        for r in edit_distance_pairs(
-            df, "id", "s", max_dist=2, q="auto", strategy="gram"
-        ).collect()
+        for r in edit_distance_pairs(df, "id", "s", max_dist=2).collect()
     }
-    fixed = {
-        (r.id_a, r.id_b)
-        for r in edit_distance_pairs(
-            df, "id", "s", max_dist=2, strategy="gram"
-        ).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(er, "AUTO_Q_MAX", 3)  # caps the probe at q=3
+        fixed = {
+            (r.id_a, r.id_b)
+            for r in edit_distance_pairs(df, "id", "s", max_dist=2).collect()
+        }
     a, b = df.alias("a"), df.alias("b")
     brute = {
         (r.id_a, r.id_b)
@@ -384,15 +385,16 @@ def test_edit_distance_pairs_auto_q(spark):
     short = df.unionByName(
         spark.createDataFrame([(999, "ninechars")], "id long, s string")
     ).select(F.col("id"), F.col("s").alias("s"))
-    assert _auto_q(short, 2, None) == (3, None)
+    assert _auto_q(short, 2, 9) == (3, None)
 
 
-def test_edit_distance_pairs_d2_deletion_complete(spark):
+def test_edit_distance_pairs_d2_deletion_complete(spark, monkeypatch):
     """The r09 d=2 deletion-neighborhood generator is COMPLETE: on a
     varied corpus (substitutions, 1- and 2-char indels, mixed edits,
-    duplicate strings, short strings) the auto route (deletion for
+    duplicate strings, short strings) the default route (deletion for
     these short keys) returns exactly the brute-force pair set, and
-    forcing either strategy on gram-complete-length keys agrees."""
+    forcing either route on gram-complete-length keys agrees."""
+    from neo4j_database_spark.operators import er
     from neo4j_database_spark.operators.er import edit_distance_pairs
     from pyspark.sql import functions as F
 
@@ -428,25 +430,27 @@ def test_edit_distance_pairs_d2_deletion_complete(spark):
     }
     assert got == brute and len(brute) > 50
     assert got[(208, 209)] == 0 and got[(200, 204)] == 2
-    # forced-strategy parity where the gram guarantee holds for every
-    # string (all >= q*(d+1) = 9 chars)
+    # forced-route parity where the gram guarantee holds for every
+    # string (all >= q*(d+1) = 9 chars): huge ceilings force deletion,
+    # zero ceilings force gram
     long_df = df.filter(F.length("s") >= 9)
-    dele = {
-        (r.id_a, r.id_b)
-        for r in edit_distance_pairs(
-            long_df, "id", "s", max_dist=2, strategy="deletion"
-        ).collect()
-    }
-    gram = {
-        (r.id_a, r.id_b)
-        for r in edit_distance_pairs(
-            long_df, "id", "s", max_dist=2, strategy="gram"
-        ).collect()
-    }
+
+    def pairs(ceiling):
+        with monkeypatch.context() as m:
+            m.setattr(er, "DELETION_LEN_CEILING", ceiling)
+            m.setattr(er, "DELETION_TEMPLATED_LEN_CEILING", ceiling)
+            out = edit_distance_pairs(long_df, "id", "s", max_dist=2)
+            plan = out._jdf.queryExecution().optimizedPlan().toString()
+            return plan, {(r.id_a, r.id_b) for r in out.collect()}
+
+    plan_del, dele = pairs(10**6)
+    plan_gram, gram = pairs(0)
+    assert "xxhash64" in plan_del and "row_number" not in plan_del
+    assert "row_number" in plan_gram
     assert dele == gram > set()
 
 
-def test_edit_distance_pairs_d2_canonical_witness(spark):
+def test_edit_distance_pairs_d2_canonical_witness(spark, monkeypatch):
     """The r09 witness-canonicalization filter (equal-length arms keep
     only the canonical (0,0)/(1,1)/(2,2) witness — see
     _deletion_d2_pairs) stays COMPLETE on every equal-length ed<=2
@@ -458,6 +462,9 @@ def test_edit_distance_pairs_d2_canonical_witness(spark):
     pairs on a substitution corpus, not the ~30x raw stream)."""
     from neo4j_database_spark.operators import er
     from pyspark.sql import functions as F
+
+    # every call below takes the deletion route, incl. the long keys
+    monkeypatch.setattr(er, "DELETION_LEN_CEILING", 10**6)
 
     rows = [
         # shifts: delete front + insert back (equal length, ed=2)
@@ -485,9 +492,7 @@ def test_edit_distance_pairs_d2_canonical_witness(spark):
     df = spark.createDataFrame(rows, "id long, s string")
     got = {
         (r.id_a, r.id_b): r.dist
-        for r in er.edit_distance_pairs(
-            df, "id", "s", max_dist=2, strategy="deletion"
-        ).collect()
+        for r in er.edit_distance_pairs(df, "id", "s", max_dist=2).collect()
     }
     a, b = df.alias("a"), df.alias("b")
     brute = {
@@ -516,9 +521,7 @@ def test_edit_distance_pairs_d2_canonical_witness(spark):
     )
     big_got = {
         (r.id_a, r.id_b): r.dist
-        for r in er.edit_distance_pairs(
-            big, "id", "s", max_dist=2, strategy="deletion"
-        ).collect()
+        for r in er.edit_distance_pairs(big, "id", "s", max_dist=2).collect()
     }
     assert big_got == {(1, 2): 1, (1, 3): 2, (2, 3): 2}
 
@@ -527,21 +530,17 @@ def test_edit_distance_pairs_d2_canonical_witness(spark):
     # the property the 16x replica cell's dedup-free plan relies on
     sub = df.filter(F.col("id") >= 100)
     base = sub.select(F.col("id"), F.col("s"))
-    uniq = er.edit_distance_pairs(
-        sub, "id", "s", max_dist=2, strategy="deletion"
-    ).count()
-    raw = er._deletion_d2_candidates(base).count()
+    uniq = er.edit_distance_pairs(sub, "id", "s", max_dist=2).count()
+    raw = er._deletion_d2_candidates(base, 1).count()
     assert raw <= 3 * max(uniq, 1)
 
 
-def test_edit_distance_pairs_d2_routing_and_validation(spark):
-    """strategy="auto" routes d=2 by key length (deletion at or under
+def test_edit_distance_pairs_d2_routing_and_validation(spark, monkeypatch):
+    """The router sends d=2 by key length (deletion at or under
     DELETION_LEN_CEILING, gram above), the deletion route skips the
     candidate salt, the gram route salts ONLY templated corpora
-    (ADVICE r08), and bad q/strategy/salt values raise up front
-    (ADVICE r08: q='4' used to flow into string arithmetic)."""
-    import pytest
-
+    (ADVICE r08)."""
+    from neo4j_database_spark.operators import er
     from neo4j_database_spark.operators.er import (
         DELETION_LEN_CEILING,
         DELETION_TEMPLATED_LEN_CEILING,
@@ -572,10 +571,12 @@ def test_edit_distance_pairs_d2_routing_and_validation(spark):
     assert "row_number" in plan_long  # gram route (df-ranked prefixes)
     # diverse corpus -> the templated trigger holds salt at 1
     assert "_salt" not in plan_long
-    # ... and an explicit salt override forces the salted join
-    plan_salted = optimized_plan(
-        edit_distance_pairs(long_df, "id", "s", max_dist=2, salt=4)
-    )
+    # ... and a firing trigger salts the join
+    with monkeypatch.context() as m:
+        m.setattr(er, "_templated_trigger", lambda base: True)
+        plan_salted = optimized_plan(
+            edit_distance_pairs(long_df, "id", "s", max_dist=2)
+        )
     assert "_salt" in plan_salted
 
     # mid-length tier (DELETION_LEN_CEILING < L <= templated ceiling):
@@ -607,18 +608,20 @@ def test_edit_distance_pairs_d2_routing_and_validation(spark):
     )
     assert "row_number" in plan_mid_div
 
-    with pytest.raises(ValueError, match="q must be"):
-        edit_distance_pairs(short, "id", "s", max_dist=2, q="4")
-    with pytest.raises(ValueError, match="q must be"):
-        edit_distance_pairs(short, "id", "s", max_dist=2, q=0)
-    with pytest.raises(ValueError, match="strategy"):
-        edit_distance_pairs(short, "id", "s", max_dist=2, strategy="seg")
-    with pytest.raises(ValueError, match="salt"):
-        edit_distance_pairs(short, "id", "s", max_dist=2, salt="yes")
+
+@pytest.mark.parametrize("max_dist", [0, -1, 1.5, True])
+def test_edit_distance_pairs_rejects_bad_max_dist(spark, max_dist):
+    """max_dist must be an int >= 1. Values below 1 used to fall into
+    the gram route and return wrong pairs silently: 0 lost the
+    identical short pair (1, 2), -1 returned no rows at all."""
+    from neo4j_database_spark.operators.er import edit_distance_pairs
+
+    df = spark.createDataFrame(
+        [(1, "xy"), (2, "xy"), (3, "abcdef"), (4, "abcdef"), (5, "")],
+        "id long, s string",
+    )
     with pytest.raises(ValueError, match="max_dist"):
-        edit_distance_pairs(
-            short, "id", "s", max_dist=3, strategy="deletion"
-        )
+        edit_distance_pairs(df, "id", "s", max_dist=max_dist)
 
 
 def test_duplicated_spans_hand_case(spark, monkeypatch):
