@@ -3,13 +3,13 @@ strings and compile them to DataFrame plans over ``GraphModel``.
 
 The reference ships its entire query surface as Cypher text (26 call
 sites: app.py + get_insert.py + train_fix.py). The serving facade
-re-expresses each endpooint by hand; this package additionally runs the
-READ statements *verbatim* — a user of the reference can paste their
-Cypher and get the same rows from Spark, with Catalyst doing the
-planning. Write statements (MERGE/SET/DELETE) are out of scope here:
-they map onto the deterministic batch upsert machinery in
-``graph.etl`` / ``graph.store`` (SURVEY.md §2.1), which a translation
-layer should call rather than re-implement row-at-a-time.
+re-expresses each endpoint by hand; this package additionally runs the
+reference's statements *verbatim* — a user of the reference can paste
+their Cypher and get the same rows from Spark, with Catalyst doing the
+planning. Reads compile in ``compiler``; write statements
+(MERGE/SET/REMOVE/FOREACH/DELETE) apply in ``writes`` as set-at-a-time
+batch upserts that return a new GraphModel, with edge rows stored per
+the model's contract (``graph.model.orient_edges``).
 """
 
 from neo4j_database_spark.cypher.compiler import run_cypher

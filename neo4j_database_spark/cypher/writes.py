@@ -23,18 +23,19 @@ Deviations, both documented engine invariants rather than bugs:
   deterministic negative id (crc32 of its name), and ``SET p.id = $x``
   is a no-op (the reference stores the API id as a plain property;
   here id IS the storage key);
-- canonical symmetric types (FRIEND_OF / SAME_FAMILY) store one row per
-  unordered pair: ``MERGE (u)-[:FRIEND_OF]->(f)`` canonicalizes before
-  the dedup, so merging both directions yields ONE stored edge — reads
-  through the symmetric view are identical to Neo4j's. Bidirectional
-  types (ENEMY_OF / ROMANTIC_WITH) store BOTH rows, so a one-way MERGE
-  materializes the mirror row too (matching the model invariant that
-  sym_edges only reverses canonical types).
+- edge rows follow the model's storage contract
+  (``graph.model.orient_edges``): canonical symmetric types
+  (FRIEND_OF / SAME_FAMILY) store one row per unordered pair, ordered
+  by name like the rule build, so merging either direction yields the
+  ONE stored edge — reads through the symmetric view are identical to
+  Neo4j's. Bidirectional types (ENEMY_OF / ROMANTIC_WITH) store BOTH
+  rows, so a one-way MERGE materializes the mirror row too.
 
 Everything returns a NEW GraphModel (immutable frames; caller persists
-via graph.store). At 100 TB each apply is a MERGE INTO-shaped plan:
-one broadcast of the (tiny) write batch against the big table, no
-full-table shuffle.
+via graph.store). Node upserts are a MERGE INTO-shaped plan: one
+broadcast of the (tiny) write batch against the big table. An edge
+MERGE still deduplicates the whole edge table per statement
+(``dropDuplicates`` over the union), which is one full-table shuffle.
 """
 
 from __future__ import annotations
@@ -45,11 +46,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from neo4j_database_spark.cypher import parser as P
 from neo4j_database_spark.cypher.compiler import Compiler
-from neo4j_database_spark.graph.model import (
-    BIDIRECTIONAL_TYPES,
-    CANONICAL_TYPES,
-    GraphModel,
-)
+from neo4j_database_spark.graph.model import GraphModel, orient_edges
 
 _PROP_MAP = {"isUser": "is_user"}
 
@@ -479,28 +476,14 @@ def _merge_edges(
             )
             continue
 
-        new = df.select(
-            F.col(f"{a}.id").cast("long").alias("src"),
-            F.col(f"{b}.id").cast("long").alias("dst"),
-            F.lit(rtype).alias("type"),
+        new = orient_edges(
+            df.select(
+                F.col(f"{a}.id").cast("long").alias("src"),
+                F.col(f"{b}.id").cast("long").alias("dst"),
+                F.col(f"{a}.name").alias("src_name"),
+                F.col(f"{b}.name").alias("dst_name"),
+            ),
+            rtype,
         )
-        if rtype in CANONICAL_TYPES:
-            # one stored row per unordered pair (module docstring)
-            new = new.select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-                "type",
-            )
-        elif rtype in BIDIRECTIONAL_TYPES:
-            # these types store BOTH directions (model.py invariant —
-            # sym_edges only reverses canonical types), so a one-way
-            # MERGE must materialize the mirror row too
-            new = new.unionByName(
-                new.select(
-                    F.col("dst").alias("src"),
-                    F.col("src").alias("dst"),
-                    "type",
-                )
-            )
         edges = edges.unionByName(new).dropDuplicates(["src", "dst", "type"])
     return GraphModel(persons=persons, houses=g.houses, edges=edges)

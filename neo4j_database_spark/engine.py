@@ -309,56 +309,36 @@ class WinderEngine:
         predicted = labels[idx] if idx < len(labels) else "Unknown"
 
         if write_back:
-            # S6 writeback against this graph's schema: MERGE the user
-            # node (fresh id, last-writer-wins on name) + chosen edges
-            # (append + dedup). is_user=true marks the node, mirroring
-            # the reference's isUser flag (app.py:105).
-            from neo4j_database_spark.graph.model import with_person_props
+            # S6 writeback (app.py:100-132): the reference's statements
+            # through the Cypher write path, which owns node identity
+            # (MERGE keeps an existing id, mints one for a new name),
+            # the edge storage contract and the per-statement commit.
+            # is_user=true marks the node (app.py:105); species, alive
+            # and image take the ingest defaults (get_insert.py:98-101).
+            from neo4j_database_spark.cypher import apply_cypher_write
 
-            p = with_person_props(self.graph.persons)
-            # MERGE semantics: an existing node keeps its id (so its
-            # edges stay attached); only a truly new user mints one.
-            existing = p.filter(F.col("name") == name).select("id").first()
-            new_id = (
-                existing["id"] if existing else p.agg(F.max("id")).first()[0] + 1
+            props = {
+                "house": predicted,
+                "segment": "USER",
+                "acctbal": 0.0,
+                "species": "human",
+                "gender": "",
+                "alive": True,
+                "image": "",
+                "isUser": True,
+            }
+            g = apply_cypher_write(
+                self.graph,
+                "MERGE (u:Person {name: $name}) SET u += $props",
+                {"name": name, "props": props},
             )
-            user_row = self.spark.createDataFrame(
-                [
-                    (
-                        new_id,
-                        name,
-                        predicted,
-                        "USER",
-                        0.0,
-                        "human",  # species default (get_insert.py:98 analog)
-                        "",
-                        True,  # alive defaults true (get_insert.py:100)
-                        "",  # image defaults '' (get_insert.py:101)
-                        True,  # isUser (app.py:105)
+            for etype, names in lists.items():
+                if names:
+                    g = apply_cypher_write(
+                        g,
+                        "MATCH (u:Person {name: $name}), (p:Person) "
+                        f"WHERE p.name IN $names MERGE (u)-[:{etype}]->(p)",
+                        {"name": name, "names": names},
                     )
-                ],
-                p.schema,
-            )
-            persons = p.filter(F.col("name") != name).unionByName(user_row)
-            targets = persons.select("id", "name")
-
-            def batch(names: Sequence[str], etype: str):
-                return (
-                    targets.filter(F.col("name").isin(list(names)))
-                    .select(
-                        F.lit(new_id).alias("src"),
-                        F.col("id").alias("dst"),
-                        F.lit(etype).alias("type"),
-                    )
-                )
-
-            new_edges = batch(friends, "FRIEND_OF").unionByName(
-                batch(enemies, "ENEMY_OF")
-            )
-            edges = self.graph.edges.unionByName(new_edges).dropDuplicates(
-                ["src", "dst", "type"]
-            )
-            self.graph = GraphModel(
-                persons=persons, houses=self.graph.houses, edges=edges
-            )
+            self.graph = g
         return {"name": name, "predicted_house": predicted, "features": cells}

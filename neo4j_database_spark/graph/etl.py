@@ -19,6 +19,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from neo4j_database_spark.graph.model import orient_edges
+
 # Explicit ingest schema (HP-API shape, get_insert.py:77-102 +
 # ml_model.pyc preprocess fields). Inference is for dev only — at 100 TB
 # schema inference means an extra full pass over the input.
@@ -134,12 +136,7 @@ def derive_rule_edges(
 
     ga = p.filter(F.col("house") == enemy_houses[0]).select(F.col("id").alias("src"))
     gb = p.filter(F.col("house") == enemy_houses[1]).select(F.col("id").alias("dst"))
-    enemy_fwd = ga.crossJoin(gb)
-    enemies = (
-        enemy_fwd.unionByName(
-            enemy_fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).select("src", "dst", F.lit("ENEMY_OF").alias("type"))
-    )
+    enemies = orient_edges(ga.crossJoin(gb), "ENEMY_OF")
 
     romance = _romance_edges(p, romances or [], name_alias or {})
 
@@ -190,10 +187,7 @@ def _romance_edges(
     fwd = both.filter(
         F.col("p1_id").isNotNull() & F.col("p2_id").isNotNull()
     ).select(F.col("p1_id").alias("src"), F.col("p2_id").alias("dst"))
-    rev = fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    return fwd.unionByName(rev).select(
-        "src", "dst", F.lit("ROMANTIC_WITH").alias("type")
-    )
+    return orient_edges(fwd, "ROMANTIC_WITH")
 
 
 def upsert_user_node(
@@ -208,7 +202,9 @@ def upsert_user_node(
 
     MERGE user node (last-writer-wins on name), then MERGE FRIEND_OF /
     ENEMY_OF edges to the named persons — append + dedup, matching the
-    create-iff-absent semantics.
+    create-iff-absent semantics. The edge rows are stored per the model
+    contract (``model.orient_edges``): FRIEND_OF once, ordered by name;
+    ENEMY_OF in both directions.
     """
     spark = persons.sparkSession
     user_row = spark.createDataFrame(
@@ -222,17 +218,17 @@ def upsert_user_node(
         )
     )
     ids = merged_persons.select("id", "name")
-    uid = F.lit(name)
 
     def edge_batch(names: list[str], etype: str) -> DataFrame:
         if not names:
             return spark.createDataFrame([], "src string, dst string, type string")
-        targets = ids.filter(F.col("name").isin(names)).select(
-            F.col("id").alias("dst")
+        pairs = ids.filter(F.col("name").isin(names)).select(
+            F.lit(name).alias("src"),
+            F.col("id").alias("dst"),
+            F.lit(name).alias("src_name"),
+            F.col("name").alias("dst_name"),
         )
-        return targets.select(
-            uid.alias("src"), "dst", F.lit(etype).alias("type")
-        )
+        return orient_edges(pairs, etype)
 
     new_edges = edge_batch(friends, "FRIEND_OF").unionByName(
         edge_batch(enemies, "ENEMY_OF")

@@ -36,6 +36,12 @@ Scale notes (100 TB design):
   the filter brings it under the broadcast threshold.
 - All symmetric-type reads go through :meth:`GraphModel.sym_edges`, a
   lazy union of both directions (storage stays canonical, 1×).
+
+This module owns the storage contract above: the four rule functions
+serve both the full build (``build_edges(persons)``) and the incremental
+merge (``store.merge_increment``), and every writeback of explicit pairs
+(Cypher edge MERGE, the ingest user node) stores them through
+:func:`orient_edges`.
 """
 
 from __future__ import annotations
@@ -154,7 +160,7 @@ def _family_key(name_col: F.Column) -> F.Column:
     return F.substring(name_col, -2, 2)
 
 
-def friend_edges(persons: DataFrame) -> DataFrame:
+def friend_edges(left: DataFrame, right: DataFrame | None = None) -> DataFrame:
     """FRIEND_OF: same non-null house, canonical direction name(a)<name(b).
 
     Reference: get_insert.py:132-138 (``a.house = b.house AND id(a)<id(b)``).
@@ -163,10 +169,11 @@ def friend_edges(persons: DataFrame) -> DataFrame:
     houses; at 100 TB this is additionally a candidate for salting the
     house key.
     """
-    a = persons.filter(F.col("house").isNotNull()).select(
+    right = left if right is None else right
+    a = left.filter(F.col("house").isNotNull()).select(
         F.col("id").alias("src"), F.col("name").alias("src_name"), "house"
     )
-    b = persons.filter(F.col("house").isNotNull()).select(
+    b = right.filter(F.col("house").isNotNull()).select(
         F.col("id").alias("dst"), F.col("name").alias("dst_name"), "house"
     )
     return (
@@ -176,17 +183,18 @@ def friend_edges(persons: DataFrame) -> DataFrame:
     )
 
 
-def family_edges(persons: DataFrame) -> DataFrame:
+def family_edges(left: DataFrame, right: DataFrame | None = None) -> DataFrame:
     """SAME_FAMILY: equal derived surname key, canonical direction.
 
     Reference: get_insert.py:122-128.
     """
-    a = persons.select(
+    right = left if right is None else right
+    a = left.select(
         F.col("id").alias("src"),
         F.col("name").alias("src_name"),
         _family_key(F.col("name")).alias("fam"),
     )
-    b = persons.select(
+    b = right.select(
         F.col("id").alias("dst"),
         F.col("name").alias("dst_name"),
         _family_key(F.col("name")).alias("fam"),
@@ -198,27 +206,32 @@ def family_edges(persons: DataFrame) -> DataFrame:
     )
 
 
-def enemy_edges(persons: DataFrame) -> DataFrame:
+def _mirrored(fwd: DataFrame, etype: str) -> DataFrame:
+    """(src, dst) pairs of a bidirectional type plus their reverse rows."""
+    rev = fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    return fwd.unionByName(rev).select(
+        "src", "dst", F.lit(etype).alias("type")
+    )
+
+
+def enemy_edges(left: DataFrame, right: DataFrame | None = None) -> DataFrame:
     """ENEMY_OF: cross join of two filtered houses, stored both directions.
 
     Reference: get_insert.py:141-145 (Gryffindor × Slytherin, MERGE both
     ways). Both sides are filtered to a single house before the cross
     join so the optimizer can broadcast the smaller one.
     """
-    a = persons.filter(F.col("house") == ENEMY_HOUSE_A).select(
+    right = left if right is None else right
+    a = left.filter(F.col("house") == ENEMY_HOUSE_A).select(
         F.col("id").alias("src")
     )
-    b = persons.filter(F.col("house") == ENEMY_HOUSE_B).select(
+    b = right.filter(F.col("house") == ENEMY_HOUSE_B).select(
         F.col("id").alias("dst")
     )
-    fwd = a.crossJoin(b)
-    rev = fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    return fwd.unionByName(rev).select(
-        "src", "dst", F.lit("ENEMY_OF").alias("type")
-    )
+    return _mirrored(a.crossJoin(b), "ENEMY_OF")
 
 
-def romance_edges(persons: DataFrame) -> DataFrame:
+def romance_edges(left: DataFrame, right: DataFrame | None = None) -> DataFrame:
     """ROMANTIC_WITH: deterministic curated-pair analog, both directions.
 
     Reference: get_insert.py:147-163 iterates a fixed 27-pair list; here
@@ -226,19 +239,16 @@ def romance_edges(persons: DataFrame) -> DataFrame:
     against persons so dangling pairs are dropped (like the reference's
     MATCH-before-MERGE).
     """
-    ids = persons.select("id")
+    right = left if right is None else right
     fwd = (
-        ids.filter((F.col("id") % ROMANCE_STEP) == 0)
+        left.filter((F.col("id") % ROMANCE_STEP) == 0)
         .select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
-        .join(ids.select(F.col("id").alias("dst")), "dst")
+        .join(right.select(F.col("id").alias("dst")), "dst")
     )
-    rev = fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    return fwd.unionByName(rev).select(
-        "src", "dst", F.lit("ROMANTIC_WITH").alias("type")
-    )
+    return _mirrored(fwd, "ROMANTIC_WITH")
 
 
-def build_edges(persons: DataFrame) -> DataFrame:
+def build_edges(left: DataFrame, right: DataFrame | None = None) -> DataFrame:
     """All person↔person edges; unique on (src, dst, type) by construction.
 
     Cypher MERGE's create-iff-absent semantics (SURVEY.md §2 S5) hold
@@ -246,16 +256,44 @@ def build_edges(persons: DataFrame) -> DataFrame:
     distinct cross products) and rules are disjoint by type, so no dedup
     shuffle is spent here. The invariant is enforced by test
     (tests/test_graph_model.py::test_edges_unique) instead of a 6M-row
-    dropDuplicates in the build hot path; ingest-facing merges
-    (etl.derive_rule_edges, etl.upsert_user_node) keep their explicit
-    dropDuplicates because their inputs are not structurally unique.
+    dropDuplicates in the build hot path.
+
+    Each rule takes the two sides of its pairing, ``right`` defaulting
+    to ``left``: pair members come from ``left`` × ``right`` and are
+    stored with the orientation the full build uses, so the incremental
+    merge derives its delta as ``build_edges(changed, all) ∪
+    build_edges(all, changed)``.
     """
     return (
-        friend_edges(persons)
-        .unionByName(family_edges(persons))
-        .unionByName(enemy_edges(persons))
-        .unionByName(romance_edges(persons))
+        friend_edges(left, right)
+        .unionByName(family_edges(left, right))
+        .unionByName(enemy_edges(left, right))
+        .unionByName(romance_edges(left, right))
     )
+
+
+def orient_edges(pairs: DataFrame, etype: str) -> DataFrame:
+    """Stored ``(src, dst, type)`` rows for explicit ``etype`` pairs.
+
+    ``pairs`` carries ``src`` and ``dst``, plus ``src_name`` /
+    ``dst_name`` for a canonical type. Canonical types are stored once per unordered pair,
+    ordered by name exactly as the rule build stores them; bidirectional
+    types get their mirror row; any other type is stored as given.
+    Writebacks (Cypher edge MERGE, the ingest user node) and the ingest
+    rule edges route their pairs through here, so a merged edge matches
+    the rule-built row.
+    """
+    if etype in CANONICAL_TYPES:
+        flip = F.col("src_name") > F.col("dst_name")
+        return pairs.select(
+            F.when(flip, F.col("dst")).otherwise(F.col("src")).alias("src"),
+            F.when(flip, F.col("src")).otherwise(F.col("dst")).alias("dst"),
+            F.lit(etype).alias("type"),
+        )
+    fwd = pairs.select("src", "dst")
+    if etype in BIDIRECTIONAL_TYPES:
+        return _mirrored(fwd, etype)
+    return fwd.select("src", "dst", F.lit(etype).alias("type"))
 
 
 @dataclass(frozen=True)

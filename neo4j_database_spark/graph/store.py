@@ -138,22 +138,23 @@ def build_store(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     persons.unpersist()
 
 
-def merge_increment(
-    spark: SparkSession, graph, new_persons, enemy_houses=None
-):
+def merge_increment(spark: SparkSession, graph, new_persons):
     """Incremental graph maintenance: apply a person batch without the
     full quadratic rebuild.
 
     Cypher MERGE applies per-row upserts; the batch equivalent derives
-    only the DELTA edges — every rule join restricted to (changed ×
-    all): linear in the batch size instead of quadratic in the corpus.
-    Steps:
+    only the DELTA edges — the model's rule joins run as (changed × all)
+    and (all × changed): linear in the batch size instead of quadratic
+    in the corpus. Steps:
       1. upsert persons (last-writer-wins on name, ids preserved for
          existing names);
       2. drop edges incident to changed persons (their house/surname may
          have changed — stale rule edges must go);
       3. re-derive rule edges for changed persons against the full
-         person set, canonicalized, deduplicated.
+         person set; a pair of two changed persons comes out of both
+         sides, so the delta is deduplicated. Kept edges touch no
+         changed person and every delta edge does, so the final union
+         needs no dedup.
     Returns the new GraphModel (plans; caller persists). Batch contract:
     a row updating an existing name must carry that name's existing id
     (the reference's MERGE key is name; ids are stable). At 100 TB with
@@ -162,16 +163,6 @@ def merge_increment(
     identical logic, transactional apply.
     """
     from pyspark.sql import functions as F
-
-    from neo4j_database_spark.graph.model import (
-        ENEMY_HOUSE_A,
-        ENEMY_HOUSE_B,
-        GraphModel,
-        ROMANCE_STEP,
-        _family_key,
-    )
-
-    ea, eb = enemy_houses or (ENEMY_HOUSE_A, ENEMY_HOUSE_B)
 
     persons = graph.persons
     # 1. upsert: new batch wins on name collisions; existing ids kept
@@ -192,82 +183,15 @@ def merge_increment(
         .select("src", "dst", "type")
     )
 
-    # 3. delta rule edges: changed × all (linear in |changed|)
-    c = changed_persons.select("id", "name", "house")
-    allp = merged.select("id", "name", "house")
-
-    def canon(pairs):
-        return pairs.filter(F.col("a_name") != F.col("b_name")).select(
-            F.when(F.col("a_name") < F.col("b_name"), F.col("a_id"))
-            .otherwise(F.col("b_id"))
-            .alias("src"),
-            F.when(F.col("a_name") < F.col("b_name"), F.col("b_id"))
-            .otherwise(F.col("a_id"))
-            .alias("dst"),
-        )
-
-    pairs_friend = canon(
-        c.filter(F.col("house").isNotNull())
-        .select(F.col("id").alias("a_id"), F.col("name").alias("a_name"), "house")
-        .join(
-            allp.filter(F.col("house").isNotNull()).select(
-                F.col("id").alias("b_id"), F.col("name").alias("b_name"), "house"
-            ),
-            "house",
-        )
-    ).withColumn("type", F.lit("FRIEND_OF"))
-
-    pairs_family = canon(
-        c.select(
-            F.col("id").alias("a_id"),
-            F.col("name").alias("a_name"),
-            _family_key(F.col("name")).alias("fam"),
-        ).join(
-            allp.select(
-                F.col("id").alias("b_id"),
-                F.col("name").alias("b_name"),
-                _family_key(F.col("name")).alias("fam"),
-            ),
-            "fam",
-        )
-    ).withColumn("type", F.lit("SAME_FAMILY"))
-
-    ca = c.filter(F.col("house") == ea).select(F.col("id").alias("src"))
-    cb = c.filter(F.col("house") == eb).select(F.col("id").alias("dst"))
-    all_a = allp.filter(F.col("house") == ea).select(F.col("id").alias("src"))
-    all_b = allp.filter(F.col("house") == eb).select(F.col("id").alias("dst"))
-    enemy_half = ca.crossJoin(all_b).unionByName(all_a.crossJoin(cb))
-    pairs_enemy = (
-        enemy_half.unionByName(
-            enemy_half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .withColumn("type", F.lit("ENEMY_OF"))
-    )
-
-    rom_fwd = (
-        c.filter((F.col("id") % ROMANCE_STEP) == 0)
-        .select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
-        .unionByName(
-            c.filter((F.col("id") % ROMANCE_STEP) == 1).select(
-                (F.col("id") - 1).alias("src"), F.col("id").alias("dst")
-            )
-        )
-        .join(allp.select(F.col("id").alias("dst")), "dst", "left_semi")
-        .join(allp.select(F.col("id").alias("src")), "src", "left_semi")
-    )
-    pairs_romance = rom_fwd.unionByName(
-        rom_fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).withColumn("type", F.lit("ROMANTIC_WITH"))
-
+    # 3. delta rule edges: changed × all ∪ all × changed
     delta = (
-        pairs_friend.unionByName(pairs_family)
-        .unionByName(pairs_enemy)
-        .unionByName(pairs_romance)
+        build_edges(changed_persons, merged)
+        .unionByName(build_edges(merged, changed_persons))
         .dropDuplicates(["src", "dst", "type"])
     )
-    edges = kept.unionByName(delta).dropDuplicates(["src", "dst", "type"])
-    return GraphModel(persons=merged, houses=graph.houses, edges=edges)
+    return GraphModel(
+        persons=merged, houses=graph.houses, edges=kept.unionByName(delta)
+    )
 
 
 def load_graph(spark: SparkSession, sf_dir: str) -> GraphModel:

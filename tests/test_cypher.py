@@ -489,6 +489,37 @@ def test_write_belongs_to_sets_house(g):
     )
 
 
+def test_write_canonical_merge_orders_by_name(spark):
+    """A canonical-type MERGE stores the pair the way the rule build
+    does: ordered by name, not by id. Here name order and id order
+    disagree, so an id-ordered row would sit beside the rule-built one
+    and the undirected read would see the friend twice."""
+    from neo4j_database_spark.cypher import CypherSession
+    from neo4j_database_spark.graph.model import GraphModel, build_edges
+
+    persons = spark.createDataFrame(
+        [(1, "Bob", "NATION_5", "SEG", 0.0), (2, "Alice", "NATION_5", "SEG", 0.0)],
+        "id long, name string, house string, segment string, acctbal double",
+    )
+    s = CypherSession(
+        GraphModel(
+            persons=persons,
+            houses=persons.select(F.col("house").alias("name")).distinct(),
+            edges=build_edges(persons),
+        )
+    )
+    s.run(
+        "MATCH (a:Person {name: 'Alice'}), (b:Person {name: 'Bob'}) "
+        "MERGE (a)-[:FRIEND_OF]->(b)"
+    )
+    stored = s.graph.edges.filter(F.col("type") == "FRIEND_OF").collect()
+    assert [(r.src, r.dst) for r in stored] == [(2, 1)]
+    rows = s.run(
+        "MATCH (a:Person {name: 'Alice'})-[:FRIEND_OF]-(f) RETURN f.name AS n"
+    ).collect()
+    assert [r.n for r in rows] == ["Bob"]
+
+
 def test_variable_length_paths_trail_semantics(g):
     """`-[:T*m..n]-` returns one row per distinct TRAIL (no repeated
     relationship), Cypher's multiplicity."""

@@ -109,6 +109,26 @@ def test_predict_house_composite_flow(engine):
     assert engine.graph.edges.count() == n_edges
 
 
+def test_predict_house_writeback_storage_contract(engine):
+    """The writeback stores every chosen list per the model contract:
+    the enemy sees the user through the mirrored ENEMY_OF row, the
+    family pick gets its SAME_FAMILY edge, and a repeat adds nothing."""
+    from neo4j_database_spark.graph import queries as gq
+
+    user, enemy, kin = "Writeback User", "Customer#000000001", "Customer#000000007"
+
+    def ego(name: str) -> set[tuple[str, str]]:
+        rows = gq.ego_network(engine.graph, name).collect()
+        return {(r.neighbor, r.rel_type) for r in rows}
+
+    engine.predict_house(user, enemies=[enemy], family=[kin], write_back=True)
+    assert (user, "ENEMY_OF") in ego(enemy)
+    assert ego(user) == {(enemy, "ENEMY_OF"), (kin, "SAME_FAMILY")}
+    n_edges = engine.graph.edges.count()
+    engine.predict_house(user, enemies=[enemy], family=[kin], write_back=True)
+    assert engine.graph.edges.count() == n_edges
+
+
 def test_housemates_and_histogram(engine):
     mates = engine.housemates("Customer#000000042")
     assert 0 < len(mates) <= 100

@@ -119,6 +119,7 @@ def test_user_writeback(spark, persons):
     assert {(r["src"], r["dst"], r["type"]) for r in added} == {
         ("New User", "u2", "FRIEND_OF"),
         ("New User", "u4", "ENEMY_OF"),
+        ("u4", "New User", "ENEMY_OF"),
     }
     # idempotent: merging again adds nothing
     _, e3 = etl.upsert_user_node(

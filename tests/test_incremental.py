@@ -6,7 +6,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from neo4j_database_spark.graph import store
-from neo4j_database_spark.graph.model import GraphModel, build_edges
+from neo4j_database_spark.graph.model import (
+    CANONICAL_TYPES,
+    GraphModel,
+    build_edges,
+)
 
 
 @pytest.fixture()
@@ -51,17 +55,31 @@ def check_equivalent(spark, g_inc: GraphModel):
 
 
 def test_insert_new_person(spark, base):
-    batch = spark.createDataFrame(
-        [(4, "Fay A1", "NATION_0", "SEG", 0.0)],
-        base.persons.schema,
-    )
-    out = _materialized(store.merge_increment(spark, base, batch))
-    assert out.persons.count() == 6
-    check_equivalent(spark, out)
-    # new FRIEND_OF edges to the other NATION_0 members + SAME_FAMILY 'A1'
-    delta = _edge_set(out.edges) - _edge_set(base.edges)
-    assert any(t == "FRIEND_OF" for _, _, t in delta)
-    assert any(t == "SAME_FAMILY" for _, _, t in delta)
+    # "Fay A1" sorts last among its housemates and surname group, so it
+    # is the dst of every new canonical edge; "Aaron A1" sorts first, so
+    # it is the src of every one (the (changed, all) side of each rule)
+    names = {1: "Alice A1", 2: "Bob B1", 3: "Cara A1"}
+    for name in ("Fay A1", "Aaron A1"):
+        batch = spark.createDataFrame(
+            [(4, name, "NATION_0", "SEG", 0.0)],
+            base.persons.schema,
+        )
+        out = _materialized(store.merge_increment(spark, base, batch))
+        assert out.persons.count() == 6
+        check_equivalent(spark, out)
+        # new FRIEND_OF edges to the other NATION_0 members + SAME_FAMILY
+        # 'A1', each stored from the smaller name
+        delta = _edge_set(out.edges) - _edge_set(base.edges)
+        canonical = {e for e in delta if e[2] in CANONICAL_TYPES}
+        assert canonical == {
+            (4, o, t) if name < names[o] else (o, 4, t)
+            for o, t in (
+                (1, "FRIEND_OF"),
+                (2, "FRIEND_OF"),
+                (1, "SAME_FAMILY"),
+                (3, "SAME_FAMILY"),
+            )
+        }
 
 
 def test_update_house_moves_edges(spark, base):
