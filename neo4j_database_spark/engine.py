@@ -124,16 +124,10 @@ class WinderEngine:
         from neo4j_database_spark.graph import algorithms as galg
 
         ranks = galg.personalized_pagerank(self.graph, name)
-        nbr_ids = self.graph.sym_edges().join(
-            self.graph.persons.filter(F.col("name") == name).select(
-                F.col("id").alias("src")
-            ),
-            "src",
-        ).select(F.col("dst").alias("id"))
         exclude = {name} | {
-            r["name"]
-            for r in self.graph.persons.join(nbr_ids, "id")
-            .select("name")
+            r["dst_name"]
+            for r in self.graph.named_adjacency(seeds=F.col("src_name") == name)
+            .select("dst_name")
             .collect()
         }
         out = []

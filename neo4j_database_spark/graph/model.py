@@ -34,8 +34,13 @@ Scale notes (100 TB design):
 - ENEMY_OF is an explicit cross join of two *filtered* sides; at scale the
   smaller side must be broadcast — Catalyst does this automatically once
   the filter brings it under the broadcast threshold.
-- All symmetric-type reads go through :meth:`GraphModel.sym_edges`, a
-  lazy union of both directions (storage stays canonical, 1×).
+- Undirected reads go through :meth:`GraphModel.sym_edges` (ids and
+  type) or :meth:`GraphModel.named_adjacency` (plus endpoint names and
+  the other endpoint's house and image). A graph loaded from the store
+  serves both from the stored ``adjacency`` table, written once at
+  build time; any other graph derives them per query from ``edges`` and
+  ``persons``. ``edges`` stays canonical (1×) and is the table every
+  write path changes.
 
 This module owns the storage contract above: the four rule functions
 serve both the full build (``build_edges(persons)``) and the incremental
@@ -48,7 +53,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from neo4j_database_spark.catalog import load_table
@@ -296,6 +301,56 @@ def orient_edges(pairs: DataFrame, etype: str) -> DataFrame:
     return fwd.select("src", "dst", F.lit(etype).alias("type"))
 
 
+# Columns of the named undirected adjacency, in this order: one row per
+# reading direction of a stored edge, with both endpoint names and the
+# other endpoint's serving properties (the ego and Winder responses).
+ADJACENCY_COLS = (
+    "src", "dst", "type", "src_name", "dst_name", "dst_house", "dst_image"
+)
+
+
+def _of_types(df: DataFrame, types: tuple[str, ...] | None) -> DataFrame:
+    return df if types is None else df.filter(F.col("type").isin(list(types)))
+
+
+def symmetrize(edges: DataFrame) -> DataFrame:
+    """Undirected view of stored ``(src, dst, type)`` rows: every row plus
+    the reverse of each canonical-type row.
+
+    Reproduces Cypher's ``-[:T]-`` over one-way storage
+    (SURVEY.md §1.3). Bidirectional types are already stored both ways,
+    so only canonical types get reversed — no double counting.
+    """
+    rev = edges.filter(F.col("type").isin(list(CANONICAL_TYPES))).select(
+        F.col("dst").alias("src"), F.col("src").alias("dst"), "type"
+    )
+    return edges.select("src", "dst", "type").unionByName(rev)
+
+
+def name_adjacency(
+    sym: DataFrame, persons: DataFrame, seeds: Column | None = None
+) -> DataFrame:
+    """:data:`ADJACENCY_COLS` rows for undirected ``(src, dst, type)`` rows.
+
+    Both endpoints are inner-joined on from ``persons``: every stored
+    edge joins two persons, so no row is dropped. ``seeds``, a predicate
+    on ``src_name``, keeps only the rows of the persons it selects; those
+    are a point read's few seeds, so they are broadcast into the edge
+    scan.
+    """
+    p = with_person_props(persons)
+    src_p = p.select(F.col("id").alias("src"), F.col("name").alias("src_name"))
+    if seeds is not None:
+        src_p = F.broadcast(src_p.filter(seeds))
+    dst_p = p.select(
+        F.col("id").alias("dst"),
+        F.col("name").alias("dst_name"),
+        F.col("house").alias("dst_house"),
+        F.col("image").alias("dst_image"),
+    )
+    return sym.join(src_p, "src").join(dst_p, "dst").select(*ADJACENCY_COLS)
+
+
 @dataclass(frozen=True)
 class GraphModel:
     """The materialized-as-plan property graph for one scale factor."""
@@ -309,22 +364,41 @@ class GraphModel:
     # (cypher.run_cypher): Neo4j-style statement-plan caching is only
     # sound when the underlying graph is known not to have changed.
     plan_cache_key: tuple | None = None
+    # The store's undirected adjacency (:data:`ADJACENCY_COLS`), set only
+    # by ``store.load_graph`` next to ``plan_cache_key``: both mark an
+    # immutable snapshot. Every write path builds a model without it, so
+    # it can never go stale.
+    adjacency: DataFrame | None = None
+
+    def named_adjacency(
+        self, types: tuple[str, ...] | None = None, seeds: Column | None = None
+    ) -> DataFrame:
+        """Undirected edges of ``types`` (all if None) with endpoint names
+        and the other endpoint's house and image (:data:`ADJACENCY_COLS`),
+        restricted to the rows whose ``src_name`` satisfies ``seeds`` if
+        given.
+
+        This is the one place that picks between the stored adjacency (a
+        scan pruned to the ``types`` partitions and, through row-group
+        stats, to the seeds) and its lazy derivation from ``edges`` and
+        ``persons`` (a union and two joins, the seeds broadcast).
+        """
+        if self.adjacency is None:
+            sym = symmetrize(_of_types(self.edges, types))
+            return name_adjacency(sym, self.persons, seeds)
+        adj = _of_types(self.adjacency, types).select(*ADJACENCY_COLS)
+        return adj if seeds is None else adj.filter(seeds)
 
     def sym_edges(self, types: tuple[str, ...] | None = None) -> DataFrame:
-        """Undirected edge view: canonical types unioned with their reverse.
+        """Undirected ``(src, dst, type)`` edges of ``types`` (all if None).
 
-        Reproduces Cypher's ``-[:T]-`` over one-way storage
-        (SURVEY.md §1.3). Bidirectional types are already stored both
-        ways, so only canonical types get reversed — no double counting.
+        The ``(src, dst, type)`` projection of :meth:`named_adjacency`
+        when the graph has a stored adjacency; otherwise
+        :func:`symmetrize` of ``edges``, which needs no ``persons`` join.
         """
-        e = self.edges
-        if types is not None:
-            e = e.filter(F.col("type").isin(list(types)))
-        canonical = e.filter(F.col("type").isin(list(CANONICAL_TYPES)))
-        rev = canonical.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "type"
-        )
-        return e.unionByName(rev)
+        if self.adjacency is not None:
+            return self.named_adjacency(types).select("src", "dst", "type")
+        return symmetrize(_of_types(self.edges, types))
 
 
 def build_graph(spark: SparkSession, sf_dir: str) -> GraphModel:

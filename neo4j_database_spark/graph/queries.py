@@ -6,7 +6,9 @@ All results carry deterministic ORDER BY + tie-breaks (name-based total
 order replaces Neo4j's internal ``id()`` — SURVEY.md §2 F4) so every
 query is DuckDB-oracle-checkable.
 
-Physical notes: point lookups (``name = $x``) become one-row broadcast
+Physical notes: the ego and Winder reads filter the named adjacency on
+the seed names, which on a stored graph is one pruned scan with no
+join; other point lookups (``name = $x``) become one-row broadcast
 sides; top-k becomes ``TakeOrderedAndProject`` (no global sort); the
 house dim is always broadcast.
 """
@@ -60,19 +62,17 @@ def search(g: GraphModel, q: str, limit: int = 10) -> DataFrame:
 def ego_network(g: GraphModel, name: str, limit: int = 500) -> DataFrame:
     """1-hop undirected any-type expansion. Reference: app.py:257-261 (J1).
 
-    The seed filter produces one row → Catalyst broadcasts it, so the edge
-    scan is a broadcast-hash join followed by a second join to enrich the
-    neighbor — no shuffle of the edge table at any scale.
+    One read of the named adjacency, filtered on the seed's name: on a
+    stored graph that is a single pruned scan with no join, and the
+    ordered limit is a TakeOrderedAndProject.
     """
-    seed = g.persons.filter(F.col("name") == name).select(
-        F.col("id").alias("src"), F.col("name").alias("person")
-    )
-    nbr = g.persons.select(F.col("id").alias("dst"), F.col("name").alias("neighbor"))
     return (
-        g.sym_edges()
-        .join(F.broadcast(seed), "src")
-        .join(nbr, "dst")
-        .select("person", "neighbor", F.col("type").alias("rel_type"))
+        g.named_adjacency(seeds=F.col("src_name") == name)
+        .select(
+            F.col("src_name").alias("person"),
+            F.col("dst_name").alias("neighbor"),
+            F.col("type").alias("rel_type"),
+        )
         .orderBy("neighbor", "rel_type")
         .limit(limit)
     )
@@ -83,15 +83,13 @@ def ego_network_fuzzy(g: GraphModel, q: str, limit: int = 50) -> DataFrame:
     query (case-insensitive). Reference: app.py:272-277 — the fallback
     path when the exact-name ego match is empty (``toLower(p.name)
     CONTAINS toLower($q) ... LIMIT 50``)."""
-    seeds = g.persons.filter(F.lower(F.col("name")).contains(q.lower())).select(
-        F.col("id").alias("src"), F.col("name").alias("person")
-    )
-    nbr = g.persons.select(F.col("id").alias("dst"), F.col("name").alias("neighbor"))
     return (
-        g.sym_edges()
-        .join(F.broadcast(seeds), "src")
-        .join(nbr, "dst")
-        .select("person", "neighbor", F.col("type").alias("rel_type"))
+        g.named_adjacency(seeds=F.lower(F.col("src_name")).contains(q.lower()))
+        .select(
+            F.col("src_name").alias("person"),
+            F.col("dst_name").alias("neighbor"),
+            F.col("type").alias("rel_type"),
+        )
         .orderBy("person", "neighbor", "rel_type")
         .limit(limit)
     )
@@ -163,36 +161,32 @@ def winder(g: GraphModel, seed_names: Sequence[str], k: int = 3) -> DataFrame:
     """Common-neighbors link prediction — the flagship query.
     Reference: app.py:217-231 ("Winder").
 
-    seed IN-filter (P2) → undirected expansion (J3) → anti-filter of the
-    seed set (J3b) → group-count + collect of shared seeds (A2) → top-k
-    (T1). The candidate enrich carries house + image (the reference
-    returns candidate.name, candidate.house, candidate.image,
-    app.py:223-227 — J9). The seed side is a handful of rows →
-    broadcast; the aggregation is partial+final hash agg; the top-k is
-    TakeOrderedAndProject.
+    seed IN-filter (P2) over the named adjacency (J3) → anti-filter of
+    the seed set (J3b) → one collect of the shared seeds per candidate,
+    whose size is the score (A2) → top-k (T1). The adjacency row already
+    carries the candidate's house and image (the reference returns
+    candidate.name, candidate.house, candidate.image, app.py:223-227 —
+    J9), so a stored graph reads one pruned scan: one shuffle for the
+    aggregate, then TakeOrderedAndProject.
     """
-    seeds = g.persons.filter(F.col("name").isin(list(seed_names))).select(
-        F.col("id").alias("src"), F.col("name").alias("seed_name")
-    )
-    cand = with_person_props(g.persons).select(
-        F.col("id").alias("dst"),
-        F.col("name").alias("name"),
-        "house",
-        "image",
-    )
+    seeds = list(seed_names)
     return (
-        g.sym_edges(WINDER_TYPES)
-        .join(F.broadcast(seeds), "src")
-        .join(cand, "dst")
-        .filter(~F.col("name").isin(list(seed_names)))
+        g.named_adjacency(WINDER_TYPES, F.col("src_name").isin(seeds))
+        .filter(~F.col("dst_name").isin(seeds))
         # names are unique, so house/image are functionally dependent on
         # name — grouping on all three adds no groups, just carries them
-        .groupBy("name", "house", "image")
-        .agg(
-            F.countDistinct("seed_name").alias("common_friends"),
-            F.array_join(F.sort_array(F.collect_set("seed_name")), ",").alias(
-                "shared_with"
-            ),
+        .groupBy(
+            F.col("dst_name").alias("name"),
+            F.col("dst_house").alias("house"),
+            F.col("dst_image").alias("image"),
+        )
+        .agg(F.collect_set("src_name").alias("shared"))
+        .select(
+            "name",
+            "house",
+            "image",
+            F.size("shared").cast("long").alias("common_friends"),
+            F.array_join(F.sort_array("shared"), ",").alias("shared_with"),
         )
         .orderBy(F.desc("common_friends"), F.asc("name"))
         .limit(k)

@@ -15,6 +15,13 @@ Layout & scale design:
   parquet min/max row-group stats turn point expansions (ego of one
   person) into a near-point read. At 100 TB this becomes bucketing on
   ``src`` so 1-hop expansion is a co-located join.
+- ``adjacency`` is the undirected serving table (v3): every stored edge
+  plus the reverse of each canonical-type row, with both endpoint names
+  and the other endpoint's house and image (``model.ADJACENCY_COLS``).
+  It is also partitioned by ``type``, and sorted by ``src_name`` within
+  each file, so the name filter of an ego or Winder read prunes row
+  groups and the read needs no ``persons`` join. Both tables are written
+  from one materialization of the rule joins.
 - The store is content-addressed by source dir; a marker file makes the
   build idempotent and safe to race.
 """
@@ -30,7 +37,9 @@ from neo4j_database_spark.graph.model import (
     GraphModel,
     build_edges,
     houses_df,
+    name_adjacency,
     persons_df,
+    symmetrize,
 )
 
 CACHE_ROOT = os.environ.get(
@@ -38,8 +47,9 @@ CACHE_ROOT = os.environ.get(
 )
 
 # Bump when the materialized schema changes so stale caches self-invalidate
-# (v2: persons gained species/gender/alive/image/is_user).
-STORE_VERSION = 2
+# (v2: persons gained species/gender/alive/image/is_user; v3: the
+# adjacency table).
+STORE_VERSION = 3
 
 
 def _store_dir(sf_dir: str) -> str:
@@ -120,20 +130,29 @@ def build_store(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
         os.path.join(out_dir, "houses")
     )
     n_files = _edge_file_count(spark, persons)
+    # One run of the quadratic rule joins feeds both tables.
+    edges = build_edges(persons).localCheckpoint()
+    # Hash-partition on src (NOT repartitionByRange: its sampling pass
+    # is one more job), sorted within each file. The
+    # writer's partitionBy(type) then lands n_files files per type —
+    # parallel scans for the dominant FRIEND_OF partition — and the
+    # in-file order keeps parquet row-group min/max stats effective for
+    # point reads: by src for edges, by src_name for the adjacency. At
+    # 100 TB this is bucketing on src, making 1-hop a co-located join.
     (
-        build_edges(persons)
-        # Hash-partition on src (NOT repartitionByRange: its sampling pass
-        # would execute the quadratic rule joins twice), sorted by src
-        # within each file. The writer's partitionBy(type) then lands
-        # n_files files per type — parallel scans for the dominant
-        # FRIEND_OF partition — and the in-file src ordering keeps parquet
-        # row-group min/max stats effective for point expansions. At
-        # 100 TB this is bucketing on src, making 1-hop a co-located join.
-        .repartition(n_files, "src")
+        edges.repartition(n_files, "src")
         .sortWithinPartitions("type", "src", "dst")
         .write.mode("overwrite")
         .partitionBy("type")
         .parquet(os.path.join(out_dir, "edges"))
+    )
+    (
+        name_adjacency(symmetrize(edges), persons)
+        .repartition(n_files, "src")
+        .sortWithinPartitions("type", "src_name", "dst_name")
+        .write.mode("overwrite")
+        .partitionBy("type")
+        .parquet(os.path.join(out_dir, "adjacency"))
     )
     persons.unpersist()
 
@@ -221,4 +240,5 @@ def load_graph(spark: SparkSession, sf_dir: str) -> GraphModel:
         edges=spark.read.parquet(os.path.join(out_dir, "edges")),
         # immutable-snapshot identity → Cypher plan cache is sound
         plan_cache_key=(out_dir, os.path.getmtime(marker)),
+        adjacency=spark.read.parquet(os.path.join(out_dir, "adjacency")),
     )

@@ -351,6 +351,10 @@ def value_quantiles_audit(
     The exact side needs global ranks — a cumulative window over the
     value distribution — which is audit-only cost: production callers
     use quantile_estimates alone (bounded summary, no full-data sort).
+
+    Eager construction: the exact distribution and the sketch targets
+    are localCheckpoint'ed, so BUILDING this DataFrame runs Spark jobs
+    (the events scan, the window and the sketch) before any action.
     """
     from pyspark.sql import Window
 
@@ -436,7 +440,12 @@ def doc_len_quantiles_audit(
     exact_q is the true per-group discrete quantile (pure exact math,
     identical in DuckDB), within_bound checks the estimate's exact
     within-group rank against the worst-case n_g/b bound and is pinned
-    TRUE by the oracle."""
+    TRUE by the oracle.
+
+    Eager construction: as in value_quantiles_audit, BUILDING this
+    DataFrame runs Spark jobs (the documents scan, the per-language
+    window and the grouped sketch) before any action.
+    """
     from pyspark.sql import Window
 
     from neo4j_database_spark.operators.sketch import (

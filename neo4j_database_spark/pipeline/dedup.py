@@ -304,10 +304,10 @@ def minhash_lsh_pairs(
     only appears for true near-dup clusters — which is the output, not a
     pathology.
 
-    NOTE (eager construction): the band index is localCheckpoint'ed
-    below, so BUILDING this DataFrame runs the full corpus
-    scan+fingerprint job — plan-capture/explain tooling should expect a
-    Spark job at construction time, and the returned plan's leaves are
+    Eager construction: the band index is localCheckpoint'ed below, so
+    BUILDING this DataFrame runs Spark jobs (the full corpus scan and
+    fingerprint) before any action — plan-capture/explain tooling sees
+    them at construction time, and the returned plan's leaves are
     Scan ExistingRDD, not parquet (ADVICE r09).
     """
     docs = load_table(spark, "documents", sf_dir)
@@ -315,10 +315,11 @@ def minhash_lsh_pairs(
     # optimization round): without the checkpoint both join sides
     # carry the full shingle→hash→aggregate pipeline and the corpus is
     # scanned and fingerprinted TWICE per query (two Scan parquet
-    # leaves in plans/r09/doc_minhash_lsh_before.txt — exchange reuse
-    # cannot fire across re-aliased subtrees). The band frame is the
-    # small per-doc index (n_bands rows/doc — the docstring's "stored
-    # index" form), so the checkpoint is node-sized at any scale.
+    # leaves in plans/r09/doc_minhash_lsh_before.txt as of commit
+    # ff21e9c — exchange reuse cannot fire across re-aliased
+    # subtrees). The band frame is the small per-doc index (n_bands
+    # rows/doc — the docstring's "stored index" form), so the
+    # checkpoint is node-sized at any scale.
     exploded = band_keys(docs, num_hashes, band_size, hash_fn).localCheckpoint()
     a = exploded.select(
         F.col("doc_id").alias("id_a"), "band_idx", "band_key"

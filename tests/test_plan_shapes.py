@@ -30,11 +30,23 @@ def test_pricing_summary_scan_pruned(spark, sf_dir):
     assert "l_orderkey" not in scan and "l_partkey" not in scan
 
 
+def assert_one_adjacency_scan(plan: str) -> None:
+    """A serving read of the stored graph is one scan of the stored
+    adjacency: no join (names come with the row) and no union (the
+    reverse direction is stored)."""
+    assert "Join" not in plan
+    assert "Union" not in plan
+    assert plan.count("FileScan parquet") == 1
+    assert "/adjacency" in plan
+
+
 def test_winder_plan_broadcasts_and_topk(g):
+    """One adjacency scan, one shuffle for the per-candidate aggregate,
+    then top-k (not a global sort)."""
     plan = plan_of(gq.winder(g, ["Customer#000000000"], k=3))
-    assert "BroadcastHashJoin" in plan
-    assert "TakeOrderedAndProject" in plan  # top-k, not global sort
-    assert "SortMergeJoin" not in plan  # nothing big shuffles for serving
+    assert_one_adjacency_scan(plan)
+    assert plan.count("Exchange") == 1
+    assert "TakeOrderedAndProject" in plan
 
 
 def test_feature_matrix_partition_pruning(g):
@@ -46,8 +58,7 @@ def test_feature_matrix_partition_pruning(g):
 
 def test_ego_no_shuffle_join(g):
     plan = plan_of(gq.ego_network(g, "Customer#000000042"))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    assert_one_adjacency_scan(plan)
 
 
 def test_top_customers_broadcast_dim(spark, sf_dir):

@@ -2,8 +2,14 @@
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import functions as F
+
 import __spark_entry__ as entrymod
+from neo4j_database_spark.cypher import CypherSession
 from neo4j_database_spark.graph import build_graph, store
+from neo4j_database_spark.graph import queries as gq
+from neo4j_database_spark.graph.model import GraphModel
 
 
 def test_store_roundtrip_equals_derivation(spark, sf_dir, tmp_path, monkeypatch):
@@ -15,6 +21,56 @@ def test_store_roundtrip_equals_derivation(spark, sf_dir, tmp_path, monkeypatch)
     l = loaded.edges.select("src", "dst", "type")
     assert d.exceptAll(l).count() == 0
     assert l.exceptAll(d).count() == 0
+
+
+@pytest.fixture(scope="module")
+def stored(spark, sf_dir):
+    g = store.load_graph(spark, sf_dir)
+    assert g.adjacency is not None
+    return g
+
+
+def _lazy(g: GraphModel) -> GraphModel:
+    return GraphModel(persons=g.persons, houses=g.houses, edges=g.edges)
+
+
+def _same_multiset(a, b) -> None:
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
+
+
+def test_stored_adjacency_equals_lazy(stored):
+    _same_multiset(stored.named_adjacency(), _lazy(stored).named_adjacency())
+
+
+@pytest.mark.parametrize(
+    "types", [None, gq.WINDER_TYPES, ("FRIEND_OF",)], ids=["all", "winder", "friend"]
+)
+def test_stored_sym_edges_equal_lazy_union(stored, types):
+    _same_multiset(stored.sym_edges(types), _lazy(stored).sym_edges(types))
+
+
+def test_writes_drop_stored_adjacency(spark, stored):
+    """A mutated graph never reads the snapshot's adjacency: a Cypher
+    edge MERGE and an incremental merge both return a model without it,
+    and the ego read over the MERGEd graph sees the new neighbor."""
+    s = CypherSession(stored)
+    s.run(
+        "MERGE (u:Person {name: $name}) SET u.house = 'NATION_3'",
+        {"name": "Adjacency User"},
+    )
+    s.run(
+        "MATCH (u:Person {name: $name}), (f:Person {name: $friend}) "
+        "MERGE (u)-[:FRIEND_OF]->(f)",
+        {"name": "Adjacency User", "friend": "Customer#000000010"},
+    )
+    assert s.graph.adjacency is None
+    rows = gq.ego_network(s.graph, "Adjacency User").collect()
+    assert [(r.neighbor, r.rel_type) for r in rows] == [
+        ("Customer#000000010", "FRIEND_OF")
+    ]
+    batch = stored.persons.limit(1).withColumn("name", F.lit("Adjacency Batch"))
+    assert store.merge_increment(spark, stored, batch).adjacency is None
 
 
 def test_entry_contract(spark):
