@@ -181,22 +181,10 @@ class WinderEngine:
         ``h.get("id", h["name"])`` — which cannot collide with numeric
         person ids."""
         sub = gq.house_subgraph(self.graph, houses, limit)
+        nodes = gq.house_nodes(self.graph, houses).withColumnsRenamed(
+            {"node_id": "id", "grp": "group"}
+        )
         members = self.graph.persons.filter(F.col("house").isin(list(houses)))
-        person_nodes = members.select(
-            F.col("id").cast("string").alias("id"),
-            F.col("name").alias("label"),
-            F.lit("person").alias("group"),
-            "house",
-        )
-        hub_nodes = self.graph.houses.filter(
-            F.col("name").isin(list(houses))
-        ).select(
-            F.col("name").alias("id"),
-            F.col("name").alias("label"),
-            F.lit("house").alias("group"),
-            F.lit(None).cast("string").alias("house"),
-        )
-        nodes = person_nodes.unionByName(hub_nodes)
         ids = members.select("name", F.col("id").alias("nid"))
         pp_edges = (
             sub.join(ids.withColumnsRenamed({"name": "src_name"}), "src_name")

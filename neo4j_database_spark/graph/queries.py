@@ -193,15 +193,15 @@ def winder(g: GraphModel, seed_names: Sequence[str], k: int = 3) -> DataFrame:
     )
 
 
-def house_subgraph_nodes(
-    g: GraphModel, houses: Sequence[str]
-) -> DataFrame:
-    """Node list of the house-subgraph endpoint: the member persons PLUS
-    one hub node per requested house. Reference: app.py:410-434 (query
-    #2 of /graph/houses fetches House nodes so the UI can render hubs
-    and the BELONGS_TO spokes). House hub ids are the house NAME, like
-    the reference's ``h.get("id", h["name"])`` — person ids are numeric,
-    so the namespaces can't collide."""
+def house_nodes(g: GraphModel, houses: Sequence[str]) -> DataFrame:
+    """Node list of the house-subgraph endpoint, unordered: the member
+    persons PLUS one hub node per requested house. Reference:
+    app.py:410-434 (query #2 of /graph/houses fetches House nodes so
+    the UI can render hubs and the BELONGS_TO spokes). House hub ids
+    are the house NAME, like the reference's ``h.get("id", h["name"])``
+    — person ids are numeric, so the namespaces can't collide.
+    ``engine.house_graph`` dedups it without a sort, which would add a
+    range-partition sampling job and an exchange."""
     members = (
         g.persons.filter(F.col("house").isin(list(houses)))
         .select(
@@ -220,7 +220,14 @@ def house_subgraph_nodes(
             F.lit(None).cast("string").alias("house"),
         )
     )
-    return members.unionByName(hubs).orderBy("grp", "node_id")
+    return members.unionByName(hubs)
+
+
+def house_subgraph_nodes(
+    g: GraphModel, houses: Sequence[str]
+) -> DataFrame:
+    """:func:`house_nodes`, ordered by group and node id."""
+    return house_nodes(g, houses).orderBy("grp", "node_id")
 
 
 def house_histogram(g: GraphModel, names: Sequence[str]) -> DataFrame:

@@ -22,6 +22,10 @@ Layout & scale design:
   each file, so the name filter of an ego or Winder read prunes row
   groups and the read needs no ``persons`` join. Both tables are written
   from one materialization of the rule joins.
+- Both tables hash-partition on ``src`` to the cluster width, so each
+  task writes one sorted file per type, and the writer rolls a file
+  over at ``MAX_FILE_ROWS`` rows: file sizes follow each table's own
+  rows with no sizing pass before the write.
 - The store is content-addressed by source dir; a marker file makes the
   build idempotent and safe to race.
 """
@@ -36,6 +40,7 @@ from neo4j_database_spark.session import shuffle_partitions
 from neo4j_database_spark.graph.model import (
     GraphModel,
     build_edges,
+    build_graph,
     houses_df,
     name_adjacency,
     persons_df,
@@ -57,60 +62,15 @@ def _store_dir(sf_dir: str) -> str:
     return os.path.join(CACHE_ROOT, f"{key}__v{STORE_VERSION}")
 
 
-# Target parquet bytes per edge file at scale (guide §6: 128 MB - 1 GB
-# output files) and the estimated serialized row width used to convert
-# the rule-join row estimate into bytes. Only consulted on the LARGE
-# path below — small inputs keep n_files = cluster width.
-_EDGE_FILE_TARGET_BYTES = 256 * 1024 * 1024
-_EDGE_ROW_BYTES = 24
-
-# Persons-count gate for the large path: below this many persons the
-# floor cannot bind even in the WORST case (all persons in one house:
-# C(30K, 2) ≈ 4.5e8 friend rows × 24 B ≈ 10.8 GB ≈ 42 files — just
-# above a 32-wide cluster's width, so 30K is where the per-house
-# aggregate starts being able to matter). Below it, skip the aggregate;
-# bench-scale builds (15K persons at sf0.1) pay only the one cheap
-# count() job on the cached frame.
-_SMALL_PERSONS_ROWS = 30_000
-
-
-def _edge_file_count(spark: SparkSession, persons) -> int:
-    """Edge-write file count: cluster width, PLUS a data-driven floor at
-    scale (r09 optimization round, guide §6).
-
-    ``n_files = shuffle_partitions`` alone is a constant tuned to the
-    cluster: at 100 TB each of the (quadratic) FRIEND_OF rule-join's
-    files would grow unboundedly with data volume — the inverse of the
-    small-files problem. The large path estimates the rule-join output
-    from per-house member counts (friend edges = Σ C(s_h, 2); the other
-    three rule families are ≤ ~2·|persons| combined) and floors the file
-    count so files stay near _EDGE_FILE_TARGET_BYTES.
-
-    Gated on the EXACT persons count (r10; VERDICT r09 item 7): the r09
-    gate used the optimizer plan-size estimate via private ``_jdf``
-    internals, the same estimator class er.py measured 3.2×
-    compression-skewed-LOW the same round — an underestimate here
-    silently skips the floor at scale, the unsafe direction. persons is
-    cached by build_store, so count() is one cheap job; the per-house
-    aggregate then covers ALL persons (null-house rows count toward the
-    linear rule families — ADVICE r09).
-    """
-    width = shuffle_partitions(spark)
-    n = persons.count()
-    if n < _SMALL_PERSONS_ROWS:
-        return width
-    sizes = (
-        persons.filter(persons.house.isNotNull())
-        .groupBy("house")
-        .count()
-        .collect()
-    )
-    friend_rows = sum(r["count"] * (r["count"] - 1) // 2 for r in sizes)
-    est_rows = friend_rows + 2 * n  # family/enemy/romance upper bound
-    by_size = (est_rows * _EDGE_ROW_BYTES + _EDGE_FILE_TARGET_BYTES - 1) // (
-        _EDGE_FILE_TARGET_BYTES
-    )
-    return max(width, by_size)
+# Row cap per written file (Spark's ``maxRecordsPerFile``): a type
+# partition with more rows than this per task rolls over to further
+# files, so file size follows the table's own rows instead of the
+# cluster width. Sized for the 128 MB - 1 GB output-file range on
+# serialized row widths: an edge row is ~24 B (8M rows ≈ 192 MB) and
+# an adjacency row ~96 B (two ids plus ~80 B of names, house and image
+# at sf0.01; 8M rows ≈ 770 MB). No measured scale reaches it, so the
+# writes land one file per non-empty task and type.
+MAX_FILE_ROWS = 8_000_000
 
 
 def build_store(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
@@ -129,31 +89,33 @@ def build_store(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     houses_df(spark, sf_dir).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_dir, "houses")
     )
-    n_files = _edge_file_count(spark, persons)
     # One run of the quadratic rule joins feeds both tables.
     edges = build_edges(persons).localCheckpoint()
     # Hash-partition on src (NOT repartitionByRange: its sampling pass
-    # is one more job), sorted within each file. The
-    # writer's partitionBy(type) then lands n_files files per type —
-    # parallel scans for the dominant FRIEND_OF partition — and the
-    # in-file order keeps parquet row-group min/max stats effective for
-    # point reads: by src for edges, by src_name for the adjacency. At
-    # 100 TB this is bucketing on src, making 1-hop a co-located join.
-    (
-        edges.repartition(n_files, "src")
-        .sortWithinPartitions("type", "src", "dst")
-        .write.mode("overwrite")
-        .partitionBy("type")
-        .parquet(os.path.join(out_dir, "edges"))
-    )
-    (
-        name_adjacency(symmetrize(edges), persons)
-        .repartition(n_files, "src")
-        .sortWithinPartitions("type", "src_name", "dst_name")
-        .write.mode("overwrite")
-        .partitionBy("type")
-        .parquet(os.path.join(out_dir, "adjacency"))
-    )
+    # is one more job), sorted within each task. The writer's
+    # partitionBy(type) then lands one file per task and type —
+    # parallel scans for the dominant FRIEND_OF partition — rolling
+    # over at MAX_FILE_ROWS. Each file keeps its task's sort order, so
+    # parquet row-group min/max stats stay effective for point reads:
+    # by src for edges, by src_name for the adjacency. At 100 TB this
+    # is bucketing on src, making 1-hop a co-located join.
+    width = shuffle_partitions(spark)
+    for name, frame, order in (
+        ("edges", edges, ("src", "dst")),
+        (
+            "adjacency",
+            name_adjacency(symmetrize(edges), persons),
+            ("src_name", "dst_name"),
+        ),
+    ):
+        (
+            frame.repartition(width, "src")
+            .sortWithinPartitions("type", *order)
+            .write.mode("overwrite")
+            .option("maxRecordsPerFile", MAX_FILE_ROWS)
+            .partitionBy("type")
+            .parquet(os.path.join(out_dir, name))
+        )
     persons.unpersist()
 
 
@@ -228,12 +190,7 @@ def load_graph(spark: SparkSession, sf_dir: str) -> GraphModel:
                 f.write(sf_dir)
         except Exception:
             # Cache unavailable → serve from the lazy plans.
-            persons = persons_df(spark, sf_dir)
-            return GraphModel(
-                persons=persons,
-                houses=houses_df(spark, sf_dir),
-                edges=build_edges(persons),
-            )
+            return build_graph(spark, sf_dir)
     return GraphModel(
         persons=spark.read.parquet(os.path.join(out_dir, "persons")),
         houses=spark.read.parquet(os.path.join(out_dir, "houses")),

@@ -63,19 +63,21 @@ the corpus) and broadcasts; the candidate join hashes on rare grams by
 construction, which is exactly what bounds bucket skew. Verification
 cost is |candidates|, the quantity prefix filtering minimizes.
 
+The gram route always uses q = 3, so its completeness boundary is
+3·(max_dist+1) characters.
+
 Routing is the operator's own business: callers pass only
 ``max_dist``. Every call first runs ONE narrow profile aggregate over
-the (id, s) projection — min length, max length, row count — and its
-exact figures feed every decision: the d = 2 length route and its
-mid-tier templated trigger, the deletion route's partition multiplier
-(_deletion_parts_mult), the gram route's q probe (_auto_q's min
-length) and the string re-attach broadcast gate (row count vs
-BROADCAST_KEY_ROWS, see _verify). No decision reads optimizer
+the (id, s) projection — max length and row count — and its exact
+figures feed every decision: the d = 2 length route and its mid-tier
+templated trigger, the deletion route's partition multiplier
+(_deletion_parts_mult) and the string re-attach broadcast gate (row
+count vs BROADCAST_KEY_ROWS, see _verify). No decision reads optimizer
 statistics. Construction is therefore EAGER: every route runs that one
-Spark job when the plan is built (the gram route adds its templated
-trigger and, on templated corpora, the q probe); the returned frame is
-lazy from there on. Tests force a route by setting the module
-constants, which are read at call time.
+Spark job when the plan is built (the mid-length d = 2 tier and the
+gram route add the templated trigger, at most once per call); the
+returned frame is lazy from there on. Tests force a route by setting
+the module constants, which are read at call time.
 """
 
 from __future__ import annotations
@@ -204,17 +206,15 @@ def _bag_l1(sig_a: Column, sig_b: Column) -> Column:
     return reduce(lambda x, y: x + y, terms)
 
 
-# _auto_q: probe alternative q values only when the
-# corpus looks templated — average gram document frequency above this
-# ceiling at q=3. Diverse corpora (sf0.01 customer: avg df 24) skip
-# the probe entirely and keep q=3; the 16× templated replica cell
-# (avg df 4730) and even its 1× cell (avg df 308) probe.
-AUTO_Q_DF_CEILING = 64
-AUTO_Q_MAX = 8
+# Average 3-gram document frequency above which _templated_trigger
+# fires. Diverse corpora (sf0.01 customer: avg df 24) stay below it;
+# the 16× templated replica cell (avg df 4730) and even its 1× cell
+# (avg df 308) exceed it.
+TEMPLATED_DF_CEILING = 64
 
 # max_dist=2 routes by the profiled max key length in two tiers. The
 # deletion side emits 1 + L + C(L, 2) variant keys per string (L=24:
-# 301; L=64: 2,146) while the gram side emits q·d+1 (7-17), so the
+# 301; L=64: 2,146) while the gram side emits 3·d+1 (7 at d = 2), so the
 # variant frame grows quadratically with L — but the two corpus
 # classes cross at different lengths (measured r09 with a route probe
 # whose last copy is in commit 5850eb7: 20k strings + 5% near-dups,
@@ -234,10 +234,6 @@ AUTO_Q_MAX = 8
 #     templated corpora) before falling back to gram + bag + salt.
 DELETION_LEN_CEILING = 24
 DELETION_TEMPLATED_LEN_CEILING = 64
-# deterministic 1-in-AUTO_Q_SAMPLE_MOD string sample for the probe;
-# estimates scale by the sampling fraction squared, which cancels in
-# the across-q comparison
-AUTO_Q_SAMPLE_MOD = 4
 # Row-count ceiling for broadcasting the narrow (id, s) projection to
 # the string re-attach joins, compared with the profile aggregate's
 # exact count (~5M keys × a few dozen bytes ≈ 160 MB). Above it —
@@ -245,46 +241,16 @@ AUTO_Q_SAMPLE_MOD = 4
 BROADCAST_KEY_ROWS = 5_000_000
 
 
-def _candidate_estimate(base: DataFrame, q: int, max_dist: int) -> int:
-    """Σ C(bucket, 2) over the prefix-gram buckets ``base`` would
-    produce at this q — the exact candidate count of the Ed-Join plan
-    on ``base`` (here: a sample), used by _auto_q to compare q values.
-    Same gram/df/rank pipeline as the main path."""
-    prefix_len = q * max_dist + 1
-    grams = base.filter(F.length("s") >= q).select(
-        "id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, length(s) - {q - 1}),"
-                f" i -> substring(s, i, {q}))"
-            )
-        ).alias("gram"),
-    )
-    gram_df = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-    ranked = grams.join(F.broadcast(gram_df), "gram").withColumn(
-        "rn",
-        F.row_number().over(Window.partitionBy("id").orderBy("df", "gram")),
-    )
-    row = (
-        ranked.filter(F.col("rn") <= prefix_len)
-        .groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.sum(F.col("c") * (F.col("c") - 1) / 2).alias("est"))
-        .first()
-    )
-    return int(row["est"] or 0)
-
-
 def _templated_trigger(base: DataFrame) -> bool:
     """True when the corpus looks templated / low-gram-diversity: the
-    average 3-gram document frequency exceeds AUTO_Q_DF_CEILING (on a
-    diverse corpus distinct grams grow with the corpus and avg df stays
-    small; on a templated one the gram vocabulary saturates while
+    average 3-gram document frequency exceeds TEMPLATED_DF_CEILING (on
+    a diverse corpus distinct grams grow with the corpus and avg df
+    stays small; on a templated one the gram vocabulary saturates while
     occurrences keep growing). One narrow (count, approx distinct)
-    aggregate over the gram stream. Drives BOTH gram-path mitigations:
-    the q escalation probe (_auto_q) and the candidate-join salt gate
-    (ADVICE r08: unconditional salting taxed diverse corpora with a
-    16x build-side replication they never need)."""
+    aggregate over the gram stream. Gates the mid-length d = 2 deletion
+    tier and the gram route's candidate-join salt (ADVICE r08:
+    unconditional salting taxed diverse corpora with a 16x build-side
+    replication they never need)."""
     row = (
         base.filter(F.length("s") >= 3)
         .select(
@@ -303,67 +269,7 @@ def _templated_trigger(base: DataFrame) -> bool:
     )
     if not row["total"] or not row["distinct"]:
         return False
-    return row["total"] / row["distinct"] > AUTO_Q_DF_CEILING
-
-
-def _auto_q(
-    base: DataFrame,
-    max_dist: int,
-    min_len: int,
-    templated: bool | None = None,
-) -> tuple[int, bool | None]:
-    """Pick q for the Ed-Join path by MEASURED candidate volume.
-
-    Templated / low-gram-diversity corpora (the r07 SCALE_PROBE
-    finding: replicas sharing one gram vocabulary made 16× rows cost
-    ~30× runtime) are detectable as a high average gram document
-    frequency — distinct grams stop growing with the corpus while
-    occurrences keep growing. When that trigger fires, the probe
-    computes the plan's EXACT candidate count per admissible q on a
-    deterministic 25% string sample and keeps the smallest q within
-    25% of the minimum (an avg-df heuristic tried first escalated
-    whenever df was high, which REGRESSED the 1× replica cell 2.6× —
-    q=4 there generates 203M candidates vs q=3's 92M, because a longer
-    prefix outweighs slightly-rarer grams; only the measured volume
-    ordering is trustworthy).
-
-    Output-neutrality: a candidate q is admissible only while min
-    string length ≥ q·(max_dist+1), so the q·max_dist+1-gram
-    completeness guarantee holds for EVERY row at every probed q — any
-    admissible q yields the identical exact pair set (pinned by
-    test_edit_distance_pairs_auto_q).
-
-    Cost: ``min_len`` comes from the caller's profile aggregate; then
-    one (count, approx distinct) trigger aggregate and — only on
-    templated corpora — one sampled prefix build per admissible q.
-    All linear narrow passes, dwarfed by the candidate join they tune.
-
-    Returns ``(q, templated)`` where ``templated`` is the
-    _templated_trigger outcome (None when the probe exited before
-    computing it) — reused by the candidate-join salt gate so the
-    trigger aggregate never runs twice.
-    """
-    q_cap = min(AUTO_Q_MAX, min_len // (max_dist + 1))
-    if q_cap <= 3:
-        return 3, templated
-    if templated is None:
-        templated = _templated_trigger(base)
-    if not templated:
-        return 3, False
-    sample = base.filter(
-        F.pmod(F.xxhash64(F.col("id")), F.lit(AUTO_Q_SAMPLE_MOD)) == 0
-    ).localCheckpoint()
-    if sample.count() < 100:  # too small to rank q values reliably
-        return 3, True
-    ests = {
-        q: _candidate_estimate(sample, q, max_dist)
-        for q in range(3, q_cap + 1)
-    }
-    best = min(ests.values())
-    for q in sorted(ests):  # smallest q within 25% of the minimum
-        if ests[q] <= best * 1.25:
-            return q, True
-    return 3, True
+    return row["total"] / row["distinct"] > TEMPLATED_DF_CEILING
 
 
 def edit_distance_pairs(
@@ -372,8 +278,8 @@ def edit_distance_pairs(
     """All (id_a < id_b) pairs with levenshtein(s_a, s_b) <= max_dist.
 
     Routing needs nothing from the caller. One profile aggregate over
-    the (id, s) projection (min length, max length, row count — a Spark
-    job at construction time, see the module docstring) feeds every
+    the (id, s) projection (max length and row count — a Spark job at
+    construction time, see the module docstring) feeds every
     decision: max_dist == 1 takes the d = 1 deletion join; max_dist ==
     2 takes the d = 2 deletion join when the longest key is <=
     DELETION_LEN_CEILING (the diverse-corpus crossover), or <=
@@ -381,20 +287,19 @@ def edit_distance_pairs(
     also fires (gram candidates grow with corpus self-similarity
     there, so the larger variant frame still wins); everything else
     takes the gram route. The same figures size the deletion join
-    (_deletion_parts_mult), bound the gram route's q (_auto_q) and
-    gate the string re-attach broadcast (_verify).
+    (_deletion_parts_mult) and gate the string re-attach broadcast
+    (_verify).
 
     Completeness: BOTH deletion routes are exact for ALL string
     lengths — no boundary (see module docstring; pinned by
     test_edit_distance_pairs_short_string_contract). Only the gram
-    route has the standard Ed-Join boundary: a pair is guaranteed
-    found only when both strings have ≥ q·(max_dist+1) characters —
-    below that, all n−q+1 grams can be destroyed by max_dist edits and
-    no shared prefix gram is forced (strings shorter than q produce no
-    grams at all). q is 3 unless _auto_q raises it, which it does only
-    while every string keeps the guarantee, so the boundary is
-    3·(max_dist+1) characters. Gram-route callers with very short keys
-    should pad or brute-force the short stratum separately.
+    route has the standard Ed-Join boundary: with q = 3, a pair is
+    guaranteed found only when both strings have ≥ 3·(max_dist+1)
+    characters — below that, all n−2 grams can be destroyed by
+    max_dist edits and no shared prefix gram is forced (strings
+    shorter than 3 produce no grams at all). Gram-route callers with
+    very short keys should pad or brute-force the short stratum
+    separately.
 
     Shared plan shape (r06 rewrite): the candidate stream is never
     shuffled between generation and verification. Profiling showed the
@@ -416,31 +321,27 @@ def edit_distance_pairs(
     SCALE_PROBE.md d=2 replica cells): gram blocking quality depends
     on gram DIVERSITY — on a corpus whose strings share a template
     (boilerplate web text, generated keys), each string's rarest
-    q·(max_dist)+1 grams collide with every template-mate, so the
+    3·max_dist+1 grams collide with every template-mate, so the
     candidate set grows with corpus self-similarity even though the
     extra candidates all fail verification (16× replicas: output
-    exactly 16×, runtime ~30× before the mitigation). Three
-    defenses, all exact:
+    exactly 16×, runtime ~30× before the mitigation). Two
+    defenses, both exact:
 
     * the bag-distance filter (always on; see ``_bag_signature``)
       prunes, inside the candidate-join codegen stage, every candidate
       whose character histograms differ by more than 2·max_dist in L1
       — which is precisely what template-mates' distinguishing regions
       (salts, ids, version stamps) do;
-    * ``_auto_q`` detects low gram diversity (avg gram df stops
-      falling as the corpus grows) and raises q while the per-row
-      completeness guarantee provably holds for EVERY string —
-      shrinking the gram buckets candidates are generated FROM, which
-      a pair filter alone cannot do;
     * the candidate join salts its hot buckets CANDIDATE_SALT ways only
-      when the same trigger fires (ADVICE r08: unconditional salting
-      taxed diverse corpora with a build-side replication they never
-      need); the trigger aggregate runs at most once per call.
+      when _templated_trigger detects low gram diversity (ADVICE r08:
+      unconditional salting taxed diverse corpora with a build-side
+      replication they never need); the trigger aggregate runs at
+      most once per call.
 
     Deletion routes are immune to the blowup — variants contain the
     distinguishing region verbatim, and even ANAGRAM salts (the bag
     filter's residual exposure: same char bag, >= 3 positions changed)
-    share no variant — so they skip all three (their bucket sizes are
+    share no variant — so they skip both (their bucket sizes are
     near-duplicate-group-sized by construction). The gram route's
     residual d >= 2 exposure is only LONG templated keys whose
     distinguishing regions are anagrams; for those, strip the template
@@ -461,11 +362,10 @@ def edit_distance_pairs(
     # replica corpus — it mis-sized the x16 cell's candidate join 8×
     # down, 52→123 s warm)
     row = base.agg(
-        F.min(F.length("s")).alias("lo"),
         F.max(F.length("s")).alias("hi"),
         F.count(F.lit(1)).alias("n"),
     ).first()
-    min_len, max_len, n_rows = row["lo"] or 0, row["hi"] or 0, row["n"]
+    max_len, n_rows = row["hi"] or 0, row["n"]
     small = n_rows <= BROADCAST_KEY_ROWS
     if max_dist == 1:
         # identity + all single-deletion variants; the CASE guards the
@@ -502,13 +402,12 @@ def edit_distance_pairs(
             # mid-length tier: deletion only when the corpus is
             # templated (where gram candidates grow with corpus
             # self-similarity); the trigger outcome feeds the gram
-            # fallback's _auto_q / salt gate so it never runs twice
+            # fallback's salt gate so it never runs twice
             templated = _templated_trigger(base)
             use_deletion = templated
         if use_deletion:
             return _deletion_d2_pairs(base, n_rows, max_len, small)
-    # output-neutral by construction (see _auto_q)
-    q, templated = _auto_q(base, max_dist, min_len, templated)
+    q = 3
     prefix_len = q * max_dist + 1
     # NB: Spark's sequence(1, 0) is a DESCENDING [1, 0], not empty — a
     # string shorter than q would emit two junk grams (and every empty

@@ -554,24 +554,17 @@ def _pq_assign(spark: SparkSession, sf_dir: str):
     return codes, cb_rows, sub
 
 
-def pq_adc_knn(
-    spark: SparkSession, sf_dir: str, query_vec_id: int = 0, k: int = 10
+def _adc_top_k(
+    spark: SparkSession,
+    sf_dir: str,
+    query_vec_id: int,
+    k: int,
+    members: DataFrame | None = None,
 ) -> DataFrame:
-    """PQ asymmetric-distance top-k (the ADC scan of Jégou et al. 2011)
-    — the query half of IVF-PQ, completing ivf_knn (coarse lists) +
-    pq_codes (compression): the FULL-precision query scores against
-    8-bit codes through an m×k lookup table, never touching stored
-    vectors.
-
-    adc(q, x) = Σ_s lut[s][code_s(x)], lut[s][c] = ‖q_s − c_s‖² — here
-    both the query subvectors and the codebook are plan literals, so
-    the lut folds into a CASE expression and the scan is: codes frame →
-    16-way CASE per row → per-vector sum → TakeOrderedAndProject. No
-    join, no Python, and the shuffled payload per vector is one decimal
-    — the compression is what makes 100 TB ANN serving memory-feasible
-    (codes are 32× smaller than the float vectors). Exact decimal lut
-    arithmetic keeps it oracle-checkable.
-    """
+    """ADC top-k over the PQ codes of ``members`` (a ``vec_id`` frame;
+    every vector but the query when None): fetch the full-precision
+    query vector, fold its m×k lookup table into one 16-way CASE per
+    code row, sum per vector, keep the k nearest."""
     codes, cb_rows, sub = _pq_assign(spark, sf_dir)
     emb = load_table(spark, "embeddings", sf_dir)
     q = [
@@ -598,16 +591,41 @@ def pq_adc_knn(
     for s in range(PQ_SUBSPACES):
         for ci in range(len(PQ_CENTROID_IDS)):
             dval = F.when(
-                (F.col("subspace") == s) & (F.col("code") == ci), lut(s, PQ_CENTROID_IDS[ci])
+                (F.col("subspace") == s) & (F.col("code") == ci),
+                lut(s, PQ_CENTROID_IDS[ci]),
             ).otherwise(dval)
+    if members is None:
+        codes = codes.filter(F.col("vec_id") != query_vec_id)
+    else:
+        codes = codes.join(members, "vec_id", "left_semi")
     return (
-        codes.filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id", dval.alias("d"))
+        codes.select("vec_id", dval.alias("d"))
         .groupBy("vec_id")
         .agg(F.sum("d").cast("decimal(30,9)").cast("double").alias("adc_d2"))
         .orderBy(F.asc("adc_d2"), F.asc("vec_id"))
         .limit(k)
     )
+
+
+def pq_adc_knn(
+    spark: SparkSession, sf_dir: str, query_vec_id: int = 0, k: int = 10
+) -> DataFrame:
+    """PQ asymmetric-distance top-k (the ADC scan of Jégou et al. 2011)
+    — the query half of IVF-PQ, completing ivf_knn (coarse lists) +
+    pq_codes (compression): the FULL-precision query scores against
+    8-bit codes through an m×k lookup table, never touching stored
+    vectors.
+
+    adc(q, x) = Σ_s lut[s][code_s(x)], lut[s][c] = ‖q_s − c_s‖² — here
+    both the query subvectors and the codebook are plan literals, so
+    the lut folds into a CASE expression and the scan is: codes frame →
+    16-way CASE per row → per-vector sum → TakeOrderedAndProject. No
+    join, no Python, and the shuffled payload per vector is one decimal
+    — the compression is what makes 100 TB ANN serving memory-feasible
+    (codes are 32× smaller than the float vectors). Exact decimal lut
+    arithmetic keeps it oracle-checkable.
+    """
+    return _adc_top_k(spark, sf_dir, query_vec_id, k)
 
 
 def ivf_pq_knn(
@@ -639,43 +657,7 @@ def ivf_pq_knn(
         .filter(F.col("vec_id") != query_vec_id)
         .select("vec_id")
     )
-    codes, cb_rows, sub = _pq_assign(spark, sf_dir)
-    emb = load_table(spark, "embeddings", sf_dir)
-    q = [
-        float(x)
-        for x in emb.where(F.col("vec_id") == query_vec_id)
-        .select("embedding")
-        .first()["embedding"]
-    ]
-
-    def lut(s: int, cid: int) -> Column:
-        qslice = q[s * sub : (s + 1) * sub]
-        cslice = cb_rows[cid][s * sub : (s + 1) * sub]
-        return F.aggregate(
-            F.zip_with(
-                F.array(*[F.lit(x) for x in qslice]),
-                F.array(*[F.lit(c) for c in cslice]),
-                lambda x, c: ((x - c) * (x - c)).cast(ACC),
-            ),
-            F.lit(0).cast(ACC),
-            lambda acc, v: (acc + v).cast(ACC),
-        )
-
-    dval = F.lit(None).cast(ACC)
-    for s in range(PQ_SUBSPACES):
-        for ci in range(len(PQ_CENTROID_IDS)):
-            dval = F.when(
-                (F.col("subspace") == s) & (F.col("code") == ci),
-                lut(s, PQ_CENTROID_IDS[ci]),
-            ).otherwise(dval)
-    return (
-        codes.join(members, "vec_id", "left_semi")
-        .select("vec_id", dval.alias("d"))
-        .groupBy("vec_id")
-        .agg(F.sum("d").cast("decimal(30,9)").cast("double").alias("adc_d2"))
-        .orderBy(F.asc("adc_d2"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _adc_top_k(spark, sf_dir, query_vec_id, k, members)
 
 
 IVF_INDEX_ROOT = os.environ.get(

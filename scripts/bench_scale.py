@@ -225,9 +225,10 @@ def main() -> None:
         cust = spark.read.parquet(path)
 
         def edjoin():
-            # the q probe + the bag filter ARE the r08 templated-corpus
-            # mitigation under test; r07's 631-656 s baseline ran the
-            # same cell with fixed q=3 and no filter. The router sends
+            # the bag filter and the templated-trigger salt ARE the r08
+            # templated-corpus mitigation under test (q is always 3);
+            # r07's 631-656 s baseline ran the same cell with no
+            # filter and no salt. The router sends
             # these 25-char keys to the deletion generator (measured by
             # er_deletion_d2), so the length ceilings are zeroed below.
             return edit_distance_pairs(

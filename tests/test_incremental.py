@@ -120,24 +120,3 @@ def test_romance_pair_completion(spark, base):
     check_equivalent(spark, out)
     rom = {(s, d) for s, d, t in _edge_set(out.edges) if t == "ROMANTIC_WITH"}
     assert (202, 203) in rom and (203, 202) in rom
-
-
-def test_edge_file_count_scale_floor(spark, base, monkeypatch):
-    """r09/r10: edge-write file count = cluster width locally,
-    data-driven floor at scale (guide §6 file sizing). The small path
-    returns the conf width after only the exact persons count (r10:
-    the plan-size gate was replaced per VERDICT r09 item 7 — the
-    optimizer size estimate is compression-skewed and reaches into
-    private _jdf internals); the large path (forced by zeroing the
-    count gate) floors the count at est_bytes/target."""
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # small path: identical to the pre-r09 constant
-    assert store._edge_file_count(spark, base.persons) == width
-
-    # large path: 5 persons, houses {N0:2, N1:2, N2:1} -> friend rows
-    # C(2,2)... = 1+1+0 = 2; est_rows = 2 + 2*5 = 12; with a 1-byte
-    # target every row is its own file, so the floor kicks in
-    monkeypatch.setattr(store, "_SMALL_PERSONS_ROWS", 0)
-    monkeypatch.setattr(store, "_EDGE_FILE_TARGET_BYTES", 1)
-    monkeypatch.setattr(store, "_EDGE_ROW_BYTES", 1)
-    assert store._edge_file_count(spark, base.persons) == max(width, 12)

@@ -324,49 +324,28 @@ def test_bag_signature_prunes_template_mates(spark):
     assert pruned == 5
 
 
-def test_edit_distance_pairs_auto_q(spark, monkeypatch):
-    """The gram route's q probe (_auto_q, the r08 templated-corpus
-    mitigation) is output-neutral: the escalation only proceeds while
-    EVERY string keeps the q·(max_dist)+1-gram completeness guarantee,
-    so any chosen q yields the identical exact pair set. Pinned: a
-    low-gram-diversity corpus (one shared template, high avg df)
-    escalates q above 3 yet returns exactly the q=3 (AUTO_Q_MAX = 3) /
-    brute-force pairs; a corpus with one short string refuses to
-    escalate (the guard, not the ceiling, binds).
+def test_edit_distance_pairs_gram_route_templated(spark, monkeypatch):
+    """The gram route (q = 3) is complete on a templated corpus whose
+    strings all have >= 3·(max_dist+1) characters: 600 30-char binary
+    strings sharing a 20-char leading-zero template saturate the 3-gram
+    vocabulary (8 distinct grams, avg df far above the ceiling), so the
+    templated trigger fires and salts the candidate join, and the
+    output is exactly the brute-force pair set.
     """
     from neo4j_database_spark.operators import er
-    from neo4j_database_spark.operators.er import (
-        _auto_q,
-        edit_distance_pairs,
-    )
+    from neo4j_database_spark.operators.er import edit_distance_pairs
     from pyspark.sql import functions as F
 
     monkeypatch.setattr(er, "DELETION_LEN_CEILING", 0)
     monkeypatch.setattr(er, "DELETION_TEMPLATED_LEN_CEILING", 0)
 
-    # 600 30-char binary strings sharing a 20-char leading-zero
-    # template: 3-grams saturate (8 distinct, avg df >> 64 -> the
-    # probe triggers) while longer grams diversify, so the sampled
-    # candidate estimates fall monotonically with q (measured:
-    # 100k at q=3 -> 20k at q=8) and the probe escalates
     rows = [(i, f"{i:020b}{i * i % 1024:010b}") for i in range(600)]
     df = spark.createDataFrame(rows, "id long, s string")
-    base = df.select(F.col("id"), F.col("s"))
-    q, templated = _auto_q(base, 2, 30)
-    assert q > 3  # low diversity detected, larger q measured cheaper
-    assert templated is True
-    assert q * 3 <= 30  # and the guarantee still holds for every row
-
-    auto = {
-        (r.id_a, r.id_b)
-        for r in edit_distance_pairs(df, "id", "s", max_dist=2).collect()
-    }
-    with monkeypatch.context() as m:
-        m.setattr(er, "AUTO_Q_MAX", 3)  # caps the probe at q=3
-        fixed = {
-            (r.id_a, r.id_b)
-            for r in edit_distance_pairs(df, "id", "s", max_dist=2).collect()
-        }
+    out = edit_distance_pairs(df, "id", "s", max_dist=2)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "row_number" in plan  # gram route (df-ranked prefixes)
+    assert "_salt" in plan  # the templated trigger fired
+    got = {(r.id_a, r.id_b) for r in out.collect()}
     a, b = df.alias("a"), df.alias("b")
     brute = {
         (r.id_a, r.id_b)
@@ -379,13 +358,7 @@ def test_edit_distance_pairs_auto_q(spark, monkeypatch):
         .filter(F.col("d") <= 2)
         .collect()
     }
-    assert auto == fixed == brute and len(brute) > 0
-
-    # one short row pins min_len: (q+1)*(d+1) = 12 > 9 -> stays at 3
-    short = df.unionByName(
-        spark.createDataFrame([(999, "ninechars")], "id long, s string")
-    ).select(F.col("id"), F.col("s").alias("s"))
-    assert _auto_q(short, 2, 9) == (3, None)
+    assert got == brute and len(brute) > 0
 
 
 def test_edit_distance_pairs_d2_deletion_complete(spark, monkeypatch):

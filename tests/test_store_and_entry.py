@@ -39,6 +39,45 @@ def _same_multiset(a, b) -> None:
     assert b.exceptAll(a).count() == 0
 
 
+def test_store_files_roll_over_at_row_cap(spark, sf_dir, tmp_path, monkeypatch):
+    """Both tables' writes roll a file over at MAX_FILE_ROWS: with a
+    small cap, type partitions split into more files than the default
+    build writes, no file exceeds the cap, each file keeps its sort
+    order, and the stored rows are the default build's rows."""
+    import pyarrow.parquet as pq
+
+    cap = 10
+    store.build_store(spark, sf_dir, str(tmp_path / "default"))
+    monkeypatch.setattr(store, "MAX_FILE_ROWS", cap)
+    store.build_store(spark, sf_dir, str(tmp_path / "capped"))
+
+    def files(root):
+        return {
+            part.name: sorted(part.glob("*.parquet"))
+            for part in root.iterdir()
+            if part.name.startswith("type=")
+        }
+
+    for table, order in (
+        ("edges", ["src", "dst"]),
+        ("adjacency", ["src_name", "dst_name"]),
+    ):
+        default = files(tmp_path / "default" / table)
+        capped = files(tmp_path / "capped" / table)
+        assert capped.keys() == default.keys()
+        assert any(len(capped[t]) > len(default[t]) for t in capped)
+        for fs in capped.values():
+            for f in fs:
+                rows = pq.read_table(f, columns=order).to_pylist()
+                assert 0 < len(rows) <= cap
+                keys = [tuple(r[c] for c in order) for r in rows]
+                assert keys == sorted(keys), f
+        _same_multiset(
+            spark.read.parquet(str(tmp_path / "default" / table)),
+            spark.read.parquet(str(tmp_path / "capped" / table)),
+        )
+
+
 def test_stored_adjacency_equals_lazy(stored):
     _same_multiset(stored.named_adjacency(), _lazy(stored).named_adjacency())
 
