@@ -35,9 +35,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import types as T
 
 from neo4j_database_spark.cypher import parser as P
-from neo4j_database_spark.graph.model import GraphModel
+from neo4j_database_spark.graph.model import GraphModel, sql_name
 
 # Cypher property name -> unified struct field
 _PROP_MAP = {"isUser": "is_user"}
@@ -77,23 +78,32 @@ def _person_nodes(
     site casts back to string, preserving the visible contract).
     """
     p = g.persons
-    cols = [
-        F.lit("Person").alias("label"),
-        (F.col("id") if long_ids else F.col("id").cast("string")).alias("id"),
+    fields = [
+        ("label", "'Person'"),
+        ("id", "id" if long_ids else "CAST(id AS STRING)"),
     ]
     for f_ in _PERSON_FIELDS[1:]:
         if keep is not None and f_ != "name" and f_ not in keep:
             continue
-        if f_ in p.columns:
-            cols.append(F.col(f_))
-        else:
-            cols.append(F.lit(None).alias(f_))
-    cols += [
-        F.col(f_)
+        fields.append((f_, sql_name(f_) if f_ in p.columns else "NULL"))
+    fields += [
+        (f_, sql_name(f_))
         for f_ in _extra_person_fields(g)
         if keep is None or f_ in keep
     ]
-    return p.select(F.struct(*cols).alias("__node"))
+    return p.selectExpr(_named_struct(fields) + " AS __node")
+
+
+def _named_struct(fields: list[tuple[str, str]]) -> str:
+    """A ``named_struct`` of (field, SQL expression) pairs. The node
+    sources build their struct as SQL text: every compile builds them,
+    and one expression string is one driver round trip where a built
+    column is several per field."""
+    args = ", ".join(
+        "'" + n.replace("\\", "\\\\").replace("'", "\\'") + "', " + e
+        for n, e in fields
+    )
+    return f"named_struct({args})"
 
 
 def _house_nodes(g: GraphModel, keep: set[str] | None = None) -> DataFrame:
@@ -103,22 +113,22 @@ def _house_nodes(g: GraphModel, keep: set[str] | None = None) -> DataFrame:
         "species": "string", "gender": "string", "alive": "boolean",
         "image": "string", "is_user": "boolean",
     }
-    cols = [
-        F.lit("House").alias("label"),
-        F.col("name").alias("id"),
-        F.col("name").alias("name"),
-    ] + [
-        F.lit(None).cast(t).alias(f_)
+    fields = [("label", "'House'"), ("id", "name"), ("name", "name")] + [
+        (f_, f"CAST(NULL AS {t})")
         for f_, t in null_types.items()
         if keep is None or f_ in keep
     ]
     pschema = g.persons.schema
-    cols += [
-        F.lit(None).cast(pschema[f_].dataType).alias(f_)
+    fields += [
+        (
+            f_,
+            "NULL" if isinstance(pschema[f_].dataType, T.NullType)
+            else f"CAST(NULL AS {pschema[f_].dataType.simpleString()})",
+        )
         for f_ in _extra_person_fields(g)
         if keep is None or f_ in keep
     ]
-    return g.houses.select(F.struct(*cols).alias("__node"))
+    return g.houses.selectExpr(_named_struct(fields) + " AS __node")
 
 
 # Functions whose bare-node-variable argument needs only the structural
@@ -423,16 +433,12 @@ class Compiler:
         if rtype is not None:
             types = list(rtype) if isinstance(rtype, tuple) else [rtype]
             e = e.filter(F.col("type").isin(types))
-        if self._long:
-            return e.select(
-                F.col("src").alias("__src"),
-                F.col("dst").alias("__dst"),
-                F.col("type").alias("__type"),
-            )
-        return e.select(
-            F.col("src").cast("string").alias("__src"),
-            F.col("dst").cast("string").alias("__dst"),
-            F.col("type").alias("__type"),
+        # SQL text, as in _person_nodes
+        ends = ("src", "dst") if self._long else (
+            "CAST(src AS STRING)", "CAST(dst AS STRING)"
+        )
+        return e.selectExpr(
+            f"{ends[0]} AS __src", f"{ends[1]} AS __dst", "type AS __type"
         )
 
     def _belongs_edges(self) -> DataFrame:

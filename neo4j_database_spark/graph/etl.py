@@ -228,7 +228,7 @@ def upsert_user_node(
             F.lit(name).alias("src_name"),
             F.col("name").alias("dst_name"),
         )
-        return orient_edges(pairs, etype)
+        return orient_edges(pairs, etype).select("src", "dst", "type")
 
     new_edges = edge_batch(friends, "FRIEND_OF").unionByName(
         edge_batch(enemies, "ENEMY_OF")

@@ -36,9 +36,10 @@ Scale notes (100 TB design):
   the filter brings it under the broadcast threshold.
 - Undirected reads go through :meth:`GraphModel.sym_edges` (ids and
   type) or :meth:`GraphModel.named_adjacency` (plus endpoint names and
-  the other endpoint's house and image). A graph loaded from the store
+  houses and the other endpoint's image). A graph loaded from the store
   serves both from the stored ``adjacency`` table, written once at
-  build time; any other graph derives them per query from ``edges`` and
+  build time, and a Cypher write session keeps it (:class:`Delta`);
+  any other graph derives them per query from ``edges`` and
   ``persons``. ``edges`` stays canonical (1×) and is the table every
   write path changes.
 
@@ -211,11 +212,38 @@ def family_edges(left: DataFrame, right: DataFrame | None = None) -> DataFrame:
     )
 
 
+def _other_end(col: str) -> str:
+    """The column naming the same thing at the other endpoint: ``src``
+    ↔ ``dst``, ``src_<x>`` ↔ ``dst_<x>``; any other column is itself."""
+    for a, b in (("src", "dst"), ("dst", "src")):
+        if col == a or col.startswith(a + "_"):
+            return b + col[len(a):]
+    return col
+
+
+def sql_name(col: str) -> str:
+    """``col`` quoted as a SQL identifier."""
+    return "`" + col.replace("`", "``") + "`"
+
+
+def _reversed(df: DataFrame) -> DataFrame:
+    """``df`` read the other way: every endpoint column swaps with its
+    :func:`_other_end`. (SQL text: a write statement builds this per
+    statement, and one expression string is one driver round trip where
+    a built column is several.)"""
+    return df.selectExpr(
+        *[f"{sql_name(_other_end(c))} AS {sql_name(c)}" for c in df.columns]
+    )
+
+
 def _mirrored(fwd: DataFrame, etype: str) -> DataFrame:
-    """(src, dst) pairs of a bidirectional type plus their reverse rows."""
-    rev = fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    """Pairs of a bidirectional type plus the reverse of each pair that
+    is not a self-loop (which reads the same both ways), any
+    ``src_<x>`` / ``dst_<x>`` payload after ``type``."""
+    payload = [c for c in fwd.columns if c not in ("src", "dst")]
+    rev = _reversed(fwd.filter(F.col("src") != F.col("dst")))
     return fwd.unionByName(rev).select(
-        "src", "dst", F.lit(etype).alias("type")
+        "src", "dst", F.lit(etype).alias("type"), *payload
     )
 
 
@@ -281,31 +309,47 @@ def orient_edges(pairs: DataFrame, etype: str) -> DataFrame:
     """Stored ``(src, dst, type)`` rows for explicit ``etype`` pairs.
 
     ``pairs`` carries ``src`` and ``dst``, plus ``src_name`` /
-    ``dst_name`` for a canonical type. Canonical types are stored once per unordered pair,
-    ordered by name exactly as the rule build stores them; bidirectional
-    types get their mirror row; any other type is stored as given.
-    Writebacks (Cypher edge MERGE, the ingest user node) and the ingest
-    rule edges route their pairs through here, so a merged edge matches
-    the rule-built row.
+    ``dst_name`` for a canonical type, and may carry further
+    ``src_<x>`` / ``dst_<x>`` payload pairs, which follow their endpoint
+    and are returned after ``type``. Canonical types are stored once per
+    unordered pair, ordered by name exactly as the rule build stores
+    them; bidirectional types get their mirror row; any other type is
+    stored as given. Writebacks (Cypher edge MERGE, the ingest user
+    node) and the ingest rule edges route their pairs through here, so a
+    merged edge matches the rule-built row.
     """
-    if etype in CANONICAL_TYPES:
-        flip = F.col("src_name") > F.col("dst_name")
-        return pairs.select(
-            F.when(flip, F.col("dst")).otherwise(F.col("src")).alias("src"),
-            F.when(flip, F.col("src")).otherwise(F.col("dst")).alias("dst"),
-            F.lit(etype).alias("type"),
-        )
-    fwd = pairs.select("src", "dst")
+    payload = [c for c in pairs.columns if c not in ("src", "dst")]
     if etype in BIDIRECTIONAL_TYPES:
-        return _mirrored(fwd, etype)
-    return fwd.select("src", "dst", F.lit(etype).alias("type"))
+        return _mirrored(pairs, etype)
+    if etype in CANONICAL_TYPES:
+        # SQL text for the same reason as in _reversed
+        pairs = pairs.selectExpr(
+            *[
+                f"CASE WHEN src_name > dst_name THEN {sql_name(_other_end(c))}"
+                f" ELSE {sql_name(c)} END AS {sql_name(c)}"
+                for c in pairs.columns
+            ]
+        )
+    return pairs.select("src", "dst", F.lit(etype).alias("type"), *payload)
+
+
+def edge_key(src: int, dst: int, etype: str) -> tuple:
+    """The identity of the stored rows :func:`orient_edges` makes of the
+    pair ``(src, dst)``: the unordered pair for a canonical or a
+    bidirectional type (either direction stores the same rows), the
+    ordered one for any other type."""
+    if etype in CANONICAL_TYPES or etype in BIDIRECTIONAL_TYPES:
+        src, dst = min(src, dst), max(src, dst)
+    return (etype, src, dst)
 
 
 # Columns of the named undirected adjacency, in this order: one row per
-# reading direction of a stored edge, with both endpoint names and the
-# other endpoint's serving properties (the ego and Winder responses).
+# reading direction of a stored edge, with both endpoint names and
+# houses and the other endpoint's image (the ego, Winder and house
+# subgraph responses).
 ADJACENCY_COLS = (
-    "src", "dst", "type", "src_name", "dst_name", "dst_house", "dst_image"
+    "src", "dst", "type", "src_name", "dst_name", "src_house", "dst_house",
+    "dst_image",
 )
 
 
@@ -313,18 +357,28 @@ def _of_types(df: DataFrame, types: tuple[str, ...] | None) -> DataFrame:
     return df if types is None else df.filter(F.col("type").isin(list(types)))
 
 
-def symmetrize(edges: DataFrame) -> DataFrame:
-    """Undirected view of stored ``(src, dst, type)`` rows: every row plus
-    the reverse of each canonical-type row.
+def symmetrize(edges: DataFrame, flag: str | None = None) -> DataFrame:
+    """Undirected view of stored edge rows: every row plus the reverse
+    (:func:`_reversed`, payload pairs swapped too) of each canonical-type
+    row that is not a self-loop.
 
     Reproduces Cypher's ``-[:T]-`` over one-way storage
     (SURVEY.md §1.3). Bidirectional types are already stored both ways,
-    so only canonical types get reversed — no double counting.
+    so only canonical types get reversed — no double counting — and a
+    self-loop reads the same both ways, so it is seen once, as Neo4j
+    expands a loop once. ``flag``, if given, names a boolean column that
+    is true on the stored rows and false on the reversed ones.
     """
-    rev = edges.filter(F.col("type").isin(list(CANONICAL_TYPES))).select(
-        F.col("dst").alias("src"), F.col("src").alias("dst"), "type"
+    rev = _reversed(
+        edges.filter(
+            F.col("type").isin(list(CANONICAL_TYPES))
+            & (F.col("src") != F.col("dst"))
+        )
     )
-    return edges.select("src", "dst", "type").unionByName(rev)
+    if flag is not None:
+        edges = edges.withColumn(flag, F.lit(True))
+        rev = rev.withColumn(flag, F.lit(False))
+    return edges.unionByName(rev)
 
 
 def name_adjacency(
@@ -339,7 +393,11 @@ def name_adjacency(
     scan.
     """
     p = with_person_props(persons)
-    src_p = p.select(F.col("id").alias("src"), F.col("name").alias("src_name"))
+    src_p = p.select(
+        F.col("id").alias("src"),
+        F.col("name").alias("src_name"),
+        F.col("house").alias("src_house"),
+    )
     if seeds is not None:
         src_p = F.broadcast(src_p.filter(seeds))
     dst_p = p.select(
@@ -364,23 +422,27 @@ class GraphModel:
     # (cypher.run_cypher): Neo4j-style statement-plan caching is only
     # sound when the underlying graph is known not to have changed.
     plan_cache_key: tuple | None = None
-    # The store's undirected adjacency (:data:`ADJACENCY_COLS`), set only
-    # by ``store.load_graph`` next to ``plan_cache_key``: both mark an
-    # immutable snapshot. Every write path builds a model without it, so
-    # it can never go stale.
+    # The undirected adjacency (:data:`ADJACENCY_COLS`) of ``edges`` as
+    # named by ``persons``, or None to derive it per query. Set by
+    # ``store.load_graph`` (the stored table) and kept by a Cypher write
+    # over such a graph (:meth:`Delta.model`); every other derivation
+    # builds a model without it, so it can never go stale.
     adjacency: DataFrame | None = None
+    # The write session this model is the result of, None for a model
+    # no Cypher write produced.
+    delta: "Delta | None" = None
 
     def named_adjacency(
         self, types: tuple[str, ...] | None = None, seeds: Column | None = None
     ) -> DataFrame:
         """Undirected edges of ``types`` (all if None) with endpoint names
-        and the other endpoint's house and image (:data:`ADJACENCY_COLS`),
-        restricted to the rows whose ``src_name`` satisfies ``seeds`` if
-        given.
+        and houses and the other endpoint's image
+        (:data:`ADJACENCY_COLS`), restricted to the rows whose
+        ``src_name`` satisfies ``seeds`` if given.
 
-        This is the one place that picks between the stored adjacency (a
-        scan pruned to the ``types`` partitions and, through row-group
-        stats, to the seeds) and its lazy derivation from ``edges`` and
+        This is the one place that picks between the adjacency (a scan
+        pruned to the ``types`` partitions and, through row-group stats,
+        to the seeds) and its lazy derivation from ``edges`` and
         ``persons`` (a union and two joins, the seeds broadcast).
         """
         if self.adjacency is None:
@@ -393,12 +455,85 @@ class GraphModel:
         """Undirected ``(src, dst, type)`` edges of ``types`` (all if None).
 
         The ``(src, dst, type)`` projection of :meth:`named_adjacency`
-        when the graph has a stored adjacency; otherwise
-        :func:`symmetrize` of ``edges``, which needs no ``persons`` join.
+        when the graph has an adjacency; otherwise :func:`symmetrize` of
+        ``edges``, which needs no ``persons`` join.
         """
         if self.adjacency is not None:
             return self.named_adjacency(types).select("src", "dst", "type")
         return symmetrize(_of_types(self.edges, types))
+
+
+# Flag column of a delta's adjacency rows: true on the rows that are
+# also the delta's stored edge rows (see :class:`Delta`).
+EDGE_FLAG = "is_edge"
+
+
+@dataclass(frozen=True)
+class Delta:
+    """A Cypher write session's changes over the snapshot it started
+    from, each frame one small checkpoint (``cypher.writes`` builds and
+    commits them; :meth:`model` assembles the graph they make).
+
+    - ``persons``: the person rows the session created or changed, in
+      full; ``replaced`` holds the ids of the changed snapshot persons,
+      whose snapshot rows the model filters out, and ``created`` the
+      ids of the persons the session created.
+    - ``houses``: the house rows the session created.
+    - ``adjacency``: :data:`ADJACENCY_COLS` rows plus :data:`EDGE_FLAG`.
+      They are both reading directions of every edge the session added,
+      the flag true on the stored orientation (those rows are the
+      added edges), and every snapshot adjacency row that names a
+      replaced person, relabelled with its new properties (flag false).
+      ``edges`` holds the :func:`edge_key` of every pair the session
+      merged, stored in the snapshot or added here.
+
+    So each frame of the model is one snapshot scan (filtered on a
+    literal id list once a snapshot person changed) and one checkpoint:
+    neither the commit nor a read grows with the graph or with the
+    number of statements.
+    """
+
+    snapshot: GraphModel
+    persons: DataFrame | None = None
+    houses: DataFrame | None = None
+    adjacency: DataFrame | None = None
+    created: frozenset = frozenset()
+    replaced: frozenset = frozenset()
+    edges: frozenset = frozenset()
+
+    def model(self) -> GraphModel:
+        s = self.snapshot
+        persons, houses, edges, adjacency = (
+            s.persons, s.houses, s.edges, s.adjacency
+        )
+        if self.replaced:
+            gone = list(self.replaced)
+            persons = persons.filter(~F.col("id").isin(gone))
+            if adjacency is not None:
+                adjacency = adjacency.filter(
+                    ~F.col("src").isin(gone) & ~F.col("dst").isin(gone)
+                )
+        if self.persons is not None:
+            persons = persons.unionByName(
+                self.persons, allowMissingColumns=True
+            )
+        if self.houses is not None:
+            houses = houses.unionByName(self.houses)
+        if self.adjacency is not None:
+            edges = edges.unionByName(
+                self.adjacency.filter(F.col(EDGE_FLAG)).select(*edges.columns)
+            )
+            if adjacency is not None:
+                adjacency = adjacency.unionByName(
+                    self.adjacency.select(*ADJACENCY_COLS)
+                )
+        return GraphModel(
+            persons=persons,
+            houses=houses,
+            edges=edges,
+            adjacency=adjacency,
+            delta=self,
+        )
 
 
 def build_graph(spark: SparkSession, sf_dir: str) -> GraphModel:

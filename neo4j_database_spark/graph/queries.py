@@ -7,10 +7,11 @@ order replaces Neo4j's internal ``id()`` — SURVEY.md §2 F4) so every
 query is DuckDB-oracle-checkable.
 
 Physical notes: the ego and Winder reads filter the named adjacency on
-the seed names, which on a stored graph is one pruned scan with no
-join; other point lookups (``name = $x``) become one-row broadcast
-sides; top-k becomes ``TakeOrderedAndProject`` (no global sort); the
-house dim is always broadcast.
+the seed names, and the house subgraph on both endpoints' houses, which
+on a stored graph is one scan with no join; other point lookups
+(``name = $x``) become one-row broadcast sides; top-k becomes
+``TakeOrderedAndProject`` (no global sort); the house dim is always
+broadcast.
 """
 
 from __future__ import annotations
@@ -20,7 +21,11 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from neo4j_database_spark.graph.model import GraphModel, with_person_props
+from neo4j_database_spark.graph.model import (
+    CANONICAL_TYPES,
+    GraphModel,
+    with_person_props,
+)
 
 # Edge types that carry "social" signal for link prediction (the reference's
 # winder expands FRIEND_OF; our graph adds family/romance so common-neighbor
@@ -144,13 +149,25 @@ def house_subgraph(
     g: GraphModel, houses: Sequence[str], limit: int = 5000
 ) -> DataFrame:
     """Edges whose BOTH endpoints live in the requested houses.
-    Reference: app.py:376-416 (P5/J4/J9, ``LIMIT 5000``)."""
-    members = g.persons.filter(F.col("house").isin(list(houses)))
-    src_m = members.select(F.col("id").alias("src"), F.col("name").alias("src_name"))
-    dst_m = members.select(F.col("id").alias("dst"), F.col("name").alias("dst_name"))
+    Reference: app.py:376-416 (P5/J4/J9, ``LIMIT 5000``).
+
+    One filter of the named adjacency, which carries both endpoints'
+    houses: a stored edge is the adjacency row in its stored
+    orientation, so a canonical-type edge is its row with
+    ``src_name <= dst_name`` (equal only on a self-loop, which has one
+    row) and every other row is a stored row. On a stored graph that is
+    one scan with no join."""
+    hs = list(houses)
     return (
-        g.edges.join(src_m, "src")
-        .join(dst_m, "dst")
+        g.named_adjacency()
+        .filter(
+            F.col("src_house").isin(hs)
+            & F.col("dst_house").isin(hs)
+            & (
+                ~F.col("type").isin(list(CANONICAL_TYPES))
+                | (F.col("src_name") <= F.col("dst_name"))
+            )
+        )
         .select("src_name", "dst_name", F.col("type").alias("rel_type"))
         .orderBy("rel_type", "src_name", "dst_name")
         .limit(limit)

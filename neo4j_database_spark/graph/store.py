@@ -15,12 +15,13 @@ Layout & scale design:
   parquet min/max row-group stats turn point expansions (ego of one
   person) into a near-point read. At 100 TB this becomes bucketing on
   ``src`` so 1-hop expansion is a co-located join.
-- ``adjacency`` is the undirected serving table (v3): every stored edge
+- ``adjacency`` is the undirected serving table (v4): every stored edge
   plus the reverse of each canonical-type row, with both endpoint names
-  and the other endpoint's house and image (``model.ADJACENCY_COLS``).
+  and houses and the other endpoint's image (``model.ADJACENCY_COLS``).
   It is also partitioned by ``type``, and sorted by ``src_name`` within
   each file, so the name filter of an ego or Winder read prunes row
-  groups and the read needs no ``persons`` join. Both tables are written
+  groups, and neither those reads nor the house subgraph need a
+  ``persons`` join. A Cypher write session keeps it (``model.Delta``). Both tables are written
   from one materialization of the rule joins.
 - Both tables hash-partition on ``src`` to the cluster width, so each
   task writes one sorted file per type, and the writer rolls a file
@@ -53,8 +54,8 @@ CACHE_ROOT = os.environ.get(
 
 # Bump when the materialized schema changes so stale caches self-invalidate
 # (v2: persons gained species/gender/alive/image/is_user; v3: the
-# adjacency table).
-STORE_VERSION = 3
+# adjacency table; v4: the adjacency's src_house).
+STORE_VERSION = 4
 
 
 def _store_dir(sf_dir: str) -> str:

@@ -49,6 +49,14 @@ def test_winder_plan_broadcasts_and_topk(g):
     assert "TakeOrderedAndProject" in plan
 
 
+def test_house_subgraph_one_adjacency_scan(g):
+    """Both endpoints' houses ride on the adjacency row: one scan and
+    a filter, no join with persons."""
+    plan = plan_of(gq.house_subgraph(g, ["NATION_1", "NATION_4"]))
+    assert_one_adjacency_scan(plan)
+    assert "TakeOrderedAndProject" in plan
+
+
 def test_feature_matrix_partition_pruning(g):
     plan = plan_of(feature_matrix(g))
     # store is partitioned by type: the scan must carry partition filters

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -89,27 +91,251 @@ def test_stored_sym_edges_equal_lazy_union(stored, types):
     _same_multiset(stored.sym_edges(types), _lazy(stored).sym_edges(types))
 
 
-def test_writes_drop_stored_adjacency(spark, stored):
-    """A mutated graph never reads the snapshot's adjacency: a Cypher
-    edge MERGE and an incremental merge both return a model without it,
-    and the ego read over the MERGEd graph sees the new neighbor."""
+# One statement of each write shape, in order; each one's result is
+# checked against the lazy derivation. `$pair` and `$other` are two
+# snapshot persons with no stored FRIEND_OF between them (different
+# houses), `$stored_a`/`$stored_b` a stored FRIEND_OF pair.
+PARITY_STATEMENTS = [
+    # node MERGE creating a person
+    "MERGE (u:Person {name: 'Parity User'}) "
+    "SET u.house = 'NATION_3', u.isUser = true",
+    # edge MERGE from the new person (no snapshot edge can exist)
+    "MATCH (u:Person {name: 'Parity User'}), (f:Person) "
+    "WHERE f.name IN ['Customer#000000010', 'Customer#000000011'] "
+    "MERGE (u)-[:FRIEND_OF]->(f)",
+    "MATCH (u:Person {name: 'Parity User'}), (e:Person) "
+    "WHERE e.name IN ['Customer#000000012'] MERGE (u)-[:ENEMY_OF]->(e)",
+    # re-MERGE of a stored snapshot edge, read the other way
+    "MATCH (a:Person {name: $stored_a}), (b:Person {name: $stored_b}) "
+    "MERGE (b)-[:FRIEND_OF]->(a)",
+    # re-MERGE of an edge the session added
+    "MATCH (u:Person {name: 'Parity User'}), (f:Person {name: "
+    "'Customer#000000010'}) MERGE (f)-[:FRIEND_OF]->(u)",
+    # a new edge between two snapshot persons
+    "MATCH (a:Person {name: $pair}), (b:Person {name: $other}) "
+    "MERGE (a)-[:FRIEND_OF]->(b)",
+    # a canonical self-loop
+    "MATCH (u:Person {name: 'Parity User'}) MERGE (u)-[:FRIEND_OF]->(u)",
+    # ON MATCH SET changes a snapshot person's house
+    "MERGE (p:Person {name: 'Customer#000000010'}) "
+    "ON CREATE SET p.house = 'NATION_0' ON MATCH SET p.house = 'NATION_9'",
+    # SET changes the new person's image
+    "MERGE (u:Person {name: 'Parity User'}) SET u.image = 'u.png'",
+    # ON CREATE SET on a created node, then an edge CREATE to it
+    "MERGE (c:Person {name: 'Created P'}) "
+    "ON CREATE SET c.house = 'NATION_1' ON MATCH SET c.house = 'NATION_2'",
+    "CREATE (d:Person {name: 'Created Q'}) SET d.house = 'NATION_1'",
+    "MATCH (a:Person {name: 'Created P'}), (b:Person {name: 'Created Q'}) "
+    "CREATE (a)-[:SAME_FAMILY]->(b)",
+    # REMOVE on a snapshot person with edges
+    "MATCH (p:Person {name: 'Customer#000000011'}) REMOVE p.image",
+    # FOREACH adds a new property column to snapshot persons
+    "MATCH (p:Person {name: 'Customer#000000001'})-[:FRIEND_OF]-(q) "
+    "WITH collect(q) AS fs FOREACH (f IN fs | SET f.flagged = 'yes')",
+    # BELONGS_TO moves a snapshot person to a new house
+    "MERGE (h:House {name: 'X_HOUSE'})",
+    "MATCH (p:Person {name: 'Customer#000000012'}), "
+    "(h:House {name: 'X_HOUSE'}) MERGE (p)-[:BELONGS_TO]->(h)",
+]
+
+
+def _house_subgraph_from_edges(g: GraphModel, houses) -> list:
+    """The house subgraph as a join of the stored edges with the member
+    persons on both endpoints."""
+    m = g.persons.filter(F.col("house").isin(houses))
+    rows = (
+        g.edges.join(m.select(F.col("id").alias("src"), F.col("name").alias("s")), "src")
+        .join(m.select(F.col("id").alias("dst"), F.col("name").alias("d")), "dst")
+        .select("s", "d", "type")
+        .collect()
+    )
+    return sorted(tuple(r) for r in rows)
+
+
+def test_writes_keep_exact_adjacency(spark, stored, monkeypatch):
+    """A Cypher write keeps the stored adjacency, and after every write
+    shape the session graph's adjacency reads (``named_adjacency``,
+    ``sym_edges``) equal their lazy derivation from its own persons and
+    edges. The stored edges stay unique, the house subgraph matches the
+    stored edges (a canonical self-loop once), and the ego read sees the
+    new neighbors. No statement plans a Python RDD: ``createDataFrame``
+    is never called. The incremental merge still returns no adjacency."""
+    pairs = (
+        stored.edges.filter(F.col("type") == "FRIEND_OF")
+        .join(stored.persons.select(F.col("id").alias("src"), F.col("name").alias("a")), "src")
+        .join(stored.persons.select(F.col("id").alias("dst"), F.col("name").alias("b")), "dst")
+        .orderBy("a", "b")
+        .first()
+    )
+    houses = {r.name: r.house for r in stored.persons.collect()}
+    pair = "Customer#000000020"
+    other = next(n for n in sorted(houses) if houses[n] != houses[pair])
+    params = {
+        "stored_a": pairs.a, "stored_b": pairs.b, "pair": pair, "other": other,
+    }
+    def refuse(*args, **kwargs):
+        raise AssertionError("a write statement called createDataFrame")
+
+    monkeypatch.setattr(type(spark), "createDataFrame", refuse)
     s = CypherSession(stored)
-    s.run(
-        "MERGE (u:Person {name: $name}) SET u.house = 'NATION_3'",
-        {"name": "Adjacency User"},
-    )
-    s.run(
-        "MATCH (u:Person {name: $name}), (f:Person {name: $friend}) "
-        "MERGE (u)-[:FRIEND_OF]->(f)",
-        {"name": "Adjacency User", "friend": "Customer#000000010"},
-    )
-    assert s.graph.adjacency is None
-    rows = gq.ego_network(s.graph, "Adjacency User").collect()
-    assert [(r.neighbor, r.rel_type) for r in rows] == [
-        ("Customer#000000010", "FRIEND_OF")
+    for q in PARITY_STATEMENTS:
+        s.run(q, {k: v for k, v in params.items() if f"${k}" in q})
+        g = s.graph
+        assert g.adjacency is not None, q
+        _same_multiset(g.named_adjacency(), _lazy(g).named_adjacency())
+        _same_multiset(g.sym_edges(), _lazy(g).sym_edges())
+        assert g.edges.count() == g.edges.distinct().count(), q
+    hs = ["NATION_1", "NATION_3", "NATION_9"]
+    got = sorted(tuple(r) for r in gq.house_subgraph(g, hs).collect())
+    assert got == _house_subgraph_from_edges(g, hs)
+    assert got.count(("Parity User", "Parity User", "FRIEND_OF")) == 1
+    rows = gq.ego_network(g, "Parity User").collect()
+    assert sorted((r.neighbor, r.rel_type) for r in rows) == [
+        ("Customer#000000010", "FRIEND_OF"),
+        ("Customer#000000011", "FRIEND_OF"),
+        ("Customer#000000012", "ENEMY_OF"),
+        ("Parity User", "FRIEND_OF"),
     ]
     batch = stored.persons.limit(1).withColumn("name", F.lit("Adjacency Batch"))
     assert store.merge_increment(spark, stored, batch).adjacency is None
+
+
+MERGE_USER = "MERGE (u:Person {name: $name}) SET u.house = $house, u.isUser = true"
+MERGE_FRIENDS = (
+    "MATCH (u:Person {name: $name}), (f:Person) WHERE f.name IN $friends "
+    "MERGE (u)-[:FRIEND_OF]->(f)"
+)
+MERGE_ENEMIES = (
+    "MATCH (u:Person {name: $name}), (e:Person) WHERE e.name IN $enemies "
+    "MERGE (u)-[:ENEMY_OF]->(e)"
+)
+
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"write-cost-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _writeback(s: CypherSession, user: str, friends, enemies) -> list:
+    """The app's writeback statements for ``user``, as thunks."""
+    return [
+        lambda: s.run(MERGE_USER, {"name": user, "house": "NATION_3"}),
+        lambda: s.run(MERGE_FRIENDS, {"name": user, "friends": friends}),
+        lambda: s.run(MERGE_ENEMIES, {"name": user, "enemies": enemies}),
+    ]
+
+
+def test_write_statement_job_budget(spark, stored):
+    """Each statement of the app's writeback cycle runs a fixed, small
+    number of jobs: a node MERGE at most 2 (the name lookup and the
+    commit), an edge MERGE at most 3 (the MATCH's broadcast, its collect
+    and the commit). The reads after it run as many jobs as on the
+    snapshot: the ego read is one scan, and the Cypher winder's plan
+    only gains the delta's branches."""
+    names = sorted(r.name for r in stored.persons.select("name").collect())
+    s = CypherSession(stored)
+    # a compiled-plan cache hit would reuse a broadcast: compare
+    # freshly compiled plans on both sides
+    snapshot = GraphModel(
+        persons=stored.persons, houses=stored.houses, edges=stored.edges,
+        adjacency=stored.adjacency,
+    )
+    for cycle in range(2):
+        user = f"Budget User {cycle}"
+        friends = names[20 + 3 * cycle: 23 + 3 * cycle]
+        node, fr, en = [_jobs(spark, w) for w in _writeback(s, user, friends, names[40:41])]
+        assert node <= 2 and fr <= 3 and en <= 3, (node, fr, en)
+        assert _jobs(spark, lambda: gq.ego_network(s.graph, user).collect()) == 1
+        read = _jobs(
+            spark,
+            lambda: s.run(entrymod._CYPHER_WINDER, {"friends": friends}).collect(),
+        )
+        snap = _jobs(
+            spark,
+            lambda: CypherSession(snapshot)
+            .run(entrymod._CYPHER_WINDER, {"friends": friends})
+            .collect(),
+        )
+        assert read == snap, (read, snap)
+
+
+def _stored(spark) -> dict[int, int]:
+    """Block-store bytes per stored RDD id."""
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return {i.id(): i.memSize() + i.diskSize() for i in infos}
+
+
+def test_write_session_block_store_bounded(spark, sf_dir, tmp_path, monkeypatch):
+    """What a statement adds to the block store depends on its own rows
+    only: the same statements add the same bytes at sf0.001 and sf0.01,
+    and a 10-statement session holds only its current delta frames, the
+    superseded ones released."""
+    import os
+
+    big = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
+    if not os.path.isdir(big):
+        pytest.skip("no sf0.01 test data")
+    monkeypatch.setattr(store, "CACHE_ROOT", str(tmp_path))
+    graphs = [store.load_graph(spark, d) for d in (sf_dir, big)]
+    # friends whose house and image (the values an edge row carries)
+    # are the same at both scales
+    props = [
+        {r.name: (r.house, r.image) for r in g.persons.collect()} for g in graphs
+    ]
+    same = sorted(n for n, v in props[0].items() if props[1].get(n) == v)
+    added = []
+    for g in graphs:
+        s = CypherSession(g)
+        steps = []
+        for cycle in range(4):
+            steps += _writeback(
+                s, f"Bytes User {cycle}", same[3 * cycle: 3 * cycle + 3],
+                same[20 + cycle: 21 + cycle],
+            )
+        # only the RDDs the session stores count: other frames of the
+        # test session may be released meanwhile
+        mine: set[int] = set()
+        per = []
+        for w in steps[:10]:
+            before = _stored(spark)
+            w()
+            after = _stored(spark)
+            mine |= after.keys() - before.keys()
+            per.append(
+                sum(after.get(i, 0) - before.get(i, 0) for i in mine)
+            )
+        held = [i for i in mine if i in after]
+        assert len(held) <= 3, held  # persons, houses, adjacency
+        assert sum(after[i] for i in held) < 64 * 1024
+        added.append(per)
+    assert added[0] == added[1]
+
+
+def test_written_edges_plan_is_snapshot_union_checkpoint(stored):
+    """A written model's edges are the snapshot scan plus one
+    checkpoint: no join, aggregate or exchange grows with the session."""
+    s = CypherSession(stored)
+    for w in _writeback(
+        s, "Plan User", ["Customer#000000010", "Customer#000000011"],
+        ["Customer#000000012"],
+    ):
+        w()
+    plan = s.graph.edges._jdf.queryExecution().executedPlan().toString()
+    assert "Union" in plan
+    assert plan.count("FileScan parquet") == 1 and "/edges" in plan
+    assert plan.count("Scan ExistingRDD") == 1
+    for op in ("Join", "Aggregate", "Exchange"):
+        assert op not in plan, op
 
 
 def test_entry_contract(spark):
