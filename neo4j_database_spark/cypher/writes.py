@@ -59,7 +59,6 @@ from neo4j_database_spark.cypher import parser as P
 from neo4j_database_spark.cypher.compiler import Compiler
 from neo4j_database_spark.graph.model import (
     ADJACENCY_COLS,
-    EDGE_FLAG,
     Delta,
     GraphModel,
     edge_key,
@@ -70,11 +69,11 @@ from neo4j_database_spark.graph.model import (
 
 _PROP_MAP = {"isUser": "is_user"}
 
-# The person properties the adjacency rows carry (name, house, image):
-# a change to one of them re-derives the rows that name the person.
-_ADJACENCY_PROPS = tuple(
-    dict.fromkeys(c.split("_", 1)[1] for c in ADJACENCY_COLS[3:])
-)
+# The adjacency columns after the ids, type and flag carry person
+# properties (name, house, image): a change to one of them re-derives
+# the rows that name the person.
+_PAYLOAD = ADJACENCY_COLS[4:]
+_ADJACENCY_PROPS = tuple(dict.fromkeys(c.split("_", 1)[1] for c in _PAYLOAD))
 
 # Endpoint fields an edge MERGE collects from its MATCH, in the order
 # of its pair rows (see _PAIR).
@@ -419,8 +418,8 @@ def _relabelled(d: Delta, props: DataFrame, ids: set[int]) -> DataFrame | None:
     name, house and image in ``props``: every adjacency row naming one
     of them, from the delta or from the snapshot (none of the snapshot's
     rows naming an already replaced person, which are in the delta),
-    relabelled. None if nothing changes or the snapshot has no
-    adjacency to keep."""
+    relabelled, each keeping its ``is_edge``. None if nothing changes
+    or the snapshot has no adjacency to keep."""
     if not ids or d.snapshot.adjacency is None:
         return None
     ids_l = sorted(ids)
@@ -429,13 +428,11 @@ def _relabelled(d: Delta, props: DataFrame, ids: set[int]) -> DataFrame | None:
     if d.replaced:
         gone = sorted(d.replaced)
         rows = rows.filter(~F.col("src").isin(gone) & ~F.col("dst").isin(gone))
-    rows = rows.select(*ADJACENCY_COLS, F.lit(False).alias(EDGE_FLAG))
     if d.adjacency is not None:
         rows = rows.unionByName(d.adjacency.filter(names))
-    payload = ADJACENCY_COLS[3:]
     p = with_person_props(props)
     for side in ("src", "dst"):
-        mine = [c for c in payload if c.startswith(side + "_")]
+        mine = [c for c in _PAYLOAD if c.startswith(side + "_")]
         rows = rows.join(
             F.broadcast(
                 p.select(
@@ -448,14 +445,13 @@ def _relabelled(d: Delta, props: DataFrame, ids: set[int]) -> DataFrame | None:
             "left",
         )
     out = rows.select(
-        *ADJACENCY_COLS[:3],
+        *ADJACENCY_COLS[:4],
         *[
             F.when(F.col(f"__{c[:3]}"), F.col(f"__{c}"))
             .otherwise(F.col(c))
             .alias(c)
-            for c in payload
+            for c in _PAYLOAD
         ],
-        EDGE_FLAG,
     )
     if d.adjacency is not None:
         out = d.adjacency.filter(~names).unionByName(out)
@@ -663,8 +659,8 @@ def _added_adjacency(d: Delta, pairs: dict[tuple, tuple]) -> DataFrame:
         by_type.setdefault(rtype, []).append(row)
     parts = [
         symmetrize(
-            orient_edges(_literal_rows(spark, _PAIR, rows), rtype), EDGE_FLAG
-        ).select(*ADJACENCY_COLS, EDGE_FLAG)
+            orient_edges(_literal_rows(spark, _PAIR, rows), rtype)
+        ).select(*ADJACENCY_COLS)
         for rtype, rows in sorted(by_type.items())
     ]
     if d.adjacency is not None:

@@ -141,34 +141,24 @@ class WinderEngine:
 
     # -- GET /graph/ego/<name> (app.py:247-285) --
     def ego_graph(self, name: str, limit: int = 500) -> dict[str, Any]:
-        ego = gq.ego_network(self.graph, name, limit)
-        persons = self.graph.persons
-        ids = persons.select(
-            "name",
-            F.col("id").alias("nid"),
-            F.col("house").alias("nhouse"),
-        )
-        nodes = (
-            ego.select(F.col("person").alias("name"))
-            .union(ego.select(F.col("neighbor").alias("name")))
-            .distinct()
-            .join(ids, "name")
-            .select(
-                F.col("nid").alias("id"),
-                F.col("name").alias("label"),
+        """The ego network's rows, as nodes and edges by person id: the
+        adjacency rows carry both endpoints' ids and houses."""
+        ego = gq.ego_adjacency(self.graph, name, limit)
+        nodes = [
+            ego.select(
+                F.col(side).alias("id"),
+                F.col(f"{side}_name").alias("label"),
                 F.lit("person").alias("group"),
-                F.col("nhouse").alias("house"),
+                F.col(f"{side}_house").alias("house"),
             )
+            for side in ("src", "dst")
+        ]
+        edges = ego.select(
+            F.col("src").alias("source"),
+            F.col("dst").alias("target"),
+            F.col("type").alias("label"),
         )
-        edges = (
-            ego.join(ids.withColumnsRenamed({"name": "person"}), "person")
-            .withColumnsRenamed({"nid": "source"})
-            .drop("nhouse")
-            .join(ids.withColumnsRenamed({"name": "neighbor"}), "neighbor")
-            .withColumnsRenamed({"nid": "target"})
-            .select("source", "target", F.col("rel_type").alias("label"))
-        )
-        return cytoscape_elements(nodes, edges)
+        return cytoscape_elements(nodes[0].union(nodes[1]), edges)
 
     # -- GET /graph/houses?houses= (app.py:366-434) --
     def house_graph(
@@ -179,25 +169,19 @@ class WinderEngine:
         this, so the UI's "House Connection" filter and hub rendering
         work). House node ids are the house NAME — the reference's
         ``h.get("id", h["name"])`` — which cannot collide with numeric
-        person ids."""
-        sub = gq.house_subgraph(self.graph, houses, limit)
+        person ids. The subgraph's adjacency rows carry the person
+        ids."""
         nodes = gq.house_nodes(self.graph, houses).withColumnsRenamed(
             {"node_id": "id", "grp": "group"}
         )
-        members = self.graph.persons.filter(F.col("house").isin(list(houses)))
-        ids = members.select("name", F.col("id").alias("nid"))
-        pp_edges = (
-            sub.join(ids.withColumnsRenamed({"name": "src_name"}), "src_name")
-            .withColumnsRenamed({"nid": "source"})
-            .join(ids.withColumnsRenamed({"name": "dst_name"}), "dst_name")
-            .withColumnsRenamed({"nid": "target"})
-            .select(
-                F.col("source").cast("string").alias("source"),
-                F.col("target").cast("string").alias("target"),
-                F.col("rel_type").alias("label"),
-            )
+        pp_edges = gq.house_subgraph_adjacency(self.graph, houses, limit).select(
+            F.col("src").cast("string").alias("source"),
+            F.col("dst").cast("string").alias("target"),
+            F.col("type").alias("label"),
         )
-        belongs_edges = members.select(
+        belongs_edges = self.graph.persons.filter(
+            F.col("house").isin(list(houses))
+        ).select(
             F.col("id").cast("string").alias("source"),
             F.col("house").alias("target"),
             F.lit("BELONGS_TO").alias("label"),

@@ -36,12 +36,16 @@ Scale notes (100 TB design):
   the filter brings it under the broadcast threshold.
 - Undirected reads go through :meth:`GraphModel.sym_edges` (ids and
   type) or :meth:`GraphModel.named_adjacency` (plus endpoint names and
-  houses and the other endpoint's image). A graph loaded from the store
+  houses, the other endpoint's image, and ``is_edge``, true on the
+  stored orientation of each edge). A graph loaded from the store
   serves both from the stored ``adjacency`` table, written once at
   build time, and a Cypher write session keeps it (:class:`Delta`);
   any other graph derives them per query from ``edges`` and
   ``persons``. ``edges`` stays canonical (1×) and is the table every
-  write path changes.
+  write path changes. Only :func:`orient_edges` picks an orientation
+  and only :func:`symmetrize` flags it, so a read that needs the stored
+  edges filters ``is_edge`` instead of re-deriving the name order,
+  which a renamed person no longer follows.
 
 This module owns the storage contract above: the four rule functions
 serve both the full build (``build_edges(persons)``) and the incremental
@@ -344,12 +348,13 @@ def edge_key(src: int, dst: int, etype: str) -> tuple:
 
 
 # Columns of the named undirected adjacency, in this order: one row per
-# reading direction of a stored edge, with both endpoint names and
-# houses and the other endpoint's image (the ego, Winder and house
-# subgraph responses).
+# reading direction of a stored edge, ``is_edge`` true on the row in
+# the stored orientation, then both endpoint names and houses and the
+# other endpoint's image (the ego, Winder and house subgraph
+# responses).
 ADJACENCY_COLS = (
-    "src", "dst", "type", "src_name", "dst_name", "src_house", "dst_house",
-    "dst_image",
+    "src", "dst", "type", "is_edge", "src_name", "dst_name", "src_house",
+    "dst_house", "dst_image",
 )
 
 
@@ -357,17 +362,16 @@ def _of_types(df: DataFrame, types: tuple[str, ...] | None) -> DataFrame:
     return df if types is None else df.filter(F.col("type").isin(list(types)))
 
 
-def symmetrize(edges: DataFrame, flag: str | None = None) -> DataFrame:
-    """Undirected view of stored edge rows: every row plus the reverse
-    (:func:`_reversed`, payload pairs swapped too) of each canonical-type
-    row that is not a self-loop.
+def symmetrize(edges: DataFrame) -> DataFrame:
+    """Undirected view of stored edge rows: every row, ``is_edge`` true,
+    plus the reverse (:func:`_reversed`, payload pairs swapped too) of
+    each canonical-type row that is not a self-loop, ``is_edge`` false.
 
     Reproduces Cypher's ``-[:T]-`` over one-way storage
     (SURVEY.md §1.3). Bidirectional types are already stored both ways,
     so only canonical types get reversed — no double counting — and a
     self-loop reads the same both ways, so it is seen once, as Neo4j
-    expands a loop once. ``flag``, if given, names a boolean column that
-    is true on the stored rows and false on the reversed ones.
+    expands a loop once.
     """
     rev = _reversed(
         edges.filter(
@@ -375,16 +379,15 @@ def symmetrize(edges: DataFrame, flag: str | None = None) -> DataFrame:
             & (F.col("src") != F.col("dst"))
         )
     )
-    if flag is not None:
-        edges = edges.withColumn(flag, F.lit(True))
-        rev = rev.withColumn(flag, F.lit(False))
-    return edges.unionByName(rev)
+    return edges.withColumn("is_edge", F.lit(True)).unionByName(
+        rev.withColumn("is_edge", F.lit(False))
+    )
 
 
 def name_adjacency(
     sym: DataFrame, persons: DataFrame, seeds: Column | None = None
 ) -> DataFrame:
-    """:data:`ADJACENCY_COLS` rows for undirected ``(src, dst, type)`` rows.
+    """:data:`ADJACENCY_COLS` rows for :func:`symmetrize` rows.
 
     Both endpoints are inner-joined on from ``persons``: every stored
     edge joins two persons, so no row is dropped. ``seeds``, a predicate
@@ -435,8 +438,8 @@ class GraphModel:
     def named_adjacency(
         self, types: tuple[str, ...] | None = None, seeds: Column | None = None
     ) -> DataFrame:
-        """Undirected edges of ``types`` (all if None) with endpoint names
-        and houses and the other endpoint's image
+        """Undirected edges of ``types`` (all if None) with ``is_edge``,
+        endpoint names and houses and the other endpoint's image
         (:data:`ADJACENCY_COLS`), restricted to the rows whose
         ``src_name`` satisfies ``seeds`` if given.
 
@@ -454,18 +457,15 @@ class GraphModel:
     def sym_edges(self, types: tuple[str, ...] | None = None) -> DataFrame:
         """Undirected ``(src, dst, type)`` edges of ``types`` (all if None).
 
-        The ``(src, dst, type)`` projection of :meth:`named_adjacency`
-        when the graph has an adjacency; otherwise :func:`symmetrize` of
-        ``edges``, which needs no ``persons`` join.
+        The ``(src, dst, type)`` projection of the adjacency when the
+        graph has one; otherwise of :func:`symmetrize` of ``edges``,
+        which needs no ``persons`` join.
         """
-        if self.adjacency is not None:
-            return self.named_adjacency(types).select("src", "dst", "type")
-        return symmetrize(_of_types(self.edges, types))
-
-
-# Flag column of a delta's adjacency rows: true on the rows that are
-# also the delta's stored edge rows (see :class:`Delta`).
-EDGE_FLAG = "is_edge"
+        if self.adjacency is None:
+            sym = symmetrize(_of_types(self.edges, types))
+        else:
+            sym = _of_types(self.adjacency, types)
+        return sym.select("src", "dst", "type")
 
 
 @dataclass(frozen=True)
@@ -479,18 +479,22 @@ class Delta:
       whose snapshot rows the model filters out, and ``created`` the
       ids of the persons the session created.
     - ``houses``: the house rows the session created.
-    - ``adjacency``: :data:`ADJACENCY_COLS` rows plus :data:`EDGE_FLAG`.
-      They are both reading directions of every edge the session added,
-      the flag true on the stored orientation (those rows are the
-      added edges), and every snapshot adjacency row that names a
-      replaced person, relabelled with its new properties (flag false).
+    - ``adjacency``: :data:`ADJACENCY_COLS` rows. They are both reading
+      directions of every edge the session added and, if the snapshot
+      has an adjacency, every snapshot adjacency row that names a
+      replaced person, relabelled with its new properties. Each keeps
+      its ``is_edge``, so the flagged rows are the delta's edges: the
+      added ones and the snapshot edges of the replaced persons.
       ``edges`` holds the :func:`edge_key` of every pair the session
       merged, stored in the snapshot or added here.
 
-    So each frame of the model is one snapshot scan (filtered on a
-    literal id list once a snapshot person changed) and one checkpoint:
-    neither the commit nor a read grows with the graph or with the
-    number of statements.
+    Each frame of the model follows one rule: the snapshot's rows that
+    name no replaced person, plus the delta's rows (for ``edges``, its
+    flagged adjacency rows). Without a snapshot adjacency nothing is
+    relabelled, so the snapshot's edges are kept whole. So each frame
+    is one snapshot scan (filtered on a literal id list once a snapshot
+    person changed) and one checkpoint: neither the commit nor a read
+    grows with the graph or with the number of statements.
     """
 
     snapshot: GraphModel
@@ -510,9 +514,8 @@ class Delta:
             gone = list(self.replaced)
             persons = persons.filter(~F.col("id").isin(gone))
             if adjacency is not None:
-                adjacency = adjacency.filter(
-                    ~F.col("src").isin(gone) & ~F.col("dst").isin(gone)
-                )
+                keep = ~F.col("src").isin(gone) & ~F.col("dst").isin(gone)
+                edges, adjacency = edges.filter(keep), adjacency.filter(keep)
         if self.persons is not None:
             persons = persons.unionByName(
                 self.persons, allowMissingColumns=True
@@ -521,12 +524,10 @@ class Delta:
             houses = houses.unionByName(self.houses)
         if self.adjacency is not None:
             edges = edges.unionByName(
-                self.adjacency.filter(F.col(EDGE_FLAG)).select(*edges.columns)
+                self.adjacency.filter("is_edge").select(*edges.columns)
             )
             if adjacency is not None:
-                adjacency = adjacency.unionByName(
-                    self.adjacency.select(*ADJACENCY_COLS)
-                )
+                adjacency = adjacency.unionByName(self.adjacency)
         return GraphModel(
             persons=persons,
             houses=houses,

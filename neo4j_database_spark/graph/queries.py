@@ -7,9 +7,11 @@ order replaces Neo4j's internal ``id()`` — SURVEY.md §2 F4) so every
 query is DuckDB-oracle-checkable.
 
 Physical notes: the ego and Winder reads filter the named adjacency on
-the seed names, and the house subgraph on both endpoints' houses, which
-on a stored graph is one scan with no join; other point lookups
-(``name = $x``) become one-row broadcast sides; top-k becomes
+the seed names, and the house subgraph on both endpoints' houses; the
+house subgraph, house adjacency and friend counts read the stored
+edges as its ``is_edge`` rows, which carry both endpoints' houses. On
+a stored graph each of these is one scan with no join. Other point
+lookups (``name = $x``) become one-row broadcast sides; top-k becomes
 ``TakeOrderedAndProject`` (no global sort); the house dim is always
 broadcast.
 """
@@ -21,11 +23,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from neo4j_database_spark.graph.model import (
-    CANONICAL_TYPES,
-    GraphModel,
-    with_person_props,
-)
+from neo4j_database_spark.graph.model import GraphModel, with_person_props
 
 # Edge types that carry "social" signal for link prediction (the reference's
 # winder expands FRIEND_OF; our graph adds family/romance so common-neighbor
@@ -64,6 +62,16 @@ def search(g: GraphModel, q: str, limit: int = 10) -> DataFrame:
     )
 
 
+def ego_adjacency(g: GraphModel, name: str, limit: int) -> DataFrame:
+    """The named-adjacency rows of :func:`ego_network`, in its order and
+    limit (``engine.ego_graph`` reads their ids and houses)."""
+    return (
+        g.named_adjacency(seeds=F.col("src_name") == name)
+        .orderBy("dst_name", "type")
+        .limit(limit)
+    )
+
+
 def ego_network(g: GraphModel, name: str, limit: int = 500) -> DataFrame:
     """1-hop undirected any-type expansion. Reference: app.py:257-261 (J1).
 
@@ -71,15 +79,10 @@ def ego_network(g: GraphModel, name: str, limit: int = 500) -> DataFrame:
     stored graph that is a single pruned scan with no join, and the
     ordered limit is a TakeOrderedAndProject.
     """
-    return (
-        g.named_adjacency(seeds=F.col("src_name") == name)
-        .select(
-            F.col("src_name").alias("person"),
-            F.col("dst_name").alias("neighbor"),
-            F.col("type").alias("rel_type"),
-        )
-        .orderBy("neighbor", "rel_type")
-        .limit(limit)
+    return ego_adjacency(g, name, limit).select(
+        F.col("src_name").alias("person"),
+        F.col("dst_name").alias("neighbor"),
+        F.col("type").alias("rel_type"),
     )
 
 
@@ -145,32 +148,36 @@ def housemates(g: GraphModel, name: str, limit: int = 100) -> DataFrame:
     )
 
 
+def house_subgraph_adjacency(
+    g: GraphModel, houses: Sequence[str], limit: int
+) -> DataFrame:
+    """The named-adjacency rows of :func:`house_subgraph`, in its order
+    and limit (``engine.house_graph`` reads their ids)."""
+    hs = list(houses)
+    return (
+        g.named_adjacency()
+        .filter(
+            F.col("is_edge")
+            & F.col("src_house").isin(hs)
+            & F.col("dst_house").isin(hs)
+        )
+        .orderBy("type", "src_name", "dst_name")
+        .limit(limit)
+    )
+
+
 def house_subgraph(
     g: GraphModel, houses: Sequence[str], limit: int = 5000
 ) -> DataFrame:
     """Edges whose BOTH endpoints live in the requested houses.
     Reference: app.py:376-416 (P5/J4/J9, ``LIMIT 5000``).
 
-    One filter of the named adjacency, which carries both endpoints'
-    houses: a stored edge is the adjacency row in its stored
-    orientation, so a canonical-type edge is its row with
-    ``src_name <= dst_name`` (equal only on a self-loop, which has one
-    row) and every other row is a stored row. On a stored graph that is
-    one scan with no join."""
-    hs = list(houses)
-    return (
-        g.named_adjacency()
-        .filter(
-            F.col("src_house").isin(hs)
-            & F.col("dst_house").isin(hs)
-            & (
-                ~F.col("type").isin(list(CANONICAL_TYPES))
-                | (F.col("src_name") <= F.col("dst_name"))
-            )
-        )
-        .select("src_name", "dst_name", F.col("type").alias("rel_type"))
-        .orderBy("rel_type", "src_name", "dst_name")
-        .limit(limit)
+    One filter of the named adjacency: its ``is_edge`` rows are the
+    stored edges in their stored orientation, and each carries both
+    endpoints' houses. On a stored graph that is one scan with no
+    join."""
+    return house_subgraph_adjacency(g, houses, limit).select(
+        "src_name", "dst_name", F.col("type").alias("rel_type")
     )
 
 
@@ -267,12 +274,13 @@ def rule_edge_counts(g: GraphModel) -> DataFrame:
 
 def friend_counts_by_house(g: GraphModel) -> DataFrame:
     """Per-house FRIEND_OF edge count — C(n_house, 2) per house; the skew
-    profile of the quadratic self-join J6 (get_insert.py:132-138)."""
-    src_house = g.persons.select(F.col("id").alias("src"), "house")
+    profile of the quadratic self-join J6 (get_insert.py:132-138).
+    Counted on the source's house of the stored FRIEND_OF rows of the
+    adjacency, which carry it: one scan, no join, on a stored graph."""
     return (
-        g.edges.filter(F.col("type") == "FRIEND_OF")
-        .join(src_house, "src")
-        .groupBy("house")
+        g.named_adjacency(("FRIEND_OF",))
+        .filter("is_edge")
+        .groupBy(F.col("src_house").alias("house"))
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("house")
     )
@@ -354,16 +362,15 @@ def house_adjacency(g: GraphModel) -> DataFrame:
     house-level adjacency — edge counts between house pairs per
     relationship type (the supergraph of the quotient partition).
 
-    Two broadcast joins (the house of each endpoint via the person dim)
-    and one aggregate whose output is |houses|² × types at most —
-    coarsening is how interactive exploration works at 100 TB: the
-    supergraph is tiny no matter how big the base graph is.
+    One aggregate of the stored edges, the adjacency's ``is_edge`` rows,
+    which carry both endpoints' houses (one scan, no join, on a stored
+    graph). Its output is |houses|² × types at most — coarsening is how
+    interactive exploration works at 100 TB: the supergraph is tiny no
+    matter how big the base graph is.
     """
-    src_h = g.persons.select(F.col("id").alias("src"), F.col("house").alias("src_house"))
-    dst_h = g.persons.select(F.col("id").alias("dst"), F.col("house").alias("dst_house"))
     return (
-        g.edges.join(src_h, "src")
-        .join(dst_h, "dst")
+        g.named_adjacency()
+        .filter("is_edge")
         .groupBy("src_house", "dst_house", "type")
         .agg(F.count(F.lit(1)).alias("n_edges"))
         .orderBy("src_house", "dst_house", "type")

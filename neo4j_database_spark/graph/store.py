@@ -15,14 +15,16 @@ Layout & scale design:
   parquet min/max row-group stats turn point expansions (ego of one
   person) into a near-point read. At 100 TB this becomes bucketing on
   ``src`` so 1-hop expansion is a co-located join.
-- ``adjacency`` is the undirected serving table (v4): every stored edge
-  plus the reverse of each canonical-type row, with both endpoint names
-  and houses and the other endpoint's image (``model.ADJACENCY_COLS``).
-  It is also partitioned by ``type``, and sorted by ``src_name`` within
-  each file, so the name filter of an ego or Winder read prunes row
-  groups, and neither those reads nor the house subgraph need a
-  ``persons`` join. A Cypher write session keeps it (``model.Delta``). Both tables are written
-  from one materialization of the rule joins.
+- ``adjacency`` is the undirected serving table (v5): every stored edge
+  (``is_edge`` true) plus the reverse of each canonical-type row
+  (``is_edge`` false), with both endpoint names and houses and the
+  other endpoint's image (``model.ADJACENCY_COLS``). It is also
+  partitioned by ``type``, and sorted by ``src_name`` within each
+  file, so the name filter of an ego or Winder read prunes row groups.
+  Neither those reads nor the house subgraph, house adjacency and
+  friend counts need a ``persons`` join: the last three read the
+  flagged rows. A Cypher write session keeps it (``model.Delta``).
+  Both tables are written from one materialization of the rule joins.
 - Both tables hash-partition on ``src`` to the cluster width, so each
   task writes one sorted file per type, and the writer rolls a file
   over at ``MAX_FILE_ROWS`` rows: file sizes follow each table's own
@@ -54,8 +56,8 @@ CACHE_ROOT = os.environ.get(
 
 # Bump when the materialized schema changes so stale caches self-invalidate
 # (v2: persons gained species/gender/alive/image/is_user; v3: the
-# adjacency table; v4: the adjacency's src_house).
-STORE_VERSION = 4
+# adjacency table; v4: the adjacency's src_house; v5: its is_edge).
+STORE_VERSION = 5
 
 
 def _store_dir(sf_dir: str) -> str:

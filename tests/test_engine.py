@@ -208,3 +208,65 @@ def test_predict_survival_endpoint(engine):
         r["c"] for r in train.groupBy("label").agg(F.count("*").alias("c")).collect()
     ) / n
     assert acc >= majority - 1e-9
+
+
+def _elements(out) -> tuple[set, set]:
+    """The Cytoscape node and edge tuples of a response, each unique."""
+    els = out["elements"]
+    nodes = [
+        tuple(n["data"][k] for k in ("id", "label", "group", "house"))
+        for n in els["nodes"]
+    ]
+    edges = [
+        tuple(e["data"][k] for k in ("source", "target", "label"))
+        for e in els["edges"]
+    ]
+    assert len(set(nodes)) == len(nodes) and len(set(edges)) == len(edges)
+    return set(nodes), set(edges)
+
+
+def _assert_exact(eng: WinderEngine, name: str, houses: list[str]) -> None:
+    """``ego_graph(name)`` and ``house_graph(houses)`` equal a reference
+    built from the graph's stored edges joined with its persons."""
+    g = eng.graph
+    persons = {
+        r.id: (r.name, r.house)
+        for r in g.persons.select("id", "name", "house").collect()
+    }
+    edges = [tuple(r) for r in g.edges.select("src", "dst", "type").collect()]
+
+    def node(i):
+        return (str(i), persons[i][0], "person", persons[i][1])
+
+    me = next(i for i, (n, _) in persons.items() if n == name)
+    ego_edges = {
+        (str(me), str(d if s == me else s), t) for s, d, t in edges if me in (s, d)
+    }
+    ego_nodes = {node(int(x)) for e in ego_edges for x in e[:2]}
+    assert ego_edges
+    assert _elements(eng.ego_graph(name)) == (ego_nodes, ego_edges)
+
+    members = {i for i, (_, h) in persons.items() if h in houses}
+    nodes = {node(i) for i in members} | {(h, h, "house", None) for h in houses}
+    house_edges = {
+        (str(s), str(d), t) for s, d, t in edges if s in members and d in members
+    } | {(str(i), persons[i][1], "BELONGS_TO") for i in members}
+    assert _elements(eng.house_graph(houses)) == (nodes, house_edges)
+
+
+def test_ego_and_house_graph_exact(spark, sf_dir, engine):
+    """The Cytoscape responses take ids and houses from the adjacency
+    rows; they equal the stored edges joined with persons, on the
+    stored graph and after a predict_house writeback."""
+    _assert_exact(
+        WinderEngine(spark, sf_dir), "Customer#000000042", ["NATION_3", "NATION_7"]
+    )
+    friends = engine.housemates("Customer#000000042")[:2]
+    out = engine.predict_house(
+        "Exact Student", friends=friends, enemies=["Customer#000000001"],
+        write_back=True,
+    )
+    home = engine.graph.persons.filter("name = 'Customer#000000042'").first().house
+    houses = sorted({out["predicted_house"], home})
+    _assert_exact(engine, "Exact Student", houses)
+    _assert_exact(engine, friends[0], houses)

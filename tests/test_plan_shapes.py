@@ -49,12 +49,23 @@ def test_winder_plan_broadcasts_and_topk(g):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_house_subgraph_one_adjacency_scan(g):
-    """Both endpoints' houses ride on the adjacency row: one scan and
-    a filter, no join with persons."""
-    plan = plan_of(gq.house_subgraph(g, ["NATION_1", "NATION_4"]))
+@pytest.mark.parametrize(
+    "query, top_k",
+    [
+        (lambda g: gq.house_subgraph(g, ["NATION_1", "NATION_4"]), True),
+        (gq.house_adjacency, False),
+        (gq.friend_counts_by_house, False),
+    ],
+    ids=["house_subgraph", "house_adjacency", "friend_counts_by_house"],
+)
+def test_house_subgraph_one_adjacency_scan(g, query, top_k):
+    """The stored edges are the adjacency's ``is_edge`` rows, and both
+    endpoints' houses ride on each row: one scan and a filter, no join
+    with persons."""
+    plan = plan_of(query(g))
     assert_one_adjacency_scan(plan)
-    assert "TakeOrderedAndProject" in plan
+    if top_k:
+        assert "TakeOrderedAndProject" in plan
 
 
 def test_feature_matrix_partition_pruning(g):

@@ -41,6 +41,14 @@ def _same_multiset(a, b) -> None:
     assert b.exceptAll(a).count() == 0
 
 
+def _flagged_rows_are_edges(g: GraphModel) -> None:
+    """The adjacency's ``is_edge`` rows are exactly the stored edges."""
+    _same_multiset(
+        g.adjacency.filter("is_edge").select("src", "dst", "type"),
+        g.edges.select("src", "dst", "type"),
+    )
+
+
 def test_store_files_roll_over_at_row_cap(spark, sf_dir, tmp_path, monkeypatch):
     """Both tables' writes roll a file over at MAX_FILE_ROWS: with a
     small cap, type partitions split into more files than the default
@@ -82,6 +90,7 @@ def test_store_files_roll_over_at_row_cap(spark, sf_dir, tmp_path, monkeypatch):
 
 def test_stored_adjacency_equals_lazy(stored):
     _same_multiset(stored.named_adjacency(), _lazy(stored).named_adjacency())
+    _flagged_rows_are_edges(stored)
 
 
 @pytest.mark.parametrize(
@@ -136,6 +145,9 @@ PARITY_STATEMENTS = [
     "MERGE (h:House {name: 'X_HOUSE'})",
     "MATCH (p:Person {name: 'Customer#000000012'}), "
     "(h:House {name: 'X_HOUSE'}) MERGE (p)-[:BELONGS_TO]->(h)",
+    # a rename flips the name order of `$renamed`'s stored FRIEND_OF
+    # edges (it had the least name of its house)
+    "MERGE (p:Person {name: $renamed}) SET p.name = 'zzz Renamed'",
 ]
 
 
@@ -156,9 +168,11 @@ def test_writes_keep_exact_adjacency(spark, stored, monkeypatch):
     """A Cypher write keeps the stored adjacency, and after every write
     shape the session graph's adjacency reads (``named_adjacency``,
     ``sym_edges``) equal their lazy derivation from its own persons and
-    edges. The stored edges stay unique, the house subgraph matches the
-    stored edges (a canonical self-loop once), and the ego read sees the
-    new neighbors. No statement plans a Python RDD: ``createDataFrame``
+    edges, and its ``is_edge`` rows are its edges. The stored edges stay
+    unique, the house subgraph matches the stored edges (a canonical
+    self-loop once, a renamed person's edges in their stored
+    orientation, as a directed MATCH reads them), and the ego read sees
+    the new neighbors. No statement plans a Python RDD: ``createDataFrame``
     is never called. The incremental merge still returns no adjacency."""
     pairs = (
         stored.edges.filter(F.col("type") == "FRIEND_OF")
@@ -170,8 +184,10 @@ def test_writes_keep_exact_adjacency(spark, stored, monkeypatch):
     houses = {r.name: r.house for r in stored.persons.collect()}
     pair = "Customer#000000020"
     other = next(n for n in sorted(houses) if houses[n] != houses[pair])
+    renamed = min(n for n in houses if houses[n] == "NATION_1")
     params = {
         "stored_a": pairs.a, "stored_b": pairs.b, "pair": pair, "other": other,
+        "renamed": renamed,
     }
     def refuse(*args, **kwargs):
         raise AssertionError("a write statement called createDataFrame")
@@ -184,11 +200,22 @@ def test_writes_keep_exact_adjacency(spark, stored, monkeypatch):
         assert g.adjacency is not None, q
         _same_multiset(g.named_adjacency(), _lazy(g).named_adjacency())
         _same_multiset(g.sym_edges(), _lazy(g).sym_edges())
+        _flagged_rows_are_edges(g)
         assert g.edges.count() == g.edges.distinct().count(), q
     hs = ["NATION_1", "NATION_3", "NATION_9"]
     got = sorted(tuple(r) for r in gq.house_subgraph(g, hs).collect())
     assert got == _house_subgraph_from_edges(g, hs)
     assert got.count(("Parity User", "Parity User", "FRIEND_OF")) == 1
+    # the renamed person's edges keep their stored orientation, which
+    # the name order no longer gives; a directed MATCH reads the same
+    friends = [(a, b) for a, b, t in got if t == "FRIEND_OF"]
+    assert any(a == "zzz Renamed" and b < a for a, b in friends)
+    directed = s.run(
+        "MATCH (a:Person)-[:FRIEND_OF]->(b:Person) "
+        "WHERE a.house IN $hs AND b.house IN $hs RETURN a.name, b.name",
+        {"hs": hs},
+    ).collect()
+    assert sorted(tuple(r) for r in directed) == friends
     rows = gq.ego_network(g, "Parity User").collect()
     assert sorted((r.neighbor, r.rel_type) for r in rows) == [
         ("Customer#000000010", "FRIEND_OF"),
